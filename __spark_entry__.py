@@ -1097,8 +1097,8 @@ def _q_wand_sharedcache(spark, sf):
     """Cross-process shared posting cache (operators/servecache.py):
     a COLD serving process (fresh handle, empty in-process LRUs) must
     reproduce the exhaustive SQL BM25 (wand_topk's oracle) purely from
-    snapshot-keyed cache entries a SIBLING process wrote — its Spark
-    posting path is poisoned, so any cache miss would crash rather
+    snapshot-keyed cache entries a SIBLING process wrote — its posting
+    file source is poisoned, so any cache miss would crash rather
     than silently fall back.  A vacuum sweep runs between the two so
     the cold read also proves eviction keeps only valid entries."""
     import hashlib as _h
@@ -1114,7 +1114,7 @@ def _q_wand_sharedcache(spark, sf):
     sc.vacuum_cache(root, cache.key, budget_bytes=256 << 20)
     cold = pl.load_index(spark, h.out_dir)
     cold.attach_shared_cache(root)
-    cold.engine.postings = None  # a Spark posting fetch would throw
+    cold.engine.posting_files = None  # a posting fetch would throw
     res = cold.engine.search_local(" ".join(BM25_QUERY), K)
     return spark.createDataFrame(
         [(int(d), round(float(s), 4)) for d, s in res],
@@ -1125,7 +1125,7 @@ def _q_wand_sharedcache(spark, sf):
 def _q_wand_result_cached(spark, sf):
     """Result-cache serving tier (X107, servecache.ResultCache): a warm
     engine answers the flagship query once (filling the snapshot-keyed
-    result entry), then a COLD engine with its Spark posting path AND
+    result entry), then a COLD engine with its posting file source AND
     posting caches all poisoned must reproduce the exhaustive SQL BM25
     purely from the cached top-k — any miss would crash rather than
     silently recompute."""
@@ -1140,7 +1140,7 @@ def _q_wand_result_cached(spark, sf):
     warm.engine.search_local(" ".join(BM25_QUERY), K)
     cold = pl.load_index(spark, h.out_dir)
     cold.attach_result_cache(root)
-    cold.engine.postings = None  # a posting fetch would throw
+    cold.engine.posting_files = None  # a posting fetch would throw
     cold.engine.shared_cache = None
     res = cold.engine.search_local(" ".join(BM25_QUERY), K)
     return spark.createDataFrame(

@@ -603,7 +603,7 @@ def test_admission_plan_warms_the_serving_tier(spark, tmp_path):
     assert set(admitted) == {"alpha", "bravo", "delta"}
 
     h.engine.warm(preload_terms=admitted)
-    h.engine.postings = None  # any posting fetch would now throw
+    h.engine.posting_files = None  # any posting fetch would now throw
     res = h.engine.search_local("alpha bravo", 5)
     assert len(res) == 5 and all(s > 0 for _, s in res)
     # an unadmitted term forces a fetch against the poisoned path

@@ -376,3 +376,27 @@ def test_passage_render_broadcasts_topk(spark):
     assert "BroadcastHashJoin" in plan
     # no sort-merge join anywhere: that would shuffle the chunk text
     assert "SortMergeJoin" not in plan
+
+
+def test_merge_partials_range_partitions_by_term_shard(spark):
+    """Every posting writer merges through merge_partials; range (not
+    hash) partitioning on (term, shard) is what makes each part file one
+    contiguous term range, which the interactive fetch prunes by."""
+    import re
+
+    from tse_spark.operators import postings as po
+
+    partials = spark.createDataFrame(
+        [("tok1", 0, 1, 1, 1.0, 0, b"")],
+        "term string, shard long, df long, cf long, "
+        "max_score double, first_doc long, blocks binary",
+    )
+    out = po.merge_partials(partials, 1.0, 128, 4)
+    plan = _plan(out)
+    out._partials.unpersist()
+    assert re.search(
+        r"Exchange rangepartitioning\(term#\d+ ASC NULLS FIRST, "
+        r"shard#\d+L ASC NULLS FIRST, 4\)",
+        plan,
+    ), plan
+    assert "hashpartitioning" not in plan

@@ -521,7 +521,9 @@ def test_passage_indexed_equals_scan_scorer(spark):
     from tse_spark.operators import textops
 
     rows = []
-    words = ["alpha", "beta", "gamma", "delta", "pad"]
+    # "frameworks" (10 bytes) is outside the 2..8-byte eligibility law:
+    # the position index holds it, but neither scorer may score it
+    words = ["alpha", "beta", "gamma", "delta", "pad", "frameworks"]
     for d in range(30):
         n = 3 + (d * 37) % 150  # spans sub-window to 3-window docs
         toks = [words[(d + i) % len(words)] for i in range(n)]
@@ -531,7 +533,7 @@ def test_passage_indexed_equals_scan_scorer(spark):
     docs = spark.createDataFrame(
         pd.DataFrame(rows, columns=["doc_id", "text"])
     )
-    terms = ["alpha", "gamma"]
+    terms = ["alpha", "gamma", "frameworks"]
     want = textops.passage_bm25_topk(docs, terms, k=25).toPandas()
     shards = pos.build_position_index(docs, 30, num_shards=3)
     pstats = textops.build_passage_stats(docs)

@@ -1,8 +1,8 @@
 """Shared (cross-process) posting cache tier (operators/servecache.py):
 
 - a second engine opened on the same index serves byte-identical
-  results from the shared dir with ZERO Spark jobs (poisoned postings
-  prove it);
+  results from the shared dir with ZERO posting reads (poisoned posting
+  files prove it);
 - commits (appends) change the cache key, so stale entries can never
   be read against the new snapshot;
 - torn / corrupt / colliding entry files read as misses, never as
@@ -41,14 +41,15 @@ def idx(tmp_path_factory, spark):
 
 
 class _Poisoned:
-    """Stands in for the postings DataFrame: any use = test failure."""
+    """Stands in for the posting file source or the term_stats
+    DataFrame: any use = test failure."""
 
     def filter(self, *a, **k):  # pragma: no cover - the assertion
         raise AssertionError(
-            "engine hit Spark despite a warm shared cache"
+            "engine fetched postings despite a warm shared cache"
         )
 
-    select = persist = filter
+    rows = filter
 
 
 def test_second_process_serves_from_shared_cache(spark, idx, tmp_path):
@@ -66,8 +67,8 @@ def test_second_process_serves_from_shared_cache(spark, idx, tmp_path):
     h2 = pl.load_index(spark, out)
     c2 = h2.attach_shared_cache(root)
     assert c2.key == c1.key
-    # poison the Spark path: every lookup must come from the shared dir
-    h2.engine.postings = _Poisoned()
+    # poison the posting files: every lookup must come from the shared dir
+    h2.engine.posting_files = _Poisoned()
     h2.engine.term_stats = _Poisoned()
     for q in QUERIES:
         assert h2.engine.search_local(q, 10) == expected[q]
@@ -181,7 +182,7 @@ def test_result_cache_serves_cold_engine(spark, idx, tmp_path):
 
     cold = pl.load_index(spark, out)
     rc = cold.attach_result_cache(root)
-    cold.engine.postings = _Poisoned()
+    cold.engine.posting_files = _Poisoned()
     cold.engine.shared_cache = None
     got = cold.engine.search_local("web search", 10)
     assert got == expected
@@ -191,7 +192,7 @@ def test_result_cache_serves_cold_engine(spark, idx, tmp_path):
     warm.engine.search_local("web search", 5)
     cold2 = pl.load_index(spark, out)
     cold2.attach_result_cache(root)
-    cold2.engine.postings = _Poisoned()
+    cold2.engine.posting_files = _Poisoned()
     cold2.engine.shared_cache = None
     assert cold2.engine.search_local("web search", 5) == expected[:5]
     with pytest.raises(AssertionError):
@@ -207,7 +208,7 @@ def test_result_cache_negative_and_empty(spark, idx, tmp_path):
     assert warm.engine.search_local("zzzznotaterm", 10) == []
     cold = pl.load_index(spark, out)
     cold.attach_result_cache(root)
-    cold.engine.postings = _Poisoned()
+    cold.engine.posting_files = _Poisoned()
     # negative entry is snapshot-stable: served without postings
     assert cold.engine.search_local("zzzznotaterm", 10) == []
 

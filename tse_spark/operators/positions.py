@@ -1046,12 +1046,20 @@ def passage_tf_positional(
     NOT decided here — the caller joins the passage-stats sidecar,
     which only carries valid windows, exactly like tombstone masking.
     Per-shard work is the query terms' posting mass only (pushed-down
-    term IN on the term-laid-out shard table)."""
+    term IN on the term-laid-out shard table).
+
+    The position index stores every whitespace token, but passages
+    score only 2..8-byte terms (textops.passage_bm25_topk's eligibility
+    law), so a query term outside that range is dropped before the
+    probe and contributes no windows."""
+    from tse_spark import oracle
+
     stride = chunk_tokens - overlap
     if stride <= 0:
         raise ValueError("overlap must be < chunk_tokens")
     n_cand = -(-chunk_tokens // stride)
-    uniq = sorted(set(terms))
+    lo, hi = oracle.MIN_TERM_BYTES, oracle.MAX_TERM_BYTES
+    uniq = sorted(t for t in set(terms) if lo <= len(t.encode("utf-8")) <= hi)
     sub = pos_shards.filter(F.col("term").isin(uniq))
     schema = "term string, doc_id long, start_tok long, tf long"
 

@@ -1,8 +1,8 @@
 """Salted (doc-range-sharded) compressed posting build.
 
-North_rule topology: salted repartition-by-term -> vectorized codec UDF
--> posting shards.  The salt is the *doc-id range shard*
-(``shard = doc_id div shard_range``), which
+North_rule topology: salted range-partition-by-term -> vectorized codec
+UDF -> term-clustered posting files.  The salt is the *doc-id range
+shard* (``shard = doc_id div shard_range``), which
 
 - spreads a hot term ("的" at web scale) across all shards — the skew
   fix called out in SURVEY.md §4;
@@ -63,11 +63,11 @@ def build_posting_shards(
        exchange — the shuffle then moves one row per (term, shard,
        batch) instead of one per (doc, term), cutting shuffle rows by
        ~the average per-partition df;
-    2. **sorted-merge combine**: repartition the partials by
-       (term, shard) (the salt — a hot term's shards spread across the
-       cluster), sort, and a streaming mapInPandas merges each group's
-       partials into the final delta-gap varint blocks with per-block
-       max-score skip metadata.
+    2. **sorted-merge combine**: range-partition the partials by
+       (term, shard) (the salt — a hot term's shards may still split
+       across tasks at a range boundary), sort, and a streaming
+       mapInPandas merges each group's partials into the final
+       delta-gap varint blocks with per-block max-score skip metadata.
 
     mapInPandas (not applyInPandas) throughout: a web-scale vocabulary
     yields millions of tiny groups and applyInPandas pays per-group
@@ -338,14 +338,33 @@ def _make_merge_stream(avgdl: float, block_size: int):
 def merge_partials(
     partials: DataFrame, avgdl: float, block_size: int, num_parts: int
 ) -> DataFrame:
-    """Repartition partial posting runs by (term, shard), sort within
-    partitions, and stream-merge each group into final blocks."""
-    d = partials.repartition(num_parts, "term", "shard").sortWithinPartitions(
-        "term", "shard", "first_doc"
-    )
-    return d.mapInPandas(
+    """Range-partition partial posting runs by (term, shard), sort
+    within partitions, and stream-merge each group into final blocks.
+
+    Range (not hash) partitioning makes every written part file cover
+    ONE contiguous term range, so the parquet footers' term min/max
+    statistics are a term dictionary: the interactive fetch
+    (search.PostingFiles) reads only the row groups whose range covers
+    a query term.  The range sampler is a job over the partials, so
+    they are persisted first — otherwise the map-side encoder runs
+    twice.  Write the result with :func:`write_postings`, which frees
+    them once the write is done."""
+    partials = partials.persist()
+    d = partials.repartitionByRange(
+        num_parts, "term", "shard"
+    ).sortWithinPartitions("term", "shard", "first_doc")
+    out = d.mapInPandas(
         _make_merge_stream(avgdl, block_size), schema=POSTINGS_SCHEMA
     )
+    out._partials = partials
+    return out
+
+
+def write_postings(postings: DataFrame, path: str) -> None:
+    """Write a :func:`merge_partials` result as parquet, then unpersist
+    the partials its range sampler read."""
+    postings.write.mode("overwrite").parquet(path)
+    postings._partials.unpersist()
 
 
 def reencode_shards(

@@ -13,19 +13,30 @@ Topology (replaces reference Query.cpp:59-82's whole-index-in-RAM map):
      in wand.wand_topk_local remains as the reference implementation)
   3. global ORDER BY score DESC, doc_id LIMIT k (TakeOrderedAndProject)
 
-``search_local`` is the low-latency path for interactive serving: the
-filtered shard rows (a few MB for typical queries) are collected once
-and WAND runs in-process — the analog of the reference's CGI lookup,
-without reloading the index per request.
+``search_local`` (and its boolean / expanded twins) is the low-latency
+path for interactive serving, and it starts no Spark job.  Posting
+files are term-clustered (postings.merge_partials range-partitions by
+(term, shard)), so their parquet footers' term min/max act as the term
+dictionary: a cache miss reads, on the driver, only the row groups whose
+range covers a query term (:class:`PostingFiles`), and top-k runs
+in-process over a driver LRU — the analog of the reference's lookup from
+the term dictionary straight into the inverted file, without reloading
+the index per request.
 """
 
 from __future__ import annotations
 
+import bisect
 import math
+import os
+import time
 from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tse_spark import oracle
@@ -79,11 +90,83 @@ def parse_boolean_query(
     return optional, required, excluded, phrases
 
 
+def _any_between(sorted_terms: "list[str]", lo: str, hi: str) -> bool:
+    j = bisect.bisect_left(sorted_terms, lo)
+    return j < len(sorted_terms) and sorted_terms[j] <= hi
+
+
+class PostingFiles:
+    """Driver-side term lookup over an index's posting parquet files:
+    the interactive cold fetch, with no Spark job.
+
+    Posting dirs are written term-clustered (postings.merge_partials
+    range-partitions by (term, shard)), so each row group's footer
+    term min/max is a term-dictionary entry.  The footers are read once,
+    on the first lookup; each lookup then reads only the row groups
+    whose range covers a wanted term.  A row group without statistics
+    is always read, so a dir in the old hash layout (every file spans
+    the whole vocabulary) serves the same rows, only slower."""
+
+    COLUMNS = ["term", "shard", "df", "blocks"]
+
+    def __init__(self, dirs: "list[str]"):
+        self.dirs = list(dirs)
+        # [(path, footer, [(row group, term min, term max)])]
+        self._files: "list[tuple[str, pq.FileMetaData, list]] | None" = None
+
+    def _footers(self) -> list:
+        if self._files is None:
+            files = []
+            for d in self.dirs:
+                for fn in sorted(os.listdir(d)):
+                    if fn.startswith(("_", ".")) or not fn.endswith(".parquet"):
+                        continue
+                    path = os.path.join(d, fn)
+                    md = pq.read_metadata(path)
+                    col = md.schema.names.index("term")
+                    groups = []
+                    for i in range(md.num_row_groups):
+                        rg = md.row_group(i)
+                        if rg.num_rows == 0:
+                            continue
+                        st = rg.column(col).statistics
+                        if st is not None and st.has_min_max:
+                            groups.append((i, st.min, st.max))
+                        else:
+                            groups.append((i, None, None))
+                    files.append((path, md, groups))
+            self._files = files
+        return self._files
+
+    def rows(self, terms: "list[str]") -> "list[tuple[str, int, int, bytes]]":
+        """(term, shard, df, blocks) of every posting row of ``terms``."""
+        want = sorted(set(terms))
+        value_set = pa.array(want, type=pa.string())
+        out = []
+        for path, md, groups in self._footers():
+            hit = [
+                i for i, lo, hi in groups
+                if lo is None or _any_between(want, lo, hi)
+            ]
+            if not hit:
+                continue
+            with pq.ParquetFile(path, metadata=md) as f:
+                t = f.read_row_groups(
+                    hit, columns=self.COLUMNS, use_threads=False
+                )
+            t = t.filter(pc.is_in(t["term"], value_set=value_set))
+            out.extend(
+                zip(*(t[c].to_pylist() for c in self.COLUMNS))
+            )
+        return out
+
+
 class SearchEngine:
     def __init__(
         self,
         spark: SparkSession,
         postings: DataFrame,
+        posting_dirs: "list[str]",
         term_stats: DataFrame,
         n_docs: int,
         avgdl: float,
@@ -92,7 +175,10 @@ class SearchEngine:
         tombstones: "np.ndarray | None" = None,
     ):
         self.spark = spark
+        # the Spark relation serves distributed search(); the files
+        # under posting_dirs serve the interactive cache misses
         self.postings = postings
+        self.posting_files = PostingFiles(posting_dirs)
         self.term_stats = term_stats
         self.n_docs = n_docs
         self.avgdl = avgdl
@@ -115,10 +201,11 @@ class SearchEngine:
         # max-scores were encoded with (see wand.Cursor docstring)
         self.bound_scale = bound_scale
         # term -> (df, merged doc-ascending blocks blob): ONE bounded
-        # LRU for the interactive path, filled lazily by one pruned job
-        # per set of missing terms.  df rides along with the shard rows
-        # (each shard row carries its df), so the stats lookup costs no
-        # extra job.  df = 0 entries are cached negatives (term absent).
+        # LRU for the interactive path, filled lazily by one
+        # footer-pruned file read per set of missing terms.  df rides
+        # along with the shard rows (each shard row carries its df), so
+        # the stats lookup costs no extra read.  df = 0 entries are
+        # cached negatives (term absent).
         self._term_cache: "OrderedDict[str, tuple[int, bytes]]" = OrderedDict()
         # stats-only twin for the distributed path (df without blobs)
         self._df_cache: "OrderedDict[str, int]" = OrderedDict()
@@ -135,7 +222,7 @@ class SearchEngine:
         self.decoded_cache_budget = 512 << 20
         # optional SECOND cache tier shared across serving processes
         # (operators/servecache.py): consulted between the in-process
-        # LRU and the pruned Spark fetch, write-through on fills.  One
+        # LRU and the posting file read, write-through on fills.  One
         # replica's cold miss warms the whole fleet; keyed by the index
         # snapshot so a commit can never serve stale bytes.
         self.shared_cache = None
@@ -157,18 +244,21 @@ class SearchEngine:
             self._tomb_bc = self.spark.sparkContext.broadcast(self._tomb)
         return self._tomb_bc
 
-    def _log_query(self, query: str, k: int, n: int, ms: float) -> None:
+    def _log_query(self, query: str, k: int, n: int, t0: float) -> None:
+        """Append one JSONL line; ``ms`` is the wall time since ``t0``
+        (``time.perf_counter()`` at the call's entry, so it covers
+        analysis, every cache tier and the posting fetch)."""
         if not self.query_log_path:
             return
         import json
-        import time as _t
 
+        ms = (time.perf_counter() - t0) * 1000.0
         with open(self.query_log_path, "a", encoding="utf-8") as f:
             f.write(
                 json.dumps(
                     {
-                        "ts": _t.strftime(
-                            "%Y-%m-%dT%H:%M:%SZ", _t.gmtime()
+                        "ts": time.strftime(
+                            "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
                         ),
                         "query": query,
                         "k": k,
@@ -181,17 +271,20 @@ class SearchEngine:
             )
 
     def warm(self, preload_terms: list[str] | None = None) -> "SearchEngine":
-        """Interactive-serving mode: pin the postings table in cluster
-        memory so a query's pruned fetch hits executor RAM, and
-        optionally preload a hot-term list into the driver LRU.  The
-        reference does the opposite — it reloads the entire index from
-        disk on every CGI request (Query.cpp:59-82).
+        """Pin the postings table in cluster memory, and optionally
+        preload a hot-term list into the driver LRU.  The pinned table
+        now serves only distributed :meth:`search` and its siblings:
+        the interactive ``*_local`` paths read cache misses straight
+        from the posting files (:class:`PostingFiles`), never from
+        executor RAM.  The reference reloads the entire index from disk
+        on every CGI request (Query.cpp:59-82).
 
         Deliberately does NOT collect the full term->df map: at
         10^12-doc scale the vocabulary is 10^8+ terms and a full-vocab
         driver collect is the thing that would not survive — stats ride
-        along with each pruned posting fetch instead (one job per set of
-        cache-missing terms, amortized to zero for hot terms)."""
+        along with each posting fetch instead (one footer-pruned read
+        per set of cache-missing terms, amortized to zero for hot
+        terms)."""
         self.postings = self.postings.persist()
         self.postings.count()
         if preload_terms:
@@ -660,13 +753,11 @@ class SearchEngine:
     ) -> list[tuple[int, float]]:
         """Interactive twin of :meth:`search_expanded` over the
         scored-posting cache."""
+        t0 = time.perf_counter()
         plain, groups = self._expansion_buckets(query, synonyms)
         allt = sorted(set(plain) | {t for g in groups for t in g})
         if not allt:
             return []
-        import time as _t
-
-        t0 = _t.time()
         entries = self._term_entries(allt)
         present = [t for t in allt if entries[t][0] > 0]
         if not present:
@@ -679,7 +770,7 @@ class SearchEngine:
             if members:
                 runs.append(wand_mod.synmax_run(members))
         out = wand_mod.topk_from_scored(runs, k, n_docs=self.n_docs)
-        self._log_query(query, k, len(out), (_t.time() - t0) * 1000.0)
+        self._log_query(query, k, len(out), t0)
         return out
 
     def search_boolean_local(
@@ -688,13 +779,11 @@ class SearchEngine:
         """Interactive twin of :meth:`search_boolean`, served from the
         scored-posting cache (the excluded terms' cached doc arrays are
         the exclusion mask — their scores are simply unused)."""
+        t0 = time.perf_counter()
         opt, req, exc, contradiction = self._boolean_buckets(query)
         scoring = sorted(set(opt) | set(req))
         if contradiction or not scoring:
             return []
-        import time as _t
-
-        t0 = _t.time()
         entries = self._term_entries(sorted(set(scoring) | set(exc)))
         present = {t for t, (df, _) in entries.items() if df > 0}
         if any(t not in present for t in req) or not (
@@ -709,19 +798,20 @@ class SearchEngine:
         exc_arrs = [decoded[t][0] for t in exc if t in present]
         ex = np.unique(np.concatenate(exc_arrs)) if exc_arrs else None
         out = wand_mod.boolean_topk_scored(req_runs, opt_runs, k, ex)
-        self._log_query(query, k, len(out), (_t.time() - t0) * 1000.0)
+        self._log_query(query, k, len(out), t0)
         return out
 
     def _term_entries(self, terms: list[str]) -> dict[str, tuple[int, bytes]]:
         """(df, merged doc-ascending posting blob) per term, LRU-cached
-        on the driver; ONE pruned collect for all cache-missing terms.
-        Shards are ascending disjoint doc-id ranges and blocks are
-        self-delimiting, so per-term shard blobs concatenate (in shard
-        order) into one valid run — one scoring pass per query instead
-        of one per shard, and repeat terms skip the Spark job entirely
-        (the reference reloads the WHOLE index per request,
+        on the driver; ONE footer-pruned posting file read
+        (:class:`PostingFiles`, no Spark job) for all cache-missing
+        terms.  Shards are ascending disjoint doc-id ranges and blocks
+        are self-delimiting, so per-term shard blobs concatenate (in
+        shard order) into one valid run — one scoring pass per query
+        instead of one per shard, and repeat terms skip the read
+        entirely (the reference reloads the WHOLE index per request,
         Query.cpp:59-82; this keeps just the hot working set).  df rides
-        along in the same rows, so stats cost no separate job; absent
+        along in the same rows, so stats cost no separate read; absent
         terms cache as (0, b'') negatives."""
         out: dict[str, tuple[int, bytes]] = {}
         missing: list[str] = []
@@ -734,7 +824,7 @@ class SearchEngine:
                 missing.append(t)
         if missing and self.shared_cache is not None:
             # shared tier: another replica's fill (or negative) serves
-            # this one without a Spark job
+            # this one without a file read
             still = []
             for t in missing:
                 e = self.shared_cache.get(t)
@@ -749,11 +839,9 @@ class SearchEngine:
         if missing:
             by_term: dict[str, list[tuple[int, bytes]]] = {}
             dfs: dict[str, int] = {}
-            for r in self._shard_rows(missing).collect():
-                by_term.setdefault(r["term"], []).append(
-                    (r["shard"], bytes(r["blocks"]))
-                )
-                dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+            for t, shard, df, blob in self.posting_files.rows(missing):
+                by_term.setdefault(t, []).append((shard, blob))
+                dfs[t] = dfs.get(t, 0) + int(df)
             for t in missing:
                 blob = b"".join(b for _, b in sorted(by_term.get(t, [])))
                 entry = (dfs.get(t, 0), blob)
@@ -813,9 +901,10 @@ class SearchEngine:
     def search_local(
         self, query: str, k: int = 10, conjunctive: bool = False
     ) -> list[tuple[int, float]]:
-        """Low-latency in-process serving: one collect of the query's
-        shard rows (stats + blobs together), then WAND on the driver
-        with shard results merged."""
+        """Low-latency in-process serving: one footer-pruned read of the
+        query's shard rows (stats + blobs together) from the posting
+        files, then top-k on the driver with shard results merged."""
+        t0 = time.perf_counter()
         terms = self.query_terms(query)
         if not terms:
             return []
@@ -827,7 +916,7 @@ class SearchEngine:
             rkey = self.result_cache.canonical(terms, k, mode)
             cached = self.result_cache.get(rkey)
             if cached is not None:
-                self._log_query(query, k, len(cached), 0.0)
+                self._log_query(query, k, len(cached), t0)
                 return cached
         entries = self._term_entries(terms)
         idf = {
@@ -839,9 +928,6 @@ class SearchEngine:
             if rkey is not None:  # negative results are snapshot-stable
                 self.result_cache.put(rkey, [])
             return []
-        import time as _t
-
-        t0 = _t.time()
         present = sorted(idf)
         decoded = self._decoded_runs(present, entries)
         runs = [decoded[t] for t in present]
@@ -858,5 +944,5 @@ class SearchEngine:
         out = out[:k]
         if rkey is not None:
             self.result_cache.put(rkey, out)
-        self._log_query(query, k, len(out), (_t.time() - t0) * 1000.0)
+        self._log_query(query, k, len(out), t0)
         return out

@@ -195,14 +195,17 @@ def _append_batch(
     # delta shards: original shard_range, original enc_avgdl (uniform
     # block-max reference point across the whole index)
     postings_delta = f"postings_delta_{base}"
-    po.build_posting_shards(
-        tf,
-        n_docs=n0 + n_delta,
-        avgdl=enc_avgdl,
-        num_shards=int(meta.get("num_shards", 32)),
-        block_size=int(meta.get("block_size", 128)),
-        shard_range=shard_range,
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, postings_delta))
+    po.write_postings(
+        po.build_posting_shards(
+            tf,
+            n_docs=n0 + n_delta,
+            avgdl=enc_avgdl,
+            num_shards=int(meta.get("num_shards", 32)),
+            block_size=int(meta.get("block_size", 128)),
+            shard_range=shard_range,
+        ),
+        os.path.join(out_dir, postings_delta),
+    )
     tf.unpersist()
 
     # refresh term_stats from the union of ALL posting dirs (old list

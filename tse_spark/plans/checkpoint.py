@@ -70,6 +70,10 @@ def _partition_lineage(path: str) -> dict[str, int]:
     return parts
 
 
+def _write_parquet(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
+
+
 def run_stage(
     spark: SparkSession,
     manifest: Manifest,
@@ -77,9 +81,11 @@ def run_stage(
     fp: str,
     build: "callable[[], DataFrame]",
     resume: bool = True,
+    write: "callable[[DataFrame, str], None]" = _write_parquet,
 ) -> DataFrame:
     """Build-or-reload one stage.  ``build()`` returns the stage's
-    DataFrame; it is written to <out_dir>/<name> as parquet."""
+    DataFrame; ``write(df, path)`` stores it at <out_dir>/<name> as
+    parquet."""
     path = os.path.join(manifest.out_dir, name)
     done = os.path.join(path, "_SUCCESS")
     if resume and manifest.fingerprint_ok(name, fp) and os.path.exists(done):
@@ -88,7 +94,7 @@ def run_stage(
         manifest.save()
         return df
     t0 = time.time()
-    build().write.mode("overwrite").parquet(path)
+    write(build(), path)
     df = spark.read.parquet(path)
     parts = _partition_lineage(path)
     manifest.stages[name] = {

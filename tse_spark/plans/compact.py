@@ -175,9 +175,12 @@ def compact_index(
     old_postings = spark.read.parquet(
         *[os.path.join(out_dir, d) for d in postings_dirs]
     )
-    po.reencode_shards(
-        old_postings, avgdl, new_range, block_size, excluded=tomb_arr
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, postings_out))
+    po.write_postings(
+        po.reencode_shards(
+            old_postings, avgdl, new_range, block_size, excluded=tomb_arr
+        ),
+        os.path.join(out_dir, postings_out),
+    )
 
     new_postings = spark.read.parquet(os.path.join(out_dir, postings_out))
     po.term_stats(new_postings).write.mode("overwrite").parquet(

@@ -242,9 +242,12 @@ def merge_indexes_many(
         posts = p if posts is None else posts.unionByName(p)
 
     os.makedirs(out_dir, exist_ok=True)
-    po.reencode_shards(
-        posts, avgdl, shard_range, block_size, excluded=_excluded
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "postings"))
+    po.write_postings(
+        po.reencode_shards(
+            posts, avgdl, shard_range, block_size, excluded=_excluded
+        ),
+        os.path.join(out_dir, "postings"),
+    )
 
     merged_postings = spark.read.parquet(os.path.join(out_dir, "postings"))
     po.term_stats(merged_postings).write.mode("overwrite").parquet(
@@ -482,10 +485,13 @@ def absorb_segment(
         *[os.path.join(seg_dir, d) for d in seg.get("postings_dirs", ["postings"])]
     ).withColumn("id_shift", F.lit(int(base)).cast("long"))
     postings_delta = f"postings_delta_{base}"
-    po.reencode_shards(
-        seg_posts, enc_avgdl, shard_range,
-        int(meta.get("block_size", 128)),
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, postings_delta))
+    po.write_postings(
+        po.reencode_shards(
+            seg_posts, enc_avgdl, shard_range,
+            int(meta.get("block_size", 128)),
+        ),
+        os.path.join(out_dir, postings_delta),
+    )
 
     docs_delta = None
     if seg_docs is not None:

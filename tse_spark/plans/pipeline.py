@@ -7,7 +7,7 @@ Stages (each a resumable checkpoint table under ``out_dir``):
   tf        — (doc_id, term, tf, dl): Arrow tokenizer UDF with map-side
               per-doc aggregation and inline doc length
   postings  — doc-range-sharded delta-gap varint blocks (salted
-              repartition-by-term)
+              range-partition-by-term: term-clustered part files)
   term_stats— global df/cf/max_score per term
 
 plus ``meta.json`` (n_docs, avgdl, params).  A re-run with ``resume=True``
@@ -252,6 +252,7 @@ class IndexPipeline:
                 self.block_size,
             ),
             resume,
+            write=po.write_postings,
         )
         stats = cp.run_stage(
             self.spark,
@@ -293,9 +294,13 @@ class IndexHandle:
         scale = 1.0
         if enc_avgdl and enc_avgdl > 0 and avgdl > enc_avgdl:
             scale = avgdl / enc_avgdl
+        posting_dirs = [
+            os.path.join(out_dir, d)
+            for d in (meta or {}).get("postings_dirs", ["postings"])
+        ]
         self.engine = se.SearchEngine(
-            spark, postings, term_stats, n_docs, avgdl, dictionary,
-            bound_scale=scale, tombstones=tombstones,
+            spark, postings, posting_dirs, term_stats, n_docs, avgdl,
+            dictionary, bound_scale=scale, tombstones=tombstones,
         )
 
     def attach_shared_cache(self, cache_root: str):
