@@ -6607,7 +6607,9 @@ def oracle_sql() -> dict[str, str]:
                string_agg(doc_id::VARCHAR, ',' ORDER BY doc_id) AS posting
         FROM tf GROUP BY term""",
         # corpus laws: integer decile arithmetic + closed-form ln-ln
-        # least squares, identical aggregates on both engines
+        # least squares, identical aggregates on both engines; the four
+        # fit sums use the fixed-point BIGINT law (2^20 scale, as in
+        # corpuslaws.FP_SCALE) so neither engine's order can move them
         "vocab_growth": _TOK
         + """,
         n AS (SELECT count(*)::BIGINT AS n FROM documents),
@@ -6648,8 +6650,15 @@ def oracle_sql() -> dict[str, str]:
           SELECT ln(t::DOUBLE) AS lx, ln(v::DOUBLE) AS ly
           FROM g WHERE t > 0 AND v > 0),
         a AS (
-          SELECT count(*)::DOUBLE AS m, sum(lx) AS sx, sum(ly) AS sy,
-                 sum(lx * ly) AS sxy, sum(lx * lx) AS sxx
+          SELECT count(*)::DOUBLE AS m,
+            sum(floor(lx * 1048576.0 + 0.5)::BIGINT)::DOUBLE / 1048576.0
+              AS sx,
+            sum(floor(ly * 1048576.0 + 0.5)::BIGINT)::DOUBLE / 1048576.0
+              AS sy,
+            sum(floor(lx * ly * 1048576.0 + 0.5)::BIGINT)::DOUBLE
+              / 1048576.0 AS sxy,
+            sum(floor(lx * lx * 1048576.0 + 0.5)::BIGINT)::DOUBLE
+              / 1048576.0 AS sxx
           FROM pts)
         SELECT
           round((m * sxy - sx * sy) / (m * sxx - sx * sx), 4)
@@ -6666,8 +6675,15 @@ def oracle_sql() -> dict[str, str]:
         pts AS (
           SELECT ln(rank::DOUBLE) AS lx, ln(cf::DOUBLE) AS ly FROM rk),
         a AS (
-          SELECT count(*)::DOUBLE AS m, sum(lx) AS sx, sum(ly) AS sy,
-                 sum(lx * ly) AS sxy, sum(lx * lx) AS sxx
+          SELECT count(*)::DOUBLE AS m,
+            sum(floor(lx * 1048576.0 + 0.5)::BIGINT)::DOUBLE / 1048576.0
+              AS sx,
+            sum(floor(ly * 1048576.0 + 0.5)::BIGINT)::DOUBLE / 1048576.0
+              AS sy,
+            sum(floor(lx * ly * 1048576.0 + 0.5)::BIGINT)::DOUBLE
+              / 1048576.0 AS sxy,
+            sum(floor(lx * lx * 1048576.0 + 0.5)::BIGINT)::DOUBLE
+              / 1048576.0 AS sxx
           FROM pts)
         SELECT round((m * sxy - sx * sy) / (m * sxx - sx * sx), 4)
           AS zipf_slope

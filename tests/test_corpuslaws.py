@@ -102,3 +102,28 @@ def test_zipf_slope_real_zipf_sample(spark, zipf_tf):
     tf, _ = zipf_tf
     slope = cl.zipf_slope(tf, top_n=50).collect()[0]["zipf_slope"]
     assert -2.5 < slope < -0.2  # negative, sane magnitude
+
+
+def test_fits_bit_identical_across_partitionings(spark, zipf_tf):
+    """The ln-ln sums are fixed-point BIGINT, so the unrounded fit (and
+    so the rounded one) cannot move with the order rows are summed in."""
+    tf, _ = zipf_tf
+    growth = spark.createDataFrame(cl.vocab_growth(tf, 200).collect())
+    ranked = spark.createDataFrame(
+        [(r, int(round(1e6 * r ** -1.1)) + r % 7) for r in range(1, 101)],
+        "rank long, cf long",
+    )
+
+    def fits(n):
+        g, t = growth.repartition(n), tf.repartition(n)
+        return [
+            tuple(df.first())
+            for df in (
+                cl._lnln_slope(g, "tokens_prefix", "vocab_prefix"),
+                cl._lnln_slope(ranked.repartition(n), "rank", "cf"),
+                cl.heaps_fit(g),
+                cl.zipf_slope(t, top_n=100),
+            )
+        ]
+
+    assert fits(1) == fits(4) == fits(16)

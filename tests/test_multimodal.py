@@ -311,7 +311,7 @@ def test_gif_roundtrip_fills_12bit_table():
     # 90k random gray pixels generate > 4096 LZW patterns, forcing the
     # width ladder to 12 bits, a table-full CLEAR reset, and re-growth
     # (compress=True: the dict-walk encoder is the one that grows the
-    # table; the literal default never leaves 9-bit codes)
+    # table; the literal path never leaves 9-bit codes)
     rng = np.random.RandomState(13)
     px = rng.randint(0, 256, size=(300, 300)).astype(np.uint8)
     data = mm.encode_gif(px, compress=True)
@@ -327,21 +327,23 @@ def test_gif_kwkwk_case():
 
 
 def test_gif_literal_encoder_matches_compressing_encoder():
-    """The vectorized literal-LZW default and the dict-walk compressing
-    path must decode to identical pixels — and the literal stream must
+    """The vectorized literal-LZW path and the dict-walk compressing
+    default must decode to identical pixels — and the literal stream must
     hold the decoder at 9-bit codes across CLEAR boundaries (253-pixel
     period), which the >253-pixel shapes exercise."""
     rng = np.random.RandomState(23)
     for shape in [(1, 1), (9, 253), (9, 254), (40, 40), (3, 1000)]:
         px = rng.randint(0, 256, size=shape).astype(np.uint8)
-        lit = mm.encode_gif(px)
+        lit = mm.encode_gif(px, compress=False)
         cmp_ = mm.encode_gif(px, compress=True)
         assert np.array_equal(mm.decode_gif(lit), px), shape
         assert np.array_equal(mm.decode_gif(cmp_), px), shape
     # RGB through the padded-to-256 palette header
     pal = np.array([[255, 0, 0], [0, 255, 0], [7, 8, 9]], np.uint8)
     px = pal[np.tile(np.array([[0, 1, 2, 1]]), (20, 17))]
-    assert np.array_equal(mm.decode_gif(mm.encode_gif(px)), px)
+    assert np.array_equal(
+        mm.decode_gif(mm.encode_gif(px, compress=False)), px
+    )
 
 
 def test_gif_rejects_junk_and_overflow():

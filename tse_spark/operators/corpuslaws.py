@@ -12,7 +12,11 @@ hot-shard / salting decision in the (term, shard) shuffle).
 
 All three operators are pure DataFrame aggregations over the tf table
 (one shuffle each, no collects) with closed-form least-squares fits
-expressed as SQL aggregates, so the DuckDB oracles are exact twins:
+expressed as SQL aggregates, so the DuckDB oracles are exact twins.  The
+fits' four sums go through the fixed-point BIGINT law (each ln term
+quantized to ``floor(x * 2^20 + 0.5)`` and summed as BIGINT), so they
+are exact in any order: the rounded slope cannot flip with partitioning
+or engine.
 
 - :func:`vocab_growth` — cumulative (docs, tokens, vocab) per corpus
   decile.  A term's decile is its FIRST occurrence's decile (min
@@ -28,6 +32,10 @@ expressed as SQL aggregates, so the DuckDB oracles are exact twins:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+# fixed-point scale for the least-squares sums: the same floor(x * 2^20
+# + 0.5) BIGINT law as the k-means centroid update (clustering.py)
+FP_SCALE = 1 << 20
 
 
 def vocab_growth(
@@ -74,19 +82,29 @@ def vocab_growth(
     )
 
 
+def _fixed_sum(c):
+    """sum(floor(c * FP_SCALE + 0.5)) as BIGINT, back in c's units:
+    exact in any summation order, so every partitioning (and the DuckDB
+    oracle) gets the same double."""
+    return (
+        F.sum(F.floor(c * float(FP_SCALE) + 0.5).cast("long"))
+        / float(FP_SCALE)
+    )
+
+
 def _lnln_slope(df: DataFrame, x: str, y: str) -> DataFrame:
     """One row (slope, intercept_exp) of the ln-ln least squares fit
-    y = e^a * x^slope, as pure SQL aggregates."""
+    y = e^a * x^slope, as pure SQL aggregates over fixed-point sums."""
     pts = df.select(
         F.log(F.col(x).cast("double")).alias("lx"),
         F.log(F.col(y).cast("double")).alias("ly"),
     )
     agg = pts.agg(
         F.count(F.lit(1)).cast("double").alias("m"),
-        F.sum("lx").alias("sx"),
-        F.sum("ly").alias("sy"),
-        F.sum(F.col("lx") * F.col("ly")).alias("sxy"),
-        F.sum(F.col("lx") * F.col("lx")).alias("sxx"),
+        _fixed_sum(F.col("lx")).alias("sx"),
+        _fixed_sum(F.col("ly")).alias("sy"),
+        _fixed_sum(F.col("lx") * F.col("ly")).alias("sxy"),
+        _fixed_sum(F.col("lx") * F.col("lx")).alias("sxx"),
     )
     slope = (F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")

@@ -446,18 +446,18 @@ def _lzw_decode_gif(data: bytes, min_code_size: int) -> np.ndarray:
     return np.frombuffer(b"".join(out), dtype=np.uint8)
 
 
-def encode_gif(px: np.ndarray, compress: bool = False) -> bytes:
+def encode_gif(px: np.ndarray, compress: bool = True) -> bytes:
     """Minimal real GIF89a encoder (pure stdlib + the LZW above):
     uint8 (h, w) gray — palette is the 256-gray ramp — or (h, w, 3)
     RGB with at most 256 distinct colors (more raises: route to the
     pillow backend).  Single frame, global color table, no interlace;
     output opens in any viewer.
 
-    Default is the VECTORIZED literal-code LZW
-    (:func:`_lzw_encode_gif_literal`, ~9/8 bytes per pixel, no
-    per-pixel Python — the throughput path); ``compress=True`` selects
-    the dict-walk compressing LZW for callers that want small bytes
-    and accept the sequential encode cost."""
+    Default is the dict-walk compressing LZW (:func:`_lzw_encode_gif`,
+    small bytes, sequential encode).  ``compress=False`` selects the
+    VECTORIZED literal-code LZW (:func:`_lzw_encode_gif_literal`, ~9/8
+    bytes per pixel, no per-pixel Python) for throughput callers that
+    accept the larger output."""
     px = np.ascontiguousarray(px, dtype=np.uint8)
     if px.ndim == 2:
         pal = np.repeat(
@@ -587,7 +587,9 @@ def gif_media_df(spark, n_rows: int) -> DataFrame:
                 w, h = 4 + (i * 7) % 13, 3 + (i * 11) % 9
                 p = np.arange(w * h, dtype=np.int64)
                 px = ((i * 131 + p * 7) % 256).astype(np.uint8)
-                rows.append(("image", i, encode_gif(px.reshape(h, w))))
+                rows.append(
+                    ("image", i, encode_gif(px.reshape(h, w), compress=False))
+                )
             yield pd.DataFrame(
                 rows, columns=["kind", "media_id", "payload"]
             )
@@ -662,7 +664,11 @@ def mixed_media_df(spark, n_rows: int) -> DataFrame:
                     px = ((i * 131 + p * 7) % 256).astype(
                         np.uint8
                     ).reshape(h, w)
-                    payload = encode_png(px) if f == 0 else encode_gif(px)
+                    payload = (
+                        encode_png(px)
+                        if f == 0
+                        else encode_gif(px, compress=False)
+                    )
                 rows.append(("image", i, payload))
             yield pd.DataFrame(
                 rows, columns=["kind", "media_id", "payload"]

@@ -21,17 +21,27 @@ def export_worker_sitecustomize() -> None:
     **before** the JVM starts, so the pyspark worker daemon — and by
     fork-inheritance every Python worker, including ones whose UDFs were
     cloudpickled by value and never import tse_spark — runs the THP
-    opt-out at interpreter startup.  See sitecustomize.py for the
-    measured 16x collapse this prevents.  Must be called before
+    opt-out and the lazy zipimport invalidation at interpreter startup.
+    See sitecustomize.py for what each one saves; ``TSE_SPARK_KEEP_THP``
+    is read there and skips only the THP opt-out.  Must be called before
     SparkSession creation; a no-op afterwards (env is only read at
     daemon launch)."""
-    if os.environ.get("TSE_SPARK_KEEP_THP") == "1":
-        return
     pp = os.environ.get("PYTHONPATH", "")
     if _REPO_ROOT not in pp.split(os.pathsep):
         os.environ["PYTHONPATH"] = (
             _REPO_ROOT + (os.pathsep + pp if pp else "")
         )
+
+
+def _default_driver_memory() -> str:
+    """24g, capped at half the host's physical memory.  The driver heap
+    grows toward its cap as cached tables pile up, and a 24g cap on a
+    16 GB host got the JVM OOM-killed part-way through the test suite."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "24g"
+    return f"{min(24 << 10, phys >> 21)}m"
 
 
 def tune_runtime(spark: SparkSession) -> SparkSession:
@@ -82,7 +92,10 @@ def get_spark(
         # coalesce post-shuffle UDF stages to a handful of partitions on
         # MB-scale test corpora; keep parallelism tracking core count
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # keep wide aggregates (64-bit-plane SimHash) in whole-stage
