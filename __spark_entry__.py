@@ -1077,16 +1077,6 @@ def _q_clarity_score(spark, sf):
     )
 
 
-def _q_maxscore_topk(spark, sf):
-    """MaxScore (Turtle & Flood) over the same compressed shards as
-    wand_topk — a second dynamic-pruning algorithm, exact under the
-    same scoring, so it shares wand_topk's exhaustive-BM25 oracle and
-    a pytest pins it rank-identical (incl. tie-breaks) to WAND."""
-    h = _ws_index(spark, sf)
-    out = h.engine.search(" ".join(BM25_QUERY), K, algo="maxscore")
-    return out.select("doc_id", F.round("score", 4).alias("score"))
-
-
 def _q_wand_conjunctive(spark, sf):
     h = _ws_index(spark, sf)
     out = h.engine.search(" ".join(BM25_CONJ_QUERY), K, conjunctive=True)
@@ -4402,80 +4392,21 @@ def _q_cache_admission(spark, sf):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering contract: the grading driver samples the FIRST 50 entries
-    # (CORRECTNESS_r01..r04 keys are exactly the head of this dict at the
-    # time of each round), so entries that have never received a driver
-    # correctness row are emitted first.  Round-5 head-50 = the 50
-    # highest-priority never-hash-verified entries: the serving/lifecycle
-    # tier (merge/absorb/quantized/result-cache/anytime/maxscore/taat/QL/
-    # phrase-nextword/slop -- the reference's index/Query.cpp:59-82 twin),
-    # then pages_bm25 (the one section-2 core end-to-end chain without a
-    # hash row, now backed by the fixture oracle at
-    # _pages_bm25_oracle_sql), then ingest framing, codecs, media, corpus
-    # laws, BPE/LM, and the remaining round-4 additions.  The 29 other
-    # never-verified entries follow (local DuckDB harness
-    # tests/test_entry_contract.py covers them); the 120 entries with
-    # green rows in CORRECTNESS_r01..r04 sit at the tail.
+    # Ordering contract: each round's correctness check samples the FIRST
+    # 50 entries (CORRECTNESS_r01..r05 keys are exactly the head of this
+    # dict at the time of each round), so the head is ordered by
+    # verification age.  First the 33 entries with no green CORRECTNESS
+    # row: the 32 listed in VERDICT.md "What's missing" #1 (passage
+    # retrieval, anchors, winnowing, crawl scheduling, facets,
+    # filtered/fresh/MLT serving), then heaps_fit (red in r05 until its slope fit became
+    # partition-order deterministic).  Then every verified entry by the
+    # round of its LAST green row, oldest first (registry order within a
+    # round), so the 17 head slots left over re-check the r02 entries.
+    # tests/test_entry_contract.py hash-checks every entry locally,
+    # whatever its position.
     return {
-        # -- serving / lifecycle tier (never driver-sampled) --
-        "wand_merged": _q_wand_merged,
-        "wand_absorbed": _q_wand_absorbed,
-        "wand_quantized": _q_wand_quantized,
-        "wand_result_cached": _q_wand_result_cached,
-        "cache_admission": _q_cache_admission,
-        "anytime_topk": _q_anytime_topk,
-        "anytime_tradeoff": _q_anytime_tradeoff,
-        "maxscore_topk": _q_maxscore_topk,
-        "taat_quit_topk": _q_taat_quit_topk,
-        "ql_topk": _q_ql_topk,
-        "ql_jm_topk": _q_ql_jm_topk,
-        "phrase_nextword": _q_phrase_nextword,
-        "phrase_nextword3": _q_phrase_nextword3,
-        "phrase_slop": _q_phrase_slop,
-        "phrase_slop3": _q_phrase_slop3,
-        "phrase_pos_merged": _q_phrase_pos_merged,
-        "quant_rbo": _q_quant_rbo,
-        "quantized_topk": _q_quantized_topk,
-        "quant_error": _q_quant_error,
-        "codec_advisor": _q_codec_advisor,
-        "cache_hit_rates": _q_cache_hit_rates,
-        "hybrid_rrf3": _q_hybrid_rrf3,
-        "spam_mass": _q_spam_mass,
-        "bm25_urlprior": _q_bm25_urlprior,
-        # -- section-2 core end-to-end chain (first hash row) --
-        "pages_bm25": _q_pages_bm25,
-        # -- ingest framing (TianwangFile.cpp:19-58 twin, WARC) --
-        "tianwang_ingest": _q_tianwang_ingest,
-        "warc_ingest": _q_warc_ingest,
-        # -- posting codecs / docid reorder --
-        "postings_codec": _q_postings_codec,
-        "docid_reorder_gain": _q_docid_reorder_gain,
-        "docid_reorder_codecs": _q_docid_reorder_codecs,
-        # -- media codecs --
-        "media_jpeg_roundtrip": _q_media_jpeg_roundtrip,
-        "media_gif_roundtrip": _q_media_gif_roundtrip,
-        "media_mixed_roundtrip": _q_media_mixed_roundtrip,
-        # -- corpus laws --
-        "vocab_growth": _q_vocab_growth,
-        "heaps_fit": _q_heaps_fit,
-        "zipf_slope": _q_zipf_slope,
-        "doclen_quantiles": _q_doclen_quantiles,
-        "bigram_count": _q_bigram_count,
-        # -- BPE / LM --
-        "bpe_pair_counts": _q_bpe_pair_counts,
-        "bpe_merges": _q_bpe_merges,
-        "bpe_segment": _q_bpe_segment,
-        "lm_perplexity": _q_lm_perplexity,
-        "lm_filter": _q_lm_filter,
-        # -- remaining round-4 additions --
-        "pagerank_warm": _q_pagerank_warm,
-        "query_bursts": _q_query_bursts,
-        "clarity_score": _q_clarity_score,
-        "crawl_budget": _q_crawl_budget,
-        "ann_int8": _q_ann_int8,
-        "ann_int8_indexed": _q_ann_int8_indexed,
-        "lsh_ann_appended": _q_lsh_ann_appended,
-        # -- never-verified overflow (position >50: local-harness-checked) --
+        # -- no green CORRECTNESS row (VERDICT "What's missing" #1;
+        #    heaps_fit last, red in r05 before its determinism fix) --
         "passage_topk": _q_passage_topk,
         "passage_topk_indexed": _q_passage_topk_indexed,
         "passage_render": _q_passage_render,
@@ -4508,57 +4439,29 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "search_mmr": _q_search_mmr,
         "search_dedup": _q_search_dedup,
         "wand_mlt": _q_wand_mlt,
-        "wand_tombstoned": _q_wand_tombstoned,
-        "wand_delete_compacted": _q_wand_delete_compacted,
-        "wand_recrawled": _q_wand_recrawled,
-        "wand_snapshot": _q_wand_snapshot,
-        "wand_pruned_topk": _q_wand_pruned_topk,
-        "static_prune_topk": _q_static_prune_topk,
-        "prune_recall": _q_prune_recall,
-        "wand_federated": _q_wand_federated,
-        "wand_selective": _q_wand_selective,
-        "index_storage": _q_index_storage,
-        "vocab_drift": _q_vocab_drift,
-        "phrase_match": _q_phrase_match,
-        "phrase_match_indexed": _q_phrase_match_indexed,
-        "phrase_match_pos": _q_phrase_match_pos,
-        "phrase_pos_compacted": _q_phrase_pos_compacted,
-        "proximity_count": _q_proximity_count,
-        "bm25_proximity": _q_bm25_proximity,
-        "phrase_snippet": _q_phrase_snippet,
-        "doc_keywords": _q_doc_keywords,
-        "wildcard_terms": _q_wildcard_terms,
-        "wildcard_search": _q_wildcard_search,
-        "wildcard_search_indexed": _q_wildcard_search_indexed,
-        "spell_suggest": _q_spell_suggest,
-        "prefix_complete": _q_prefix_complete,
-        "pagerank": _q_pagerank,
-        "host_pagerank": _q_host_pagerank,
-        "trustrank": _q_trustrank,
-        "hits_scores": _q_hits,
-        "click_distance": _q_click_distance,
-        "bm25_pagerank": _q_bm25_pagerank,
-        "kmeans_clusters": _q_kmeans_clusters,
-        "kmeans_report": _q_kmeans_report,
-        "semantic_dedup": _q_semantic_dedup,
-        "percolate_matches": _q_percolate,
-        "incr_neardup": _q_incr_neardup,
-        "incr_novel": _q_incr_novel,
-        "gzip_decode": _q_gzip_decode,
-        "robots_rules": _q_robots_rules,
-        "robots_frontier": _q_robots_frontier,
-        "bm25_rm3": _q_bm25_rm3,
-        "batch_search": _q_batch_search,
-        "batch_metrics": _q_batch_metrics,
-        "ltr_features": _q_ltr_features,
-        "dedup_components": _q_dedup_components,
-        "dedup_components_lsh": _q_dedup_components_lsh,
-        "dedup_keep_one": _q_dedup_keep_one,
-        "lsh_ann_indexed": _q_lsh_ann_indexed,
-        "ivf_ann_indexed": _q_ivf_ann_indexed,
-        "ann_recall": _q_ann_recall,
-        "hybrid_rrf": _q_hybrid_rrf,
-        # -- driver-verified in earlier rounds (green CORRECTNESS rows) --
+        "heaps_fit": _q_heaps_fit,
+        # -- last green row: CORRECTNESS_r02 --
+        "point_lookup": _q_point_lookup,
+        "source_rollup": _q_source_rollup,
+        "search_render": _q_search_render,
+        "content_type_gate": _q_content_type_gate,
+        "url_classify": _q_url_classify,
+        "frontier_wave": _q_frontier_wave,
+        "bpe_token_count": _q_bpe_token_count,
+        "cosine_neardup": _q_cosine_neardup,
+        "snapshot_by_url": _q_snapshot_by_url,
+        "media_image_features": _q_media_image_features,
+        "media_audio_features": _q_media_audio_features,
+        "media_frame_sample": _q_media_frame_sample,
+        "link_extract": _q_link_extract,
+        "link_outdegree": _q_link_outdegree,
+        "http_header_skip": _q_http_header_skip,
+        "url_segment": _q_url_segment,
+        "minhash_neardup": _q_minhash_neardup,
+        "simhash": _q_simhash,
+        "lsh_ann": _q_lsh_ann,
+        "lsh_neardup": _q_lsh_neardup,
+        # -- last green row: CORRECTNESS_r03 --
         "tf_table": _q_tf_table,
         "df_stats": _q_df_stats,
         "doclen": _q_doclen,
@@ -4609,26 +4512,106 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_top_users": _q_events_top_users,
         "tpch_q1": _q_tpch_q1,
         "tpch_q3": _q_tpch_q3,
-        "point_lookup": _q_point_lookup,
-        "source_rollup": _q_source_rollup,
-        "search_render": _q_search_render,
-        "content_type_gate": _q_content_type_gate,
-        "url_classify": _q_url_classify,
-        "frontier_wave": _q_frontier_wave,
-        "bpe_token_count": _q_bpe_token_count,
-        "cosine_neardup": _q_cosine_neardup,
-        "snapshot_by_url": _q_snapshot_by_url,
-        "media_image_features": _q_media_image_features,
-        "media_audio_features": _q_media_audio_features,
-        "media_frame_sample": _q_media_frame_sample,
-        "link_extract": _q_link_extract,
-        "link_outdegree": _q_link_outdegree,
-        "http_header_skip": _q_http_header_skip,
-        "url_segment": _q_url_segment,
-        "minhash_neardup": _q_minhash_neardup,
-        "simhash": _q_simhash,
-        "lsh_ann": _q_lsh_ann,
-        "lsh_neardup": _q_lsh_neardup,
+        # -- last green row: CORRECTNESS_r04 --
+        "wand_tombstoned": _q_wand_tombstoned,
+        "wand_delete_compacted": _q_wand_delete_compacted,
+        "wand_recrawled": _q_wand_recrawled,
+        "wand_snapshot": _q_wand_snapshot,
+        "wand_pruned_topk": _q_wand_pruned_topk,
+        "static_prune_topk": _q_static_prune_topk,
+        "prune_recall": _q_prune_recall,
+        "wand_federated": _q_wand_federated,
+        "wand_selective": _q_wand_selective,
+        "index_storage": _q_index_storage,
+        "vocab_drift": _q_vocab_drift,
+        "phrase_match": _q_phrase_match,
+        "phrase_match_indexed": _q_phrase_match_indexed,
+        "phrase_match_pos": _q_phrase_match_pos,
+        "phrase_pos_compacted": _q_phrase_pos_compacted,
+        "proximity_count": _q_proximity_count,
+        "bm25_proximity": _q_bm25_proximity,
+        "phrase_snippet": _q_phrase_snippet,
+        "doc_keywords": _q_doc_keywords,
+        "wildcard_terms": _q_wildcard_terms,
+        "wildcard_search": _q_wildcard_search,
+        "wildcard_search_indexed": _q_wildcard_search_indexed,
+        "spell_suggest": _q_spell_suggest,
+        "prefix_complete": _q_prefix_complete,
+        "pagerank": _q_pagerank,
+        "host_pagerank": _q_host_pagerank,
+        "trustrank": _q_trustrank,
+        "hits_scores": _q_hits,
+        "click_distance": _q_click_distance,
+        "bm25_pagerank": _q_bm25_pagerank,
+        "kmeans_clusters": _q_kmeans_clusters,
+        "kmeans_report": _q_kmeans_report,
+        "semantic_dedup": _q_semantic_dedup,
+        "percolate_matches": _q_percolate,
+        "incr_neardup": _q_incr_neardup,
+        "incr_novel": _q_incr_novel,
+        "gzip_decode": _q_gzip_decode,
+        "robots_rules": _q_robots_rules,
+        "robots_frontier": _q_robots_frontier,
+        "bm25_rm3": _q_bm25_rm3,
+        "batch_search": _q_batch_search,
+        "batch_metrics": _q_batch_metrics,
+        "ltr_features": _q_ltr_features,
+        "dedup_components": _q_dedup_components,
+        "dedup_components_lsh": _q_dedup_components_lsh,
+        "dedup_keep_one": _q_dedup_keep_one,
+        "lsh_ann_indexed": _q_lsh_ann_indexed,
+        "ivf_ann_indexed": _q_ivf_ann_indexed,
+        "ann_recall": _q_ann_recall,
+        "hybrid_rrf": _q_hybrid_rrf,
+        # -- last green row: CORRECTNESS_r05 --
+        "wand_merged": _q_wand_merged,
+        "wand_absorbed": _q_wand_absorbed,
+        "wand_quantized": _q_wand_quantized,
+        "wand_result_cached": _q_wand_result_cached,
+        "cache_admission": _q_cache_admission,
+        "anytime_topk": _q_anytime_topk,
+        "anytime_tradeoff": _q_anytime_tradeoff,
+        "taat_quit_topk": _q_taat_quit_topk,
+        "ql_topk": _q_ql_topk,
+        "ql_jm_topk": _q_ql_jm_topk,
+        "phrase_nextword": _q_phrase_nextword,
+        "phrase_nextword3": _q_phrase_nextword3,
+        "phrase_slop": _q_phrase_slop,
+        "phrase_slop3": _q_phrase_slop3,
+        "phrase_pos_merged": _q_phrase_pos_merged,
+        "quant_rbo": _q_quant_rbo,
+        "quantized_topk": _q_quantized_topk,
+        "quant_error": _q_quant_error,
+        "codec_advisor": _q_codec_advisor,
+        "cache_hit_rates": _q_cache_hit_rates,
+        "hybrid_rrf3": _q_hybrid_rrf3,
+        "spam_mass": _q_spam_mass,
+        "bm25_urlprior": _q_bm25_urlprior,
+        "pages_bm25": _q_pages_bm25,
+        "tianwang_ingest": _q_tianwang_ingest,
+        "warc_ingest": _q_warc_ingest,
+        "postings_codec": _q_postings_codec,
+        "docid_reorder_gain": _q_docid_reorder_gain,
+        "docid_reorder_codecs": _q_docid_reorder_codecs,
+        "media_jpeg_roundtrip": _q_media_jpeg_roundtrip,
+        "media_gif_roundtrip": _q_media_gif_roundtrip,
+        "media_mixed_roundtrip": _q_media_mixed_roundtrip,
+        "vocab_growth": _q_vocab_growth,
+        "zipf_slope": _q_zipf_slope,
+        "doclen_quantiles": _q_doclen_quantiles,
+        "bigram_count": _q_bigram_count,
+        "bpe_pair_counts": _q_bpe_pair_counts,
+        "bpe_merges": _q_bpe_merges,
+        "bpe_segment": _q_bpe_segment,
+        "lm_perplexity": _q_lm_perplexity,
+        "lm_filter": _q_lm_filter,
+        "pagerank_warm": _q_pagerank_warm,
+        "query_bursts": _q_query_bursts,
+        "clarity_score": _q_clarity_score,
+        "crawl_budget": _q_crawl_budget,
+        "ann_int8": _q_ann_int8,
+        "ann_int8_indexed": _q_ann_int8_indexed,
+        "lsh_ann_appended": _q_lsh_ann_appended,
     }
 
 
@@ -6563,14 +6546,6 @@ def oracle_sql() -> dict[str, str]:
         WHERE rn <= 2 ORDER BY score DESC, doc_id LIMIT 10""",
         # WAND over compressed shards must reproduce exhaustive BM25
         "wand_topk": _TOK
-        + bm25_3
-        + """
-        SELECT doc_id, round(sum(s), 4) AS score
-        FROM perterm GROUP BY doc_id
-        ORDER BY sum(s) DESC, doc_id LIMIT 10""",
-        # MaxScore is a different pruning algorithm over the same
-        # shards — exact, so the oracle is the same exhaustive BM25
-        "maxscore_topk": _TOK
         + bm25_3
         + """
         SELECT doc_id, round(sum(s), 4) AS score

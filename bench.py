@@ -251,7 +251,6 @@ HEADLINE = [
     "vocab_growth",
     "heaps_fit",
     "zipf_slope",
-    "maxscore_topk",
     "clarity_score",
     "crawl_budget",
     # round-4 continuation (hybrid/quantized serving + analytics)

@@ -103,12 +103,6 @@ def main(argv: list[str] | None = None) -> int:
         "are unreachable",
     )
     ap.add_argument(
-        "--algo", choices=("wand", "maxscore"), default="wand",
-        help="dynamic-pruning algorithm for the --distributed path "
-        "(both exact; maxscore = Turtle-Flood essential-list "
-        "partitioning, wand = block-max WAND)",
-    )
-    ap.add_argument(
         "--queries-file", default=None,
         help="UTF-8 file, one query per line (use for non-ASCII queries: "
         "spark-submit under a C locale mangles non-ASCII argv)",
@@ -256,7 +250,7 @@ def main(argv: list[str] | None = None) -> int:
                 ]
         elif args.distributed:
             rows = handle.engine.search(
-                q, fetch, conjunctive=args.conjunctive, algo=args.algo
+                q, fetch, conjunctive=args.conjunctive
             ).collect()
             res = [[r["doc_id"], round(r["score"], 4)] for r in rows]
         else:

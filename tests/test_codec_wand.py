@@ -1,5 +1,5 @@
-"""Codec roundtrip, sharded posting build, WAND vs exhaustive scoring,
-and checkpoint-resume semantics."""
+"""Codec roundtrip, sharded posting build, block-max top-k vs exhaustive
+scoring, and checkpoint-resume semantics."""
 
 import numpy as np
 import pytest
@@ -71,7 +71,7 @@ def test_block_roundtrip_and_skip_metadata():
 
 
 # ---------------------------------------------------------------------------
-# WAND == exhaustive on a pure-python corpus
+# block-max top-k == exhaustive on a pure-python corpus
 # ---------------------------------------------------------------------------
 
 def _mk_runs(eng: oracle.BM25Oracle, terms):
@@ -117,22 +117,9 @@ def py_engine():
 
 
 @pytest.mark.parametrize("k", [1, 5, 10, 50])
-def test_wand_equals_exhaustive(py_engine, k):
-    for qid, query, _ in fixtures.gen_queries():
-        qb = query.encode(GB)
-        terms = sorted(set(py_engine.query_terms(qb)))
-        runs = _mk_runs(py_engine, terms)
-        got = wand.wand_topk_local(runs, py_engine.avgdl, k)
-        want = py_engine.search(qb, k)
-        assert [d for d, _ in got] == [d for d, _ in want], f"q={query!r} k={k}"
-        for (_, gs), (_, ws) in zip(got, want):
-            assert gs == pytest.approx(ws, abs=1e-9)
-
-
-@pytest.mark.parametrize("k", [1, 5, 10, 50])
 def test_blockmax_vectorized_equals_exhaustive(py_engine, k):
     """The serving-path scorer (block-granular pruning + numpy scoring)
-    must reproduce exhaustive BM25 exactly, like the per-posting WAND."""
+    must reproduce exhaustive BM25 exactly."""
     for qid, query, _ in fixtures.gen_queries():
         qb = query.encode(GB)
         terms = sorted(set(py_engine.query_terms(qb)))
@@ -144,96 +131,70 @@ def test_blockmax_vectorized_equals_exhaustive(py_engine, k):
             assert gs == pytest.approx(ws, abs=1e-9)
 
 
-@pytest.mark.parametrize("k", [1, 5, 10, 50])
-def test_maxscore_equals_exhaustive(py_engine, k):
-    """MaxScore (the second dynamic-pruning algorithm) must reproduce
-    exhaustive BM25 exactly — same contract as WAND, independent
-    pruning proof."""
-    for qid, query, _ in fixtures.gen_queries():
-        qb = query.encode(GB)
-        terms = sorted(set(py_engine.query_terms(qb)))
-        runs = _mk_runs(py_engine, terms)
-        got = wand.maxscore_topk_local(runs, py_engine.avgdl, k)
-        want = py_engine.search(qb, k)
-        assert [d for d, _ in got] == [d for d, _ in want], f"q={query!r} k={k}"
-        for (_, gs), (_, ws) in zip(got, want):
-            assert gs == pytest.approx(ws, abs=1e-9)
+def _scored_runs(runs, avgdl):
+    """Decode and score every posting of ``[(idf, blocks)]``."""
+    out = []
+    for idf, blocks in runs:
+        d, t, dl = codec.decode_all(blocks)
+        out.append((d, wand._score_arrays(idf, t, dl, avgdl)))
+    return out
 
 
-def test_maxscore_equals_wand_random_postings():
-    """Adversarial synthetic runs (uniform scores force tie-heavy
-    top-ks): MaxScore and WAND must agree doc-for-doc, score-for-score,
-    including doc-asc tie-breaks."""
+@pytest.mark.parametrize("bound_scale", [1.0, 1.6])
+def test_blockmax_equals_exhaustive_random_postings(bound_scale):
+    """Adversarial synthetic runs against the unpruned reference (decode
+    everything, score everything, no skipping): uniform doc lengths in
+    even trials force tie-heavy top-ks, so pruning must keep every tie
+    at the k-th score and the doc-asc order.  ``bound_scale`` > 1 is the state after
+    appends: block maxima were encoded with an older, smaller avgdl and
+    the live avgdl is ``bound_scale`` times larger.  Excluded ids
+    (tombstones) never appear and never suppress a surviving doc."""
     rng = np.random.RandomState(5)
-    avgdl = 20.0
-    for trial in range(30):
+    enc_avgdl = 20.0
+    avgdl = enc_avgdl * bound_scale
+    for trial in range(40):
         n_terms = rng.randint(1, 5)
         runs = []
         for _ in range(n_terms):
             nd = rng.randint(1, 120)
             docs = np.unique(rng.randint(0, 400, nd)).astype(np.int64)
             tfs = rng.randint(1, 4, len(docs)).astype(np.int64)
-            dls = np.full(len(docs), 20, dtype=np.int64)  # uniform: ties
+            if trial % 2:
+                dls = rng.randint(2, 80, len(docs)).astype(np.int64)
+            else:
+                dls = np.full(len(docs), 20, dtype=np.int64)  # ties
             blocks, _ = codec.encode_postings(
-                docs, tfs, dls, avgdl, block_size=16
+                docs, tfs, dls, enc_avgdl, block_size=16
             )
-            runs.append((float(rng.uniform(0.5, 3.0)), blocks))
+            runs.append((float(rng.uniform(0.1, 6.0)), blocks))
+        scored = _scored_runs(runs, avgdl)
+        ex = np.unique(rng.randint(0, 400, 60)).astype(np.int64)
         for k in (1, 3, 10, 100):
-            a = wand.wand_topk_local(runs, avgdl, k)
-            b = wand.maxscore_topk_local(runs, avgdl, k)
-            # the two algorithms sum a doc's term scores in different
-            # orders, so scores can differ in the last ulp — and an
-            # ulp at a tie can legally swap doc order.  Compare at the
-            # serving contract's precision: re-sort both by
-            # (round(score, 9) desc, doc asc).
-            norm = lambda r: sorted(  # noqa: E731
-                ((d, round(s, 9)) for d, s in r),
-                key=lambda x: (-x[1], x[0]),
-            )
-            assert norm(a) == norm(b), (trial, k, a[:5], b[:5])
-
-
-def test_maxscore_excluded_tombstones(py_engine):
-    """Excluded ids never appear and never suppress surviving docs."""
-    qb = fixtures.gen_queries()[0][1].encode(GB)
-    terms = sorted(set(py_engine.query_terms(qb)))
-    runs = _mk_runs(py_engine, terms)
-    base = wand.maxscore_topk_local(runs, py_engine.avgdl, 10)
-    assert base
-    ex = np.array(sorted(d for d, _ in base[:3]), dtype=np.int64)
-    got = wand.maxscore_topk_local(
-        runs, py_engine.avgdl, 10, excluded=ex
-    )
-    got_ids = {d for d, _ in got}
-    assert not (got_ids & set(ex.tolist()))
-    # survivors keep their exact scores
-    want = [x for x in wand.maxscore_topk_local(runs, py_engine.avgdl, 13)
-            if x[0] not in set(ex.tolist())][:10]
-    assert [d for d, _ in got] == [d for d, _ in want]
+            for excluded in (None, ex):
+                got = wand.blockmax_topk_local(
+                    runs, avgdl, k, bound_scale=bound_scale,
+                    excluded=excluded,
+                )
+                want = wand.topk_from_scored(scored, k, excluded=excluded)
+                assert got == want, (trial, k, got[:5], want[:5])
 
 
 def test_intersect_vec_equals_conjunctive(py_engine):
-    for qid, query, _ in fixtures.gen_queries():
-        qb = query.encode(GB)
-        terms = sorted(set(py_engine.query_terms(qb)))
-        runs = _mk_runs(py_engine, terms)
-        if len(runs) < len(terms):
-            continue
-        got = wand.intersect_topk_vec(runs, py_engine.avgdl, 10)
-        want = py_engine.search(qb, 10, conjunctive=True)
-        assert [d for d, _ in got] == [d for d, _ in want], f"q={query!r}"
-
-
-def test_intersect_equals_conjunctive(py_engine):
+    """The conjunctive kernel (boolean_topk_scored with only required
+    runs, as the distributed per-shard path calls it) equals the
+    oracle's AND."""
     for qid, query, _ in fixtures.gen_queries():
         qb = query.encode(GB)
         terms = sorted(set(py_engine.query_terms(qb)))
         runs = _mk_runs(py_engine, terms)
         if len(runs) < len(terms):
             continue  # engine-level handling tested in search tests
-        got = wand.intersect_topk_local(runs, py_engine.avgdl, 10)
+        scored = _scored_runs(runs, py_engine.avgdl)
+        got = wand.boolean_topk_scored(scored, [], 10)
         want = py_engine.search(qb, 10, conjunctive=True)
         assert [d for d, _ in got] == [d for d, _ in want], f"q={query!r}"
+        for (_, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, abs=1e-9)
 
 
 # ---------------------------------------------------------------------------

@@ -100,7 +100,7 @@ def test_spark_submit_build_and_query(tmp_path):
 
 
 def test_spark_submit_query_flags(tmp_path):
-    """Second launch-path pass: --distributed --algo maxscore and the
+    """Second launch-path pass: --distributed and the
     --result-cache-root tier through the same spark-submit contract
     (fresh driver JVM, package from --py-files).  Run twice with the
     same cache root: the second invocation is a COLD PROCESS whose
@@ -140,7 +140,7 @@ def test_spark_submit_query_flags(tmp_path):
             [ln for ln in stdout.splitlines() if ln.startswith("{")][-1]
         )
 
-    dist = run_query(["--distributed", "--algo", "maxscore"])
+    dist = run_query(["--distributed"])
     assert len(dist["results"]) > 0
 
     warm = run_query(["--result-cache-root", rcache])

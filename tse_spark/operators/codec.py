@@ -229,18 +229,6 @@ def scan_blocks(blocks: bytes) -> list[BlockRef]:
     return refs
 
 
-def decode_block(blocks: bytes, ref: BlockRef):
-    """-> (doc_ids, tfs, dls) int64 arrays for one block."""
-    g0 = ref.g_off
-    gaps = varint_decode(blocks[g0 : g0 + ref.g_len], ref.count)
-    docs = np.cumsum(gaps) + ref.first_doc
-    t0 = g0 + ref.g_len
-    tfs = varint_decode(blocks[t0 : t0 + ref.t_len], ref.count)
-    d0 = t0 + ref.t_len
-    dls = varint_decode(blocks[d0 : d0 + ref.d_len], ref.count)
-    return docs, tfs, dls
-
-
 def decode_blocks(blocks: bytes, refs: list[BlockRef]):
     """Batch-decode a subset of blocks — (doc_ids, tfs, dls) concatenated.
 

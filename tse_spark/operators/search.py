@@ -5,12 +5,12 @@ Topology (replaces reference Query.cpp:59-82's whole-index-in-RAM map):
   1. broadcast the query terms; filter the postings table on term
      (parquet predicate pushdown — only the query's shard rows are read)
   2. groupBy(shard) + applyInPandas: block-max-pruned vectorized BM25
-     (or conjunctive intersection) per doc-range shard — shards are
+     (wand.blockmax_topk_local), or the conjunctive intersection
+     (wand.boolean_topk_scored), per doc-range shard — shards are
      disjoint doc ranges, so shard-local top-k lists compose exactly.
-     wand.blockmax_topk_local uses the same per-block max-score skip
-     metadata as classic WAND but prunes at block granularity with numpy
-     scoring (the right trade on a Python runtime; the per-posting WAND
-     in wand.wand_topk_local remains as the reference implementation)
+     Pruning uses classic block-max WAND's per-block max-score skip
+     metadata at block granularity with numpy scoring (the right trade
+     on a Python runtime)
   3. global ORDER BY score DESC, doc_id LIMIT k (TakeOrderedAndProject)
 
 ``search_local`` (and its boolean / expanded twins) is the low-latency
@@ -198,7 +198,7 @@ class SearchEngine:
             )
         self._tomb_bc = None
         # >= 1 after appends raise avgdl above the value the block
-        # max-scores were encoded with (see wand.Cursor docstring)
+        # max-scores were encoded with (see wand.blockmax_topk_local)
         self.bound_scale = bound_scale
         # term -> (df, merged doc-ascending blocks blob): ONE bounded
         # LRU for the interactive path, filled lazily by one
@@ -365,7 +365,6 @@ class SearchEngine:
         self, query: str, k: int = 10, conjunctive: bool = False,
         idf_override: dict | None = None,
         avgdl_override: float | None = None,
-        algo: str = "wand",
     ) -> DataFrame:
         """Distributed WAND: per-shard Arrow UDF -> global top-k.
 
@@ -375,7 +374,7 @@ class SearchEngine:
         avgdl) or per-member rankings aren't comparable.  Block-max
         pruning stays sound under an avgdl override by rescaling the
         stored bounds against the member's own encoding avgdl (same
-        law as the append drift correction, wand.Cursor)."""
+        law as the append drift correction, wand.blockmax_topk_local)."""
         terms = self.query_terms(query)
         if not terms:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
@@ -406,13 +405,13 @@ class SearchEngine:
             if conjunctive:
                 if len(runs) < n_terms:
                     return pd.DataFrame({"doc_id": [], "score": []})
-                res = wand_mod.intersect_topk_vec(runs, avgdl, k, ex)
-            elif algo == "maxscore":
-                # second dynamic-pruning algorithm; exact under the
-                # same scoring, must return identical results to wand
-                res = wand_mod.maxscore_topk_local(
-                    runs, avgdl, k, bound_scale=bscale, excluded=ex
-                )
+                scored = []
+                for i, b in runs:
+                    d, tf, dl = codec.decode_all(b)
+                    scored.append(
+                        (d, wand_mod._score_arrays(i, tf, dl, avgdl))
+                    )
+                res = wand_mod.boolean_topk_scored(scored, [], k, ex)
             else:
                 res = wand_mod.blockmax_topk_local(
                     runs, avgdl, k, bound_scale=bscale, excluded=ex
@@ -861,12 +860,10 @@ class SearchEngine:
         LRU; a cache miss decodes the term's merged blob and scores it
         ONCE with this engine's fixed (idf, avgdl).  Tombstoned docs are
         dropped AT CACHE FILL, so every scored-cache consumer
-        (search_local, boolean/expanded local, intersect/synmax) serves
+        (search_local, boolean/expanded local, synmax) serves
         only surviving docs with zero per-query masking cost; the
         engine's tombstone set is fixed for its lifetime (delete_docs
         returns a fresh handle), so cached entries never go stale."""
-        from tse_spark.operators import codec
-
         out: dict[str, tuple] = {}
         for t in terms:
             arrs = self._decoded_cache.get(t)
@@ -932,10 +929,7 @@ class SearchEngine:
         decoded = self._decoded_runs(present, entries)
         runs = [decoded[t] for t in present]
         if conjunctive:
-            if len(runs) < len(terms):
-                out: list[tuple[int, float]] = []
-            else:
-                out = wand_mod.intersect_topk_scored(runs, k)
+            out = wand_mod.boolean_topk_scored(runs, [], k)
         else:
             # addends were scored exactly with the LIVE avgdl at cache
             # fill — no block-max pruning on this path, so no

@@ -1,300 +1,34 @@
-"""Block-max WAND top-k BM25 over compressed posting blocks.
+"""Top-k BM25 kernels over posting runs.
 
 The query-time operators the reference lacks (index/Query.cpp:265-382
-scores *every* matching doc): WAND pivoting with per-block max-score
-skip pointers (north_star), plus a galloping conjunctive intersection
-(Q7's AND, reference Query.cpp:349-372, done right).
+scores *every* matching doc).  Four kernels serve every query path:
 
-``wand_topk_local`` runs over one doc-range shard's term runs inside an
-Arrow UDF (see search.py); shards cover disjoint doc-id ranges, so
-global top-k = top-k of the union of shard top-ks.
+- :func:`blockmax_topk_local` — block-max pruned, numpy-vectorized
+  disjunctive top-k over one doc-range shard's compressed term runs,
+  inside the Arrow UDF of distributed ``SearchEngine.search`` (see
+  search.py).  Shards cover disjoint doc-id ranges, so global top-k =
+  top-k of the union of shard top-ks.
+- :func:`topk_from_scored` — disjunctive top-k over pre-scored runs:
+  the interactive, expanded, facet-filtered and federated paths.
+- :func:`boolean_topk_scored` — ``+required`` / optional / excluded
+  top-k over pre-scored runs.  With only required runs it is the
+  conjunctive AND (reference Query.cpp:349-372), so every conjunctive
+  path, local and distributed, goes through it.
+- :func:`synmax_run` — folds a synonym group into one pseudo-run.
 
 Correctness contract: identical (doc_id, score) top-k — including
-score-desc/doc-asc tie order — to exhaustive scoring.  Pruning uses
-strict ``sum-of-upper-bounds < threshold`` so equal-score candidates
-are never dropped (upper bounds are exact maxima, so ub < θ implies
-score < θ).
+score-desc/doc-asc tie order — to exhaustive scoring.  Every selection
+keeps all ties at the k-th score before the final sort, and pruning
+uses strict ``upper bound < threshold`` so equal-score candidates are
+never dropped.
 """
 
 from __future__ import annotations
-
-import heapq
-from bisect import bisect_left
 
 import numpy as np
 
 from tse_spark import oracle
 from tse_spark.operators import codec
-
-_INF = (1 << 62)
-
-
-class Cursor:
-    """Posting cursor with block skip pointers over one term's blocks."""
-
-    __slots__ = (
-        "blocks", "refs", "idf", "avgdl", "term_max", "last_docs",
-        "bi", "i", "docs", "tfs", "dls", "exhausted", "bound_scale",
-    )
-
-    def __init__(
-        self,
-        blocks: bytes,
-        idf: float,
-        avgdl: float,
-        bound_scale: float = 1.0,
-    ):
-        # bound_scale >= 1 corrects stored block max-scores encoded with
-        # an OLDER (smaller) avgdl: the idf-free BM25 component is
-        # increasing in avgdl and its ratio is bounded by
-        # avgdl_now/avgdl_enc, so scaling the stored bound keeps pruning
-        # sound after index appends shift the corpus average doc length.
-        self.blocks = blocks
-        self.refs = codec.scan_blocks(blocks)
-        self.idf = idf
-        self.avgdl = avgdl
-        self.bound_scale = bound_scale
-        self.last_docs = [r.last_doc for r in self.refs]
-        self.term_max = idf * bound_scale * max(
-            (r.max_score for r in self.refs), default=0.0
-        )
-        self.exhausted = not self.refs
-        self.bi = -1
-        self.i = 0
-        if not self.exhausted:
-            self._load(0)
-
-    def _load(self, bi: int) -> None:
-        self.bi = bi
-        self.docs, self.tfs, self.dls = codec.decode_block(
-            self.blocks, self.refs[bi]
-        )
-        self.i = 0
-
-    @property
-    def doc(self) -> int:
-        return _INF if self.exhausted else int(self.docs[self.i])
-
-    def block_max(self) -> float:
-        if self.exhausted:
-            return 0.0
-        return self.idf * self.bound_scale * self.refs[self.bi].max_score
-
-    def block_last(self) -> int:
-        return _INF if self.exhausted else self.refs[self.bi].last_doc
-
-    def score(self) -> float:
-        tf = float(self.tfs[self.i])
-        dl = float(self.dls[self.i])
-        k1, b = oracle.BM25_K1, oracle.BM25_B
-        return (
-            self.idf
-            * tf
-            * (k1 + 1.0)
-            / (tf + k1 * (1.0 - b + b * dl / self.avgdl))
-        )
-
-    def advance(self) -> None:
-        if self.exhausted:
-            return
-        self.i += 1
-        if self.i >= len(self.docs):
-            if self.bi + 1 < len(self.refs):
-                self._load(self.bi + 1)
-            else:
-                self.exhausted = True
-
-    def seek(self, target: int) -> None:
-        """Advance to the first doc >= target (block skip + in-block
-        binary search)."""
-        if self.exhausted or self.doc >= target:
-            return
-        if self.refs[self.bi].last_doc < target:
-            bi = bisect_left(self.last_docs, target, lo=self.bi + 1)
-            if bi >= len(self.refs):
-                self.exhausted = True
-                return
-            self._load(bi)
-        self.i = int(np.searchsorted(self.docs, target, side="left"))
-        # last_doc >= target guarantees i is in range
-        assert self.i < len(self.docs)
-
-
-class _TopK:
-    """Min-heap of (score, -doc_id): keeps the k best under score-desc /
-    doc-asc ordering."""
-
-    def __init__(self, k: int):
-        self.k = k
-        self.h: list[tuple[float, int]] = []
-
-    def offer(self, doc: int, score: float) -> None:
-        item = (score, -doc)
-        if len(self.h) < self.k:
-            heapq.heappush(self.h, item)
-        elif item > self.h[0]:
-            heapq.heapreplace(self.h, item)
-
-    def threshold(self) -> float:
-        return self.h[0][0] if len(self.h) >= self.k else float("-inf")
-
-    def result(self) -> list[tuple[int, float]]:
-        return [(-nd, s) for s, nd in sorted(self.h, key=lambda x: (-x[0], -x[1]))]
-
-
-def wand_topk_local(
-    term_runs: list[tuple[float, bytes]],
-    avgdl: float,
-    k: int,
-    initial_threshold: float = float("-inf"),
-    bound_scale: float = 1.0,
-) -> list[tuple[int, float]]:
-    """Block-max WAND over one shard.  ``term_runs`` = [(idf, blocks)].
-
-    Returns up to k (doc_id, score) pairs, score desc / doc asc.
-    """
-    cursors = [
-        Cursor(blocks, idf, avgdl, bound_scale)
-        for idf, blocks in term_runs
-        if blocks
-    ]
-    cursors = [c for c in cursors if not c.exhausted]
-    top = _TopK(k)
-    theta = initial_threshold
-
-    while cursors:
-        cursors.sort(key=lambda c: c.doc)
-        theta = max(theta, top.threshold())
-        # pivot: smallest p with cumulative term upper bound >= theta
-        cum = 0.0
-        pivot = -1
-        for p, c in enumerate(cursors):
-            cum += c.term_max
-            if cum >= theta:
-                pivot = p
-                break
-        if pivot < 0:
-            break
-        pivot_doc = cursors[pivot].doc
-        if pivot_doc >= _INF:
-            break
-        if cursors[0].doc == pivot_doc:
-            # cursors[0..pivot] sit on pivot_doc; cursors beyond the
-            # pivot may ALSO sit on it (sorted ties) — they contribute
-            # to the score, so they must be inside the block-max bound
-            # or pruning would use an under-estimate.
-            j = pivot
-            while j + 1 < len(cursors) and cursors[j + 1].doc == pivot_doc:
-                j += 1
-            bm = sum(c.block_max() for c in cursors[: j + 1])
-            if bm >= theta:
-                score = 0.0
-                for c in cursors:
-                    if c.doc == pivot_doc:
-                        score += c.score()
-                        c.advance()
-                    else:
-                        break
-                top.offer(pivot_doc, score)
-            else:
-                # block-max skip: jump past the nearest block boundary,
-                # CAPPED at the next cursor's doc — beyond it the skipped
-                # region could co-occur with that term and beat theta
-                # (Ding & Suel BMW GetNewCandidateDID)
-                d = min(c.block_last() for c in cursors[: j + 1]) + 1
-                if j + 1 < len(cursors):
-                    d = min(d, cursors[j + 1].doc)
-                d = max(d, pivot_doc + 1)
-                for c in cursors[: j + 1]:
-                    c.seek(d)
-        else:
-            for c in cursors[:pivot]:
-                c.seek(pivot_doc)
-        cursors = [c for c in cursors if not c.exhausted]
-
-    return top.result()
-
-
-def maxscore_topk_local(
-    term_runs: list[tuple[float, bytes]],
-    avgdl: float,
-    k: int,
-    initial_threshold: float = float("-inf"),
-    bound_scale: float = 1.0,
-    excluded: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """MaxScore (Turtle & Flood 1995) top-k BM25 over one shard — the
-    second classic dynamic-pruning algorithm next to WAND, exact under
-    the same scoring, so the two must return IDENTICAL results
-    (including doc-asc tie-breaks) on any input: a strong cross-check
-    of both pruning soundness proofs, pinned in tests and by the
-    ``maxscore_topk`` driver query sharing wand_topk's oracle.
-
-    Terms sort by upper bound ascending; the low-bound prefix whose
-    cumulative bound is < theta is NON-ESSENTIAL — a doc appearing
-    only there cannot make the top-k, so candidates are generated DAAT
-    from the essential lists alone, and non-essential terms are probed
-    per-candidate in descending-bound order with early abandonment.
-    All pruning comparisons are STRICT (<) so a candidate that ties
-    theta is still evaluated — it can win the k-th slot on doc-asc
-    order, which keeps MaxScore bit-identical to exhaustive scoring.
-
-    ``excluded`` (sorted unique tombstoned ids) are never offered;
-    their cursors advance normally so pruning state stays consistent.
-    """
-    cursors = [
-        Cursor(blocks, idf, avgdl, bound_scale)
-        for idf, blocks in term_runs
-        if blocks
-    ]
-    cursors = [c for c in cursors if not c.exhausted]
-    if not cursors:
-        return []
-    cursors.sort(key=lambda c: c.term_max)
-    prefix = []
-    acc = 0.0
-    for c in cursors:
-        acc += c.term_max
-        prefix.append(acc)
-    top = _TopK(k)
-    theta = initial_threshold
-    ess = 0  # cursors[ess:] are the essential lists
-
-    def is_excluded(d: int) -> bool:
-        if excluded is None or not len(excluded):
-            return False
-        i = int(np.searchsorted(excluded, d))
-        return i < len(excluded) and int(excluded[i]) == d
-
-    while ess < len(cursors):
-        d = _INF
-        for c in cursors[ess:]:
-            if not c.exhausted and c.doc < d:
-                d = c.doc
-        if d >= _INF:
-            break
-        score = 0.0
-        for c in cursors[ess:]:
-            if not c.exhausted and c.doc == d:
-                score += c.score()
-                c.advance()
-        # probe non-essential terms, highest bound first, abandoning
-        # as soon as even all remaining bounds cannot REACH theta
-        abandoned = False
-        for j in range(ess - 1, -1, -1):
-            if score + prefix[j] < theta:
-                abandoned = True
-                break
-            c = cursors[j]
-            c.seek(d)
-            if not c.exhausted and c.doc == d:
-                score += c.score()
-        if not abandoned and not is_excluded(d):
-            top.offer(d, score)
-            theta = max(theta, top.threshold())
-            while ess < len(cursors) and prefix[ess] < theta:
-                ess += 1
-    return top.result()
 
 
 def _score_arrays(idf, tfs, dls, avgdl):
@@ -305,6 +39,22 @@ def _score_arrays(idf, tfs, dls, avgdl):
     )
 
 
+def _top_k(
+    docs: np.ndarray, scores: np.ndarray, k: int
+) -> list[tuple[int, float]]:
+    """The k best ``(doc, score)`` of unique ``docs``, score desc / doc
+    asc: partition to the k-th score, keep every doc tied with it (the
+    doc-asc tie-break decides among them), sort only the survivors."""
+    if len(docs) > k:
+        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+        sel = scores >= kth
+        docs, scores = docs[sel], scores[sel]
+    cand = sorted(
+        zip(docs.tolist(), scores.tolist()), key=lambda x: (-x[1], x[0])
+    )
+    return cand[:k]
+
+
 def blockmax_topk_local(
     term_runs: list[tuple[float, bytes]],
     avgdl: float,
@@ -313,6 +63,7 @@ def blockmax_topk_local(
     excluded: np.ndarray | None = None,
 ) -> list[tuple[int, float]]:
     """Block-max pruned, numpy-vectorized top-k BM25 over one shard.
+    ``term_runs`` = [(idf, blocks)].
 
     ``excluded`` (sorted unique doc ids — tombstones from
     plans/delete.py) masks decoded postings BEFORE theta seeding and
@@ -322,11 +73,12 @@ def blockmax_topk_local(
     compaction re-encodes — still valid upper bounds for the masked
     set, so pruning stays sound (merely a little conservative).
 
-    Same skip metadata as :func:`wand_topk_local`, applied at BLOCK
-    granularity with vectorized scoring — on a Python runtime the
-    per-posting WAND loop costs ~1000x more per posting than a numpy
-    pass, so decoding whole surviving blocks and aggregating with
-    bincount wins unless pruning skips >99.9% of postings.
+    Uses the per-block max-score skip metadata of classic block-max
+    WAND (Ding & Suel), applied at BLOCK granularity with vectorized
+    scoring — on a Python runtime a per-posting cursor loop costs ~1000x
+    more per posting than a numpy pass, so decoding whole surviving
+    blocks and aggregating with bincount wins unless pruning skips
+    >99.9% of postings.
 
     Soundness of the pruning: theta is seeded with the k-th best
     single-term score of the highest-upper-bound term (every doc's
@@ -335,7 +87,19 @@ def blockmax_topk_local(
     ``idf_t * block_max + sum(other terms' maxima) < theta``; any doc in
     it has total < theta, so it is outside the true top-k, and its
     partial score (missing t's contribution) is also < theta, so it
-    cannot displace a true top-k member either.
+    cannot displace a true top-k member either.  With this single-term
+    seed the rule never fires, though: each other term's bound includes
+    the seed term's maximum, which is >= theta, so every block is
+    decoded.  A skip that pays needs a theta from multi-term totals.
+
+    ``bound_scale`` >= 1 corrects stored block max-scores encoded with
+    an OLDER, smaller avgdl: appends raise the live avgdl above the
+    build's ``enc_avgdl`` (plans/append.py), and a federation avgdl
+    override can do the same (plans/federate.py).  The idf-free BM25
+    component ``tf(k1+1) / (tf + k1(1 - b + b*dl/avgdl))`` is increasing
+    in avgdl, and its ratio between the live and the encoding avgdl is
+    at most ``avgdl_now / avgdl_enc``; scaling every stored bound by
+    that ratio keeps it an upper bound, so pruning stays sound.
     """
     runs = []
     for idf, blocks in term_runs:
@@ -389,17 +153,7 @@ def blockmax_topk_local(
     docs = np.concatenate(doc_parts)
     scores = np.concatenate(score_parts)
     uniq, inv = np.unique(docs, return_inverse=True)
-    agg = np.bincount(inv, weights=scores)
-    if len(uniq) > k:
-        kth = np.partition(agg, len(agg) - k)[len(agg) - k]
-        idx = np.flatnonzero(agg >= kth)  # all ties at the k-th score
-    else:
-        idx = np.arange(len(uniq))
-    cand = sorted(
-        ((int(uniq[i]), float(agg[i])) for i in idx),
-        key=lambda x: (-x[1], x[0]),
-    )
-    return cand[:k]
+    return _top_k(uniq, np.bincount(inv, weights=scores), k)
 
 
 def topk_from_scored(
@@ -451,41 +205,7 @@ def topk_from_scored(
         if excluded is not None and len(excluded) and len(pos):
             m = ~_in_sorted(pos, excluded)
             pos, vals = pos[m], vals[m]
-    if len(pos) > k:
-        kth = np.partition(vals, len(vals) - k)[len(vals) - k]
-        sel = vals >= kth  # keep ties at the k-th score
-        pos, vals = pos[sel], vals[sel]
-    cand = sorted(
-        zip(pos.tolist(), vals.tolist()), key=lambda x: (-x[1], x[0])
-    )
-    return [(int(d), float(s)) for d, s in cand[:k]]
-
-
-def intersect_topk_scored(
-    runs: list[tuple[np.ndarray, np.ndarray]],
-    k: int,
-) -> list[tuple[int, float]]:
-    """Conjunctive AND over pre-scored arrays (doc-ascending, unique per
-    term): intersect smallest-first, gather the survivors' cached
-    addends — the scored-cache twin of :func:`intersect_topk_vec`."""
-    if not runs:
-        return []
-    decoded = sorted(runs, key=lambda x: len(x[0]))
-    if len(decoded[0][0]) == 0:
-        return []
-    common = decoded[0][0]
-    for d, _ in decoded[1:]:
-        common = common[np.isin(common, d, assume_unique=True)]
-        if len(common) == 0:
-            return []
-    total = np.zeros(len(common), dtype=np.float64)
-    for d, s in decoded:
-        pos = np.searchsorted(d, common)
-        total += s[pos]
-    order = sorted(
-        zip(common.tolist(), total.tolist()), key=lambda x: (-x[1], x[0])
-    )
-    return [(int(d), float(s)) for d, s in order[:k]]
+    return _top_k(pos, vals, k)
 
 
 def _in_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -508,62 +228,40 @@ def boolean_topk_scored(
     """Web-style boolean top-k over pre-scored posting runs: docs must
     match ALL ``required`` runs and NONE of ``excluded_docs``; score is
     the disjunctive BM25 sum over required + optional runs (a required
-    term both gates and scores — classic ``+term`` semantics).
+    term both gates and scores — classic ``+term`` semantics).  With
+    ``optional`` empty this is the conjunctive AND.
 
     Runs are ``(docs asc unique, scores)`` pairs — either the engine's
     scored-posting cache entries or per-shard arrays scored at decode.
-    Exclusion is applied BEFORE top-k selection (an excluded doc must
-    not displace a kept one), as a searchsorted membership mask against
-    the sorted excluded doc array — no hash sets, no Python loops over
-    postings.  With no required runs this degrades to disjunctive
-    scoring with an exclusion mask; with neither exclusions nor
-    required runs use :func:`topk_from_scored` (dense bincount) instead.
+    The intersection starts from the shortest required run and keeps
+    its survivors by one binary search into each longer run (the
+    ``searchsorted`` membership mask of :func:`_in_sorted`), so its cost
+    follows the shortest list, not the longest.  Exclusion is applied
+    BEFORE top-k selection (an excluded doc must not displace a kept
+    one) by the same mask against the sorted excluded doc array.  With
+    no required runs this is :func:`topk_from_scored` with an exclusion
+    mask.
     """
-    if excluded_docs is not None and len(excluded_docs) == 0:
-        excluded_docs = None
-    if required:
-        runs = sorted(required, key=lambda x: len(x[0]))
-        common = runs[0][0]
-        if excluded_docs is not None:
-            common = common[~_in_sorted(common, excluded_docs)]
-        for d, _ in runs[1:]:
-            common = common[_in_sorted(common, d)]
-            if len(common) == 0:
-                return []
+    if not required:
+        return topk_from_scored(optional, k, excluded=excluded_docs)
+    runs = sorted(required, key=lambda x: len(x[0]))
+    common = runs[0][0]
+    if excluded_docs is not None and len(excluded_docs):
+        common = common[~_in_sorted(common, excluded_docs)]
+    for d, _ in runs[1:]:
         if len(common) == 0:
-            return []
-        total = np.zeros(len(common), dtype=np.float64)
-        for d, s in required:
-            total += s[np.searchsorted(d, common)]
-        for d, s in optional:
-            m = _in_sorted(common, d)
-            if m.any():
-                total[m] += s[np.searchsorted(d, common[m])]
-        pos, vals = common, total
-    else:
-        doc_parts, score_parts = [], []
-        for d, s in optional:
-            if excluded_docs is not None:
-                keep = ~_in_sorted(d, excluded_docs)
-                d, s = d[keep], s[keep]
-            if len(d):
-                doc_parts.append(d)
-                score_parts.append(s)
-        if not doc_parts:
-            return []
-        docs = np.concatenate(doc_parts)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        pos, vals = uniq, np.bincount(
-            inv, weights=np.concatenate(score_parts)
-        )
-    if len(pos) > k:
-        kth = np.partition(vals, len(vals) - k)[len(vals) - k]
-        sel = vals >= kth  # keep ties at the k-th score
-        pos, vals = pos[sel], vals[sel]
-    order = sorted(
-        zip(pos.tolist(), vals.tolist()), key=lambda x: (-x[1], x[0])
-    )
-    return [(int(d), float(s)) for d, s in order[:k]]
+            break
+        common = common[_in_sorted(common, d)]
+    if len(common) == 0:
+        return []
+    total = np.zeros(len(common), dtype=np.float64)
+    for d, s in required:
+        total += s[np.searchsorted(d, common)]
+    for d, s in optional:
+        m = _in_sorted(common, d)
+        if m.any():
+            total[m] += s[np.searchsorted(d, common[m])]
+    return _top_k(common, total, k)
 
 
 def synmax_run(
@@ -584,74 +282,3 @@ def synmax_run(
         pos = np.searchsorted(u, d)
         np.maximum.at(vals, pos, s)
     return u, vals
-
-
-def intersect_topk_vec(
-    term_runs: list[tuple[float, bytes]],
-    avgdl: float,
-    k: int,
-    excluded: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """Vectorized conjunctive AND: intersect doc arrays term-by-term
-    (smallest first), then score only the surviving docs.  ``excluded``
-    (sorted unique tombstoned doc ids) is masked out of the
-    intersection before scoring."""
-    if not term_runs:
-        return []
-    decoded = []
-    for idf, blocks in term_runs:
-        d, t, dl = codec.decode_all(blocks)
-        if len(d) == 0:
-            return []
-        decoded.append((idf, d, t, dl))
-    decoded.sort(key=lambda x: len(x[1]))
-    common = decoded[0][1]
-    for _, d, _, _ in decoded[1:]:
-        common = common[np.isin(common, d, assume_unique=True)]
-        if len(common) == 0:
-            return []
-    if excluded is not None and len(excluded) and len(common):
-        common = common[~_in_sorted(common, excluded)]
-        if len(common) == 0:
-            return []
-    total = np.zeros(len(common), dtype=np.float64)
-    for idf, d, t, dl in decoded:
-        pos = np.searchsorted(d, common)
-        total += _score_arrays(idf, t[pos], dl[pos], avgdl)
-    order = sorted(
-        zip(common.tolist(), total.tolist()), key=lambda x: (-x[1], x[0])
-    )
-    return order[:k]
-
-
-def intersect_topk_local(
-    term_runs: list[tuple[float, bytes]],
-    avgdl: float,
-    k: int,
-) -> list[tuple[int, float]]:
-    """Conjunctive AND (reference Q7) with galloping cursor alignment;
-    scores BM25 over the intersection.  Returns k best (doc, score)."""
-    if not term_runs:
-        return []
-    cursors = [Cursor(blocks, idf, avgdl) for idf, blocks in term_runs]
-    if any(c.exhausted for c in cursors):
-        return []
-    top = _TopK(k)
-    while True:
-        target = max(c.doc for c in cursors)
-        if target >= _INF:
-            break
-        aligned = True
-        for c in cursors:
-            c.seek(target)
-            if c.exhausted:
-                return top.result()
-            if c.doc != target:
-                aligned = False
-        if aligned:
-            top.offer(target, sum(c.score() for c in cursors))
-            for c in cursors:
-                c.advance()
-            if any(c.exhausted for c in cursors):
-                break
-    return top.result()

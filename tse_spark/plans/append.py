@@ -15,7 +15,7 @@ This plan appends like an Iceberg table append (north_star S1):
 3. delta blocks are encoded with the ORIGINAL build's ``enc_avgdl`` so
    every block's max-score metadata shares one reference avgdl; the live
    avgdl moves in meta.json and the engine scales pruning bounds by
-   ``max(1, avgdl/enc_avgdl)`` (sound — see wand.Cursor);
+   ``max(1, avgdl/enc_avgdl)`` (sound — see wand.blockmax_topk_local);
 4. term_stats is recomputed from the full postings set (tiny: one row
    per (term, shard)) into a VERSIONED directory, and meta.json gets the
    merged n_docs / weighted avgdl / new max_doc_id / new dir lists.

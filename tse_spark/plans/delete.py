@@ -20,7 +20,7 @@ wait for a rebuild, so this is new surface, designed Iceberg-style:
    facet-filtered serving, so the masked top-k is exactly the full
    ranking with tombstoned docs removed (oracle-expressible, and an
    excluded doc can never displace a survivor: masks apply before
-   every top-k selection, wand.blockmax_topk_local et al.).
+   every top-k selection in wand.py's serving kernels).
 3. ``compact_index`` (plans/compact.py) folds tombstones physically:
    postings re-encode without the deleted ids, the docs table drops
    them, term_stats/df recompute, and n_docs/avgdl become EXACT again
