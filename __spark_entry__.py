@@ -1055,8 +1055,9 @@ def _q_wand_merged(spark, sf):
 
 
 def _q_wand_topk(spark, sf):
-    """Block-max WAND over delta-gap varint posting shards; must equal
-    the exhaustive SQL BM25 (same oracle as bm25_topk)."""
+    """Distributed per-shard top-k over delta-gap varint posting
+    shards; must equal the exhaustive SQL BM25 (same oracle as
+    bm25_topk)."""
     h = _ws_index(spark, sf)
     out = h.engine.search(" ".join(BM25_QUERY), K)
     return out.select("doc_id", F.round("score", 4).alias("score"))
@@ -1162,7 +1163,7 @@ def _ws_pruned_index(spark, sf):
 
 
 def _q_wand_pruned_topk(spark, sf):
-    """Block-max WAND over the impact-PRUNED compressed index: per-term
+    """Per-shard top-k over the impact-PRUNED compressed index: per-term
     top-PRUNE_M postings by full-stats BM25 impact, df recomputed from
     what survived (the index's own stats — both serving paths read df
     from the shards/term_stats, so the pruned index is self-consistent),

@@ -12,7 +12,7 @@ stdout line is always the most complete result:
    warmup covers both, repeated up to SPARK_GRAFT_SCALE_REPS times with
    per-level minima) -> docs/sec at both + scaling efficiency
    T_N*N / (T_4N*4N), with per-leg hypervisor steal evidence.
-2. **BM25 serving latency**: block-max WAND over the compressed shards
+2. **BM25 serving latency**: top-k BM25 over the compressed shards
    built in phase 1, p50/p95 over the reference query set.  Also
    measures a FRESH replica's first-touch latency with the
    cross-process shared posting cache attached (replica_cold_p50_ms)
@@ -911,8 +911,8 @@ def run_headline(spark) -> None:
 
 
 def _measure_serving(h) -> dict:
-    """p50/p95 of block-max WAND top-10 over the reference query set
-    (search_local: one pruned collect + in-process WAND — the
+    """p50/p95 of BM25 top-10 over the reference query set
+    (search_local: one pruned collect + in-process top-k — the
     interactive path); cold pass includes the posting fetch."""
     from tse_spark import fixtures
 
@@ -1010,7 +1010,7 @@ def serving_large_docs() -> int:
 
 def run_serving_large(spark, n_docs: int) -> None:
     """Serving latency at a larger corpus (VERDICT r02 #6): the pruned
-    posting fetch + block-max WAND should be near-flat in corpus size
+    posting fetch + top-k should be near-flat in corpus size
     (per-query work scales with the query terms' dfs, not n_docs) —
     150k docs cannot show that; millions can."""
     from tse_spark import fixtures

@@ -5,7 +5,7 @@ No existing posting or docs file is read, merged, or rewritten — the
 append writes only new parquet files (new doc-range shards) plus a
 refreshed term_stats and meta.json, so it costs O(delta), not
 O(index).  See tse_spark/plans/append.py for the shard-boundary id
-assignment and the block-max bound correction under avgdl drift.
+assignment.
 
     python -m zipfile -c /tmp/tse_spark.zip tse_spark
     spark-submit --py-files /tmp/tse_spark.zip scripts/append_index.py \
@@ -64,7 +64,6 @@ def main(argv: list[str] | None = None) -> int:
             {
                 "n_docs": handle.n_docs,
                 "avgdl": round(handle.avgdl, 4),
-                "bound_scale": round(handle.engine.bound_scale, 6),
                 "seconds": round(time.time() - t0, 3),
             }
         )

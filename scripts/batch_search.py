@@ -45,6 +45,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--metrics-out", default=None)
     ap.add_argument("--dict", default=None)
     args = ap.parse_args(argv)
+    if args.k < 1:
+        ap.error("--k must be >= 1")
 
     from pyspark.sql import SparkSession
 

@@ -53,7 +53,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--distributed", action="store_true",
-        help="score with the per-shard WAND job instead of the "
+        help="score with the per-shard Spark job instead of the "
         "low-latency driver path",
     )
     ap.add_argument(
@@ -109,6 +109,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args(argv)
+    if args.k < 1:
+        ap.error("--k must be >= 1")
     if args.queries_file:
         with open(args.queries_file, encoding="utf-8") as f:
             args.queries += [q.strip() for q in f if q.strip()]

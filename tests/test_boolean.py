@@ -201,6 +201,9 @@ def test_cli_boolean_mode(spark, ws_handle, capsys):
     res = json.loads(lines[-1])
     want = ws_handle.engine.search_boolean_local("spark data +join -slow", 5)
     assert res["results"] == [[d, round(s, 4)] for d, s in want]
+    # a non-positive k is an argument error, not a kernel crash
+    with pytest.raises(SystemExit):
+        query_index.main(["--index", idx_dir, "--k", "0", "spark"])
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Codec roundtrip, sharded posting build, block-max top-k vs exhaustive
+"""Codec roundtrip, sharded posting build, top-k kernels vs exhaustive
 scoring, and checkpoint-resume semantics."""
 
 import numpy as np
@@ -71,7 +71,7 @@ def test_block_roundtrip_and_skip_metadata():
 
 
 # ---------------------------------------------------------------------------
-# block-max top-k == exhaustive on a pure-python corpus
+# top-k kernels == exhaustive on a pure-python corpus
 # ---------------------------------------------------------------------------
 
 def _mk_runs(eng: oracle.BM25Oracle, terms):
@@ -116,21 +116,6 @@ def py_engine():
     return oracle.BM25Oracle(docs, fixtures.mini_dict_bytes())
 
 
-@pytest.mark.parametrize("k", [1, 5, 10, 50])
-def test_blockmax_vectorized_equals_exhaustive(py_engine, k):
-    """The serving-path scorer (block-granular pruning + numpy scoring)
-    must reproduce exhaustive BM25 exactly."""
-    for qid, query, _ in fixtures.gen_queries():
-        qb = query.encode(GB)
-        terms = sorted(set(py_engine.query_terms(qb)))
-        runs = _mk_runs(py_engine, terms)
-        got = wand.blockmax_topk_local(runs, py_engine.avgdl, k)
-        want = py_engine.search(qb, k)
-        assert [d for d, _ in got] == [d for d, _ in want], f"q={query!r} k={k}"
-        for (_, gs), (_, ws) in zip(got, want):
-            assert gs == pytest.approx(ws, abs=1e-9)
-
-
 def _scored_runs(runs, avgdl):
     """Decode and score every posting of ``[(idf, blocks)]``."""
     out = []
@@ -140,18 +125,51 @@ def _scored_runs(runs, avgdl):
     return out
 
 
-@pytest.mark.parametrize("bound_scale", [1.0, 1.6])
-def test_blockmax_equals_exhaustive_random_postings(bound_scale):
-    """Adversarial synthetic runs against the unpruned reference (decode
-    everything, score everything, no skipping): uniform doc lengths in
-    even trials force tie-heavy top-ks, so pruning must keep every tie
-    at the k-th score and the doc-asc order.  ``bound_scale`` > 1 is the state after
-    appends: block maxima were encoded with an older, smaller avgdl and
-    the live avgdl is ``bound_scale`` times larger.  Excluded ids
-    (tombstones) never appear and never suppress a surviving doc."""
+@pytest.mark.parametrize("k", [1, 5, 10, 50])
+def test_blockmax_vectorized_equals_exhaustive(py_engine, k):
+    """The per-shard disjunctive law of distributed ``search()``: decode
+    every block, score with numpy, select with ``topk_from_scored`` —
+    must reproduce exhaustive BM25 exactly."""
+    for qid, query, _ in fixtures.gen_queries():
+        qb = query.encode(GB)
+        terms = sorted(set(py_engine.query_terms(qb)))
+        scored = _scored_runs(_mk_runs(py_engine, terms), py_engine.avgdl)
+        got = wand.topk_from_scored(scored, k)
+        want = py_engine.search(qb, k)
+        assert [d for d, _ in got] == [d for d, _ in want], f"q={query!r} k={k}"
+        for (_, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, abs=1e-9)
+
+
+def _reference_topk(required, optional, k, excluded):
+    """Pure-Python top-k: per-doc dict sum over all runs in run order,
+    docs outside any required run or inside ``excluded`` dropped,
+    sorted by (-score, doc)."""
+    acc = {}
+    for d, s in required + optional:
+        for doc, score in zip(d.tolist(), s.tolist()):
+            acc[doc] = acc.get(doc, 0.0) + score
+    keep = set(acc)
+    for d, _ in required:
+        keep &= set(d.tolist())
+    keep -= set(excluded.tolist()) if excluded is not None else set()
+    ranked = sorted(
+        ((doc, acc[doc]) for doc in keep), key=lambda x: (-x[1], x[0])
+    )
+    return ranked[: max(k, 0)]
+
+
+def test_blockmax_equals_exhaustive_random_postings():
+    """Adversarial synthetic runs against a pure-Python reference:
+    uniform doc lengths in even trials force tie-heavy top-ks, so
+    selection must keep every tie at the k-th score and the doc-asc
+    order.  Pins ``topk_from_scored`` on its unique-based branch (the
+    per-shard path) and its dense ``n_docs`` branch, and
+    ``boolean_topk_scored`` with and without a required run.  Excluded
+    ids (tombstones) never appear and never suppress a surviving doc;
+    ``k = 0`` selects nothing."""
     rng = np.random.RandomState(5)
-    enc_avgdl = 20.0
-    avgdl = enc_avgdl * bound_scale
+    avgdl = 20.0
     for trial in range(40):
         n_terms = rng.randint(1, 5)
         runs = []
@@ -164,19 +182,29 @@ def test_blockmax_equals_exhaustive_random_postings(bound_scale):
             else:
                 dls = np.full(len(docs), 20, dtype=np.int64)  # ties
             blocks, _ = codec.encode_postings(
-                docs, tfs, dls, enc_avgdl, block_size=16
+                docs, tfs, dls, avgdl, block_size=16
             )
             runs.append((float(rng.uniform(0.1, 6.0)), blocks))
         scored = _scored_runs(runs, avgdl)
         ex = np.unique(rng.randint(0, 400, 60)).astype(np.int64)
-        for k in (1, 3, 10, 100):
+        for k in (0, 1, 3, 10, 100):
             for excluded in (None, ex):
-                got = wand.blockmax_topk_local(
-                    runs, avgdl, k, bound_scale=bound_scale,
-                    excluded=excluded,
+                want = _reference_topk([], scored, k, excluded)
+                assert wand.topk_from_scored(
+                    scored, k, excluded=excluded
+                ) == want, (trial, k)
+                assert wand.topk_from_scored(
+                    scored, k, n_docs=400, excluded=excluded
+                ) == want, (trial, k)
+                assert wand.boolean_topk_scored(
+                    [], scored, k, excluded
+                ) == want, (trial, k)
+                want_req = _reference_topk(
+                    scored[:1], scored[1:], k, excluded
                 )
-                want = wand.topk_from_scored(scored, k, excluded=excluded)
-                assert got == want, (trial, k, got[:5], want[:5])
+                assert wand.boolean_topk_scored(
+                    scored[:1], scored[1:], k, excluded
+                ) == want_req, (trial, k)
 
 
 def test_intersect_vec_equals_conjunctive(py_engine):

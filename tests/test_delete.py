@@ -104,6 +104,19 @@ def test_masked_boolean_and_conjunctive(spark, deleted):
     assert [(d, round(s, 9)) for d, s in dist] == [
         (d, round(s, 9)) for d, s in conj
     ]
+    # the distributed boolean and expanded paths mask tombstones like
+    # their interactive twins
+    for dist_df, local in (
+        (h.engine.search_boolean("+web search", 10), got),
+        (
+            h.engine.search_expanded(Q, [], 10),
+            h.engine.search_expanded_local(Q, [], 10),
+        ),
+    ):
+        rows = dist_df.collect()
+        assert [r.doc_id for r in rows] == [d for d, _ in local]
+        for r, (_, s) in zip(rows, local):
+            assert r.score == pytest.approx(s, abs=1e-9)
 
 
 def test_facet_counts_exclude_deleted(spark, deleted):

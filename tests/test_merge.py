@@ -90,8 +90,7 @@ def test_merge_equals_union_rebuild(spark, segs, tmp_path):
         d0, c0 = want.get(t, (0, 0))
         want[t] = (d0 + df, c0 + cf)
     assert sm == want
-    # merged grid is uniform: bounds exact, one row per (term, shard)
-    assert hm.engine.bound_scale == 1.0
+    # merged grid is uniform: one row per (term, shard)
     dup = (
         hm.postings.groupBy("term", "shard").count().filter("count > 1")
     ).count()

@@ -138,7 +138,7 @@ def test_hash_layout_dir_serves_identically(spark, lifecycle, tmp_path):
     ).write.mode("overwrite").parquet(legacy)
     old = se.SearchEngine(
         spark, spark.read.parquet(legacy), [legacy], h.term_stats,
-        h.n_docs, h.avgdl, bound_scale=h.engine.bound_scale,
+        h.n_docs, h.avgdl,
     )
     terms = _probe_terms(h)
     # the old layout really is unpruned: some probe term falls inside

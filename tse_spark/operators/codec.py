@@ -15,13 +15,16 @@ BLOCK_SIZE postings, each:
 
 - gaps[0] == 0 (first_doc is absolute in the header); postings are
   doc_id-ascending, so all gaps >= 0 and a block is skippable via
-  (last_doc, section lengths) without decoding — the skip pointers for
-  block-max WAND.
-- ``max_score`` is the exact *idf-free* BM25 upper bound of the block:
-  max over the block of tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)).  The
-  query engine multiplies by the term idf — storing the idf-free
-  component means encoding needs no df join and the bound survives
-  incremental df updates.
+  (last_doc, section lengths) without decoding.
+- ``max_score`` is the *idf-free* BM25 upper bound of the block under
+  the avgdl it was encoded with: max over the block of
+  tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)).  It (and the posting row's
+  ``max_score`` column) is still written, but nothing reads it: every
+  query path decodes and scores every posting of its terms.  It stays
+  in the format so index dirs written earlier and later parse alike;
+  dropping it needs a format-version marker first.  A block-max skip
+  should derive its bounds from live scores instead, since a bound
+  encoded under an older avgdl goes stale once appends move avgdl.
 - doclens ride inline so scoring needs no join at query time.
 
 Varint encode/decode are numpy-vectorized (no per-value Python in the

@@ -10,12 +10,12 @@ shard* (``shard = doc_id div shard_range``), which
   shard-level QUERY results compose exactly (per-shard top-k union);
   the build merges map-side partial runs per (term, shard) with a
   decode + re-encode (vectorized; partial doc ranges may interleave);
-- makes query serving embarrassingly parallel: WAND per shard over
+- makes query serving embarrassingly parallel: top-k per shard over
   disjoint doc ranges, then a global top-k.
 
 Output tables:
   postings(term, shard, df, cf, max_score, blocks binary)
-  term_stats(term, df)        — global df for idf
+  term_stats(term, df, cf)    — global df for idf
   corpus meta (n_docs, avgdl) — JSON, written by the pipeline
 """
 
@@ -378,13 +378,12 @@ def reencode_shards(
     """Re-shard + re-encode an existing postings table (the compaction
     kernel, plans/compact.py): decode every (term, shard) row's blocks,
     re-bucket postings by a NEW ``shard_range``, re-encode blocks (and
-    their block-max metadata) against a NEW ``avgdl``.
+    their unread header max-scores, operators/codec.py) against a NEW
+    ``avgdl``.
 
     Used after a chain of appends: delta shards sit ABOVE the base doc
-    range with the ORIGINAL (now too narrow) shard_range, and their
-    block-max scores reference the original enc_avgdl.  Re-encoding
-    restores one uniform shard decomposition and resets the WAND
-    ``bound_scale`` to 1 (bounds exact again).
+    range with the ORIGINAL (now too narrow) shard_range.  Re-encoding
+    restores one uniform shard decomposition.
 
     Same two-phase shape as the build: a map-side split pass emits
     partial runs per (term, new shard) — multiple old shards (across
@@ -514,7 +513,6 @@ def term_stats(postings: DataFrame) -> DataFrame:
     return postings.groupBy("term").agg(
         F.sum("df").alias("df"),
         F.sum("cf").alias("cf"),
-        F.max("max_score").alias("max_score"),
     )
 
 

@@ -4,13 +4,12 @@ Topology (replaces reference Query.cpp:59-82's whole-index-in-RAM map):
 
   1. broadcast the query terms; filter the postings table on term
      (parquet predicate pushdown — only the query's shard rows are read)
-  2. groupBy(shard) + applyInPandas: block-max-pruned vectorized BM25
-     (wand.blockmax_topk_local), or the conjunctive intersection
-     (wand.boolean_topk_scored), per doc-range shard — shards are
-     disjoint doc ranges, so shard-local top-k lists compose exactly.
-     Pruning uses classic block-max WAND's per-block max-score skip
-     metadata at block granularity with numpy scoring (the right trade
-     on a Python runtime)
+  2. groupBy(shard) + applyInPandas: decode every run, score it with
+     numpy (wand._score_arrays) and select with
+     wand.boolean_topk_scored, per doc-range shard — every term
+     optional for disjunctive BM25, required for the conjunctive AND.
+     Shards are disjoint doc ranges, so shard-local top-k lists compose
+     exactly.  Like the reference, every matching doc is scored.
   3. global ORDER BY score DESC, doc_id LIMIT k (TakeOrderedAndProject)
 
 ``search_local`` (and its boolean / expanded twins) is the low-latency
@@ -171,7 +170,6 @@ class SearchEngine:
         n_docs: int,
         avgdl: float,
         dictionary: frozenset[bytes] = frozenset(),
-        bound_scale: float = 1.0,
         tombstones: "np.ndarray | None" = None,
     ):
         self.spark = spark
@@ -197,9 +195,6 @@ class SearchEngine:
                 np.asarray(tombstones, dtype=np.int64)
             )
         self._tomb_bc = None
-        # >= 1 after appends raise avgdl above the value the block
-        # max-scores were encoded with (see wand.blockmax_topk_local)
-        self.bound_scale = bound_scale
         # term -> (df, merged doc-ascending blocks blob): ONE bounded
         # LRU for the interactive path, filled lazily by one
         # footer-pruned file read per set of missing terms.  df rides
@@ -361,61 +356,70 @@ class SearchEngine:
             "shard", "term", "df", "blocks"
         )
 
-    def search(
-        self, query: str, k: int = 10, conjunctive: bool = False,
-        idf_override: dict | None = None,
-        avgdl_override: float | None = None,
+    def _shard_topk(
+        self,
+        k: int,
+        idf: dict[str, float],
+        required: "list[str]" = (),
+        optional: "list[str]" = (),
+        excluded: "list[str]" = (),
+        groups: "list[list[str]]" = (),
+        avgdl: float | None = None,
     ) -> DataFrame:
-        """Distributed WAND: per-shard Arrow UDF -> global top-k.
+        """The per-shard scorer behind :meth:`search`,
+        :meth:`search_boolean` and :meth:`search_expanded`.
 
-        ``idf_override``/``avgdl_override`` replace this index's own
-        statistics — the federation hook (plans/federate.py): a member
-        of a multi-index deployment must score with GLOBAL (df, n_docs,
-        avgdl) or per-member rankings aren't comparable.  Block-max
-        pruning stays sound under an avgdl override by rescaling the
-        stored bounds against the member's own encoding avgdl (same
-        law as the append drift correction, wand.blockmax_topk_local)."""
-        terms = self.query_terms(query)
-        if not terms:
+        One pruned posting fetch covers every term with a role; terms
+        absent from ``idf`` have no postings and are dropped.  Per
+        doc-range shard, each run is decoded and scored with its idf and
+        ``avgdl`` (this index's own by default), each synonym group in
+        ``groups`` folds to one run by its per-doc MAX addend
+        (wand.synmax_run), and wand.boolean_topk_scored selects: a doc
+        must match every ``required`` term and no ``excluded`` term or
+        tombstone, and scores the sum of its required, optional and
+        group addends.  Exclusion is applied before selection, and an
+        excluded term's postings can only mask docs of their own shard,
+        so the shard top-ks compose exactly under the global
+        ORDER BY score DESC, doc_id LIMIT k."""
+        scoring = [*required, *optional, *(t for g in groups for t in g)]
+        if any(t not in idf for t in required) or not any(
+            t in idf for t in scoring
+        ):
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        if idf_override is not None:
-            idf = {t: idf_override[t] for t in terms if t in idf_override}
-        else:
-            idf = self._idf_map(terms)
-        if not idf or (conjunctive and len(idf) < len(terms)):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        avgdl = self.avgdl
-        bscale = self.bound_scale
-        if avgdl_override is not None and avgdl_override > 0:
-            # bounds were encoded with enc_avgdl = self.avgdl / bscale
-            enc_avgdl = self.avgdl / self.bound_scale
-            avgdl = float(avgdl_override)
-            bscale = max(1.0, avgdl / enc_avgdl)
-        b_idf = self.spark.sparkContext.broadcast(idf)
+        # term -> role: a synonym group's ordinal, or req / opt / exc
+        roles: dict = {t: i for i, g in enumerate(groups) for t in g}
+        roles.update(dict.fromkeys(optional, "opt"))
+        roles.update(dict.fromkeys(required, "req"))
+        roles.update(dict.fromkeys(excluded, "exc"))
+        plan = {t: (idf[t], r) for t, r in roles.items() if t in idf}
+        b_plan = self.spark.sparkContext.broadcast(plan)
         b_tomb = self._tomb_broadcast()
-        n_terms = len(idf)
+        avgdl = self.avgdl if avgdl is None else avgdl
+        n_req = len(required)
 
         def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            ex = b_tomb.value if b_tomb is not None else None
-            runs = [
-                (b_idf.value[t], bytes(b))
-                for t, b in zip(pdf["term"], pdf["blocks"])
-                if t in b_idf.value
-            ]
-            if conjunctive:
-                if len(runs) < n_terms:
-                    return pd.DataFrame({"doc_id": [], "score": []})
-                scored = []
-                for i, b in runs:
-                    d, tf, dl = codec.decode_all(b)
-                    scored.append(
-                        (d, wand_mod._score_arrays(i, tf, dl, avgdl))
-                    )
-                res = wand_mod.boolean_topk_scored(scored, [], k, ex)
-            else:
-                res = wand_mod.blockmax_topk_local(
-                    runs, avgdl, k, bound_scale=bscale, excluded=ex
-                )
+            req, opt, grp, exc = [], [], {}, []
+            for t, blob in zip(pdf["term"], pdf["blocks"]):
+                i, role = b_plan.value[t]
+                d, tf, dl = codec.decode_all(bytes(blob))
+                if role == "exc":
+                    exc.append(d)
+                    continue
+                run = (d, wand_mod._score_arrays(i, tf, dl, avgdl))
+                if role == "req":
+                    req.append(run)
+                elif role == "opt":
+                    opt.append(run)
+                else:
+                    grp.setdefault(role, []).append(run)
+            if len(req) < n_req:
+                # a required term has no postings in this doc range
+                return pd.DataFrame({"doc_id": [], "score": []})
+            opt += [wand_mod.synmax_run(rs) for rs in grp.values()]
+            if b_tomb is not None:
+                exc.append(b_tomb.value)
+            ex = np.unique(np.concatenate(exc)) if exc else None
+            res = wand_mod.boolean_topk_scored(req, opt, k, ex)
             return pd.DataFrame(
                 {
                     "doc_id": [d for d, _ in res],
@@ -423,10 +427,36 @@ class SearchEngine:
                 }
             )
 
-        local = self._shard_rows(terms).groupBy("shard").applyInPandas(
+        local = self._shard_rows(sorted(plan)).groupBy("shard").applyInPandas(
             per_shard, schema=RESULT_SCHEMA
         )
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def search(
+        self, query: str, k: int = 10, conjunctive: bool = False,
+        idf_override: dict | None = None,
+        avgdl_override: float | None = None,
+    ) -> DataFrame:
+        """Distributed BM25 top-k (:meth:`_shard_topk`): every query
+        term optional, or every term required when ``conjunctive``.
+
+        ``idf_override``/``avgdl_override`` replace this index's own
+        statistics — the federation hook (plans/federate.py): a member
+        of a multi-index deployment must score with GLOBAL (df, n_docs,
+        avgdl) or per-member rankings aren't comparable."""
+        terms = self.query_terms(query)
+        if idf_override is not None:
+            idf = {t: idf_override[t] for t in terms if t in idf_override}
+        else:
+            idf = self._idf_map(terms)
+        if avgdl_override is not None and avgdl_override <= 0:
+            avgdl_override = None
+        return self._shard_topk(
+            k, idf,
+            required=terms if conjunctive else [],
+            optional=[] if conjunctive else terms,
+            avgdl=avgdl_override,
+        )
 
     def search_filtered(
         self, query: str, facet_rows: DataFrame, k: int = 10
@@ -606,67 +636,18 @@ class SearchEngine:
         return opt, req, exc, contradiction
 
     def search_boolean(self, query: str, k: int = 10) -> DataFrame:
-        """Distributed boolean serving: ``+term`` must match, ``-term``
-        must not, plain terms score optionally (disjunctive BM25 over
-        required + optional — a required term both gates and scores).
-
-        One pruned posting fetch covers scoring AND excluded terms
-        (same pushed-down term IN as :meth:`search`); shards are
-        disjoint doc-id ranges, so an excluded term's postings can only
-        mask docs inside their own shard — exclusion never crosses the
-        shard boundary and the per-shard top-k lists still compose
-        exactly.  Exclusion is applied before top-k selection inside
-        :func:`tse_spark.operators.wand.boolean_topk_scored`."""
+        """Distributed boolean serving (:meth:`_shard_topk`): ``+term``
+        must match, ``-term`` must not, plain terms score optionally
+        (disjunctive BM25 over required + optional — a required term
+        both gates and scores).  One pruned posting fetch covers the
+        scoring AND the excluded terms."""
         opt, req, exc, contradiction = self._boolean_buckets(query)
-        scoring = sorted(set(opt) | set(req))
-        if contradiction or not scoring:
+        if contradiction or not (opt or req):
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = self._idf_map(sorted(set(scoring) | set(exc)))
-        if any(t not in idf for t in req) or not any(
-            t in idf for t in scoring
-        ):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        avgdl = self.avgdl
-        n_req = len(req)
-        sc = self.spark.sparkContext
-        b_idf = sc.broadcast({t: idf[t] for t in scoring if t in idf})
-        b_req = sc.broadcast(frozenset(req))
-        b_exc = sc.broadcast(frozenset(t for t in exc if t in idf))
-        b_tomb = self._tomb_broadcast()
-
-        def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            req_runs, opt_runs, exc_docs = [], [], []
-            for t, blob in zip(pdf["term"], pdf["blocks"]):
-                if t in b_exc.value:
-                    exc_docs.append(codec.decode_all(bytes(blob))[0])
-                    continue
-                i = b_idf.value.get(t)
-                if i is None:
-                    continue
-                d, tf, dl = codec.decode_all(bytes(blob))
-                run = (d, wand_mod._score_arrays(i, tf, dl, avgdl))
-                (req_runs if t in b_req.value else opt_runs).append(run)
-            if len(req_runs) < n_req:
-                # a required term has no postings in this doc range
-                return pd.DataFrame({"doc_id": [], "score": []})
-            if b_tomb is not None:
-                exc_docs.append(b_tomb.value)
-            ex = (
-                np.unique(np.concatenate(exc_docs)) if exc_docs else None
-            )
-            res = wand_mod.boolean_topk_scored(req_runs, opt_runs, k, ex)
-            return pd.DataFrame(
-                {
-                    "doc_id": [d for d, _ in res],
-                    "score": [s for _, s in res],
-                }
-            )
-
-        terms = sorted(set(scoring) | set(t for t in exc if t in idf))
-        local = self._shard_rows(terms).groupBy("shard").applyInPandas(
-            per_shard, schema=RESULT_SCHEMA
+        idf = self._idf_map(sorted(set(opt) | set(req) | set(exc)))
+        return self._shard_topk(
+            k, idf, required=req, optional=opt, excluded=exc
         )
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def _expansion_buckets(
         self, query: str, synonyms: list[list[str]]
@@ -696,56 +677,15 @@ class SearchEngine:
         (one concept never double-counts; each member scores with its
         own idf), plain terms sum as usual.  One pruned posting fetch
         covers all expanded terms; the group-max fold happens per shard
-        on scored runs (wand.synmax_run) before the usual disjunctive
-        top-k, so the expansion adds zero extra scans or shuffles.
+        on scored runs (:meth:`_shard_topk`) before the usual
+        disjunctive top-k, so the expansion adds zero extra scans or
+        shuffles.
         Oracle-parity twin: :func:`index_build.bm25_expanded_topk`."""
         plain, groups = self._expansion_buckets(query, synonyms)
-        allt = sorted(set(plain) | {t for g in groups for t in g})
-        if not allt:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = self._idf_map(allt)
-        if not idf:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        avgdl = self.avgdl
-        sc = self.spark.sparkContext
-        b_idf = sc.broadcast(idf)
-        # term -> group ordinal; plain terms are their own group
-        b_grp = sc.broadcast(
-            {t: i for i, g in enumerate(groups) for t in g}
+        idf = self._idf_map(
+            sorted(set(plain) | {t for g in groups for t in g})
         )
-        b_tomb = self._tomb_broadcast()
-
-        def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            plain_runs, grp_runs = [], {}
-            for t, blob in zip(pdf["term"], pdf["blocks"]):
-                i = b_idf.value.get(t)
-                if i is None:
-                    continue
-                d, tf, dl = codec.decode_all(bytes(blob))
-                run = (d, wand_mod._score_arrays(i, tf, dl, avgdl))
-                g = b_grp.value.get(t)
-                if g is None:
-                    plain_runs.append(run)
-                else:
-                    grp_runs.setdefault(g, []).append(run)
-            runs = plain_runs + [
-                wand_mod.synmax_run(rs) for rs in grp_runs.values()
-            ]
-            res = wand_mod.topk_from_scored(
-                runs, k,
-                excluded=b_tomb.value if b_tomb is not None else None,
-            )
-            return pd.DataFrame(
-                {
-                    "doc_id": [d for d, _ in res],
-                    "score": [s for _, s in res],
-                }
-            )
-
-        local = self._shard_rows(allt).groupBy("shard").applyInPandas(
-            per_shard, schema=RESULT_SCHEMA
-        )
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._shard_topk(k, idf, optional=plain, groups=groups)
 
     def search_expanded_local(
         self, query: str, synonyms: list[list[str]], k: int = 10
@@ -931,9 +871,6 @@ class SearchEngine:
         if conjunctive:
             out = wand_mod.boolean_topk_scored(runs, [], k)
         else:
-            # addends were scored exactly with the LIVE avgdl at cache
-            # fill — no block-max pruning on this path, so no
-            # bound_scale correction is needed either
             out = wand_mod.topk_from_scored(runs, k, n_docs=self.n_docs)
         out = out[:k]
         if rkey is not None:

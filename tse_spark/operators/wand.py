@@ -1,26 +1,26 @@
-"""Top-k BM25 kernels over posting runs.
+"""Top-k BM25 kernels over scored posting runs.
 
 The query-time operators the reference lacks (index/Query.cpp:265-382
-scores *every* matching doc).  Four kernels serve every query path:
+scores *every* matching doc, as these kernels do).  Every query path
+decodes its posting runs, scores them with :func:`_score_arrays` (or
+reads them pre-scored from the engine's cache), then selects with one
+of three kernels:
 
-- :func:`blockmax_topk_local` — block-max pruned, numpy-vectorized
-  disjunctive top-k over one doc-range shard's compressed term runs,
-  inside the Arrow UDF of distributed ``SearchEngine.search`` (see
-  search.py).  Shards cover disjoint doc-id ranges, so global top-k =
-  top-k of the union of shard top-ks.
-- :func:`topk_from_scored` — disjunctive top-k over pre-scored runs:
-  the interactive, expanded, facet-filtered and federated paths.
+- :func:`topk_from_scored` — disjunctive top-k over scored runs: the
+  interactive, facet-filtered and federated paths.
 - :func:`boolean_topk_scored` — ``+required`` / optional / excluded
-  top-k over pre-scored runs.  With only required runs it is the
-  conjunctive AND (reference Query.cpp:349-372), so every conjunctive
-  path, local and distributed, goes through it.
+  top-k over scored runs.  With only required runs it is the
+  conjunctive AND (reference Query.cpp:349-372); with none it is
+  :func:`topk_from_scored` with an exclusion mask, which is how the
+  per-shard UDF of every distributed ``SearchEngine`` path selects.
 - :func:`synmax_run` — folds a synonym group into one pseudo-run.
+
+Distributed shards cover disjoint doc-id ranges, so global top-k =
+top-k of the union of shard top-ks.
 
 Correctness contract: identical (doc_id, score) top-k — including
 score-desc/doc-asc tie order — to exhaustive scoring.  Every selection
-keeps all ties at the k-th score before the final sort, and pruning
-uses strict ``upper bound < threshold`` so equal-score candidates are
-never dropped.
+keeps all ties at the k-th score before the final sort.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ from __future__ import annotations
 import numpy as np
 
 from tse_spark import oracle
-from tse_spark.operators import codec
 
 
 def _score_arrays(idf, tfs, dls, avgdl):
@@ -45,6 +44,8 @@ def _top_k(
     """The k best ``(doc, score)`` of unique ``docs``, score desc / doc
     asc: partition to the k-th score, keep every doc tied with it (the
     doc-asc tie-break decides among them), sort only the survivors."""
+    if k <= 0:
+        return []
     if len(docs) > k:
         kth = np.partition(scores, len(scores) - k)[len(scores) - k]
         sel = scores >= kth
@@ -53,107 +54,6 @@ def _top_k(
         zip(docs.tolist(), scores.tolist()), key=lambda x: (-x[1], x[0])
     )
     return cand[:k]
-
-
-def blockmax_topk_local(
-    term_runs: list[tuple[float, bytes]],
-    avgdl: float,
-    k: int,
-    bound_scale: float = 1.0,
-    excluded: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """Block-max pruned, numpy-vectorized top-k BM25 over one shard.
-    ``term_runs`` = [(idf, blocks)].
-
-    ``excluded`` (sorted unique doc ids — tombstones from
-    plans/delete.py) masks decoded postings BEFORE theta seeding and
-    final selection, so an excluded doc can neither appear in the
-    result nor inflate the pruning threshold past a surviving doc's
-    score.  Block max-scores keep covering deleted postings until
-    compaction re-encodes — still valid upper bounds for the masked
-    set, so pruning stays sound (merely a little conservative).
-
-    Uses the per-block max-score skip metadata of classic block-max
-    WAND (Ding & Suel), applied at BLOCK granularity with vectorized
-    scoring — on a Python runtime a per-posting cursor loop costs ~1000x
-    more per posting than a numpy pass, so decoding whole surviving
-    blocks and aggregating with bincount wins unless pruning skips
-    >99.9% of postings.
-
-    Soundness of the pruning: theta is seeded with the k-th best
-    single-term score of the highest-upper-bound term (every doc's
-    total >= its single-term score, so the final k-th best total
-    >= theta).  A block of term t is skipped only when
-    ``idf_t * block_max + sum(other terms' maxima) < theta``; any doc in
-    it has total < theta, so it is outside the true top-k, and its
-    partial score (missing t's contribution) is also < theta, so it
-    cannot displace a true top-k member either.  With this single-term
-    seed the rule never fires, though: each other term's bound includes
-    the seed term's maximum, which is >= theta, so every block is
-    decoded.  A skip that pays needs a theta from multi-term totals.
-
-    ``bound_scale`` >= 1 corrects stored block max-scores encoded with
-    an OLDER, smaller avgdl: appends raise the live avgdl above the
-    build's ``enc_avgdl`` (plans/append.py), and a federation avgdl
-    override can do the same (plans/federate.py).  The idf-free BM25
-    component ``tf(k1+1) / (tf + k1(1 - b + b*dl/avgdl))`` is increasing
-    in avgdl, and its ratio between the live and the encoding avgdl is
-    at most ``avgdl_now / avgdl_enc``; scaling every stored bound by
-    that ratio keeps it an upper bound, so pruning stays sound.
-    """
-    runs = []
-    for idf, blocks in term_runs:
-        if not blocks:
-            continue
-        refs = codec.scan_blocks(blocks)
-        if refs:
-            tmax = idf * bound_scale * max(r.max_score for r in refs)
-            runs.append((idf, blocks, refs, tmax))
-    if not runs:
-        return []
-
-    # theta seed: fully score the term with the largest upper bound
-    # (highest-idf terms give the strongest lower bound, and selective
-    # terms are also the cheapest to score fully)
-    seed = max(range(len(runs)), key=lambda i: runs[i][3])
-    theta = float("-inf")
-    seed_idf, seed_blocks, _, _ = runs[seed]
-    s_docs, s_tfs, s_dls = codec.decode_all(seed_blocks)
-    if excluded is not None and len(excluded) and len(s_docs):
-        keep = ~_in_sorted(s_docs, excluded)
-        s_docs, s_tfs, s_dls = s_docs[keep], s_tfs[keep], s_dls[keep]
-    if len(s_docs) >= k:
-        s_scores = _score_arrays(seed_idf, s_tfs, s_dls, avgdl)
-        theta = float(np.partition(s_scores, len(s_scores) - k)[len(s_scores) - k])
-
-    sum_tmax = sum(r[3] for r in runs)
-    doc_parts: list[np.ndarray] = []
-    score_parts: list[np.ndarray] = []
-    for i, (idf, blocks, refs, tmax) in enumerate(runs):
-        others = sum_tmax - tmax
-        if i == seed:
-            doc_parts.append(s_docs)
-            score_parts.append(_score_arrays(seed_idf, s_tfs, s_dls, avgdl))
-            continue
-        keep = [
-            r
-            for r in refs
-            if idf * bound_scale * r.max_score + others >= theta
-        ]
-        if not keep:
-            continue
-        d, t, dl = codec.decode_blocks(blocks, keep)
-        if excluded is not None and len(excluded) and len(d):
-            m = ~_in_sorted(d, excluded)
-            d, t, dl = d[m], t[m], dl[m]
-        doc_parts.append(d)
-        score_parts.append(_score_arrays(idf, t, dl, avgdl))
-    if not doc_parts:
-        return []
-    docs = np.concatenate(doc_parts)
-    scores = np.concatenate(score_parts)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    return _top_k(uniq, np.bincount(inv, weights=scores), k)
 
 
 def topk_from_scored(

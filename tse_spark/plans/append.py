@@ -12,10 +12,9 @@ This plan appends like an Iceberg table append (north_star S1):
    merged, or rewritten, and both serving paths already compose disjoint
    shards (the distributed path groups by shard; the driver path
    concatenates blobs in shard order);
-3. delta blocks are encoded with the ORIGINAL build's ``enc_avgdl`` so
-   every block's max-score metadata shares one reference avgdl; the live
-   avgdl moves in meta.json and the engine scales pruning bounds by
-   ``max(1, avgdl/enc_avgdl)`` (sound — see wand.blockmax_topk_local);
+3. delta blocks are encoded with the pre-append ``avgdl``; their
+   header max-scores are written but never read (operators/codec.py),
+   and scoring uses the live avgdl from meta.json;
 4. term_stats is recomputed from the full postings set (tiny: one row
    per (term, shard)) into a VERSIONED directory, and meta.json gets the
    merged n_docs / weighted avgdl / new max_doc_id / new dir lists.
@@ -161,7 +160,6 @@ def _append_batch(
     atomic publish — or die with it on a crash."""
     n0 = int(meta["n_docs"])
     avgdl0 = float(meta["avgdl"])
-    enc_avgdl = float(meta.get("enc_avgdl", avgdl0))
     docs_dirs = meta.get("docs_dirs", ["docs"])
     postings_dirs = meta.get("postings_dirs", ["postings"])
     base, shard_range = _next_base(spark, out_dir, meta)
@@ -192,14 +190,13 @@ def _append_batch(
     ).collect()[0]
     n_delta = int(row["n"])
 
-    # delta shards: original shard_range, original enc_avgdl (uniform
-    # block-max reference point across the whole index)
+    # delta shards: the original shard_range
     postings_delta = f"postings_delta_{base}"
     po.write_postings(
         po.build_posting_shards(
             tf,
             n_docs=n0 + n_delta,
-            avgdl=enc_avgdl,
+            avgdl=avgdl0,
             num_shards=int(meta.get("num_shards", 32)),
             block_size=int(meta.get("block_size", 128)),
             shard_range=shard_range,
@@ -227,7 +224,6 @@ def _append_batch(
         meta.get("total_dl", round(avgdl0 * n0))
     ) + int(row["sdl"] or 0)
     meta["max_doc_id"] = base + n_delta_docs - 1
-    meta["enc_avgdl"] = enc_avgdl
     meta["shard_range"] = shard_range
     meta["docs_dirs"] = docs_dirs + [docs_delta]
     meta["postings_dirs"] = postings_dirs + [postings_delta]

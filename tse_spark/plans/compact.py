@@ -4,16 +4,13 @@ Every :func:`tse_spark.plans.append.append_pages` adds ``docs_delta_*``
 and ``postings_delta_*`` directories and grows meta.json's dir lists —
 after many small appends the postings read fans out over many tiny
 files and per-term (term, shard) rows, the delta shards sit above the
-base doc range with the original (now too narrow) ``shard_range``, and
-WAND runs with scaled (conservative) pruning bounds because the live
-avgdl has drifted from ``enc_avgdl``.  ``compact_index`` merges it all
-back to the steady state:
+base doc range with the original (now too narrow) ``shard_range``.
+``compact_index`` merges it all back to the steady state:
 
 1. all docs dirs      -> one ``docs_base_v{N}`` dir;
 2. all postings dirs  -> one ``postings_base_v{N}`` dir, re-sharded to
    ``shard_range = ceil((max_doc_id+1)/num_shards)`` and re-encoded
-   against the LIVE avgdl (operators/postings.reencode_shards), so
-   ``enc_avgdl == avgdl`` again and the WAND bound_scale resets to 1;
+   against the LIVE avgdl (operators/postings.reencode_shards);
 3. term_stats recomputed from the new shards -> ``term_stats_base_v{N}``;
 4. meta.json atomically republished with the reset dir lists.
 
@@ -64,21 +61,15 @@ def compact_index(
 ) -> "pl.IndexHandle":
     """Merge all append deltas back into single base dirs; see module
     docstring for the contract.  No-op (returns a fresh handle) when
-    the index has no deltas and exact encoding stats."""
+    the index has no deltas and no tombstones."""
     meta_path = os.path.join(out_dir, "meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
     docs_dirs = meta.get("docs_dirs", ["docs"])
     postings_dirs = meta.get("postings_dirs", ["postings"])
     avgdl = float(meta["avgdl"])
-    enc_avgdl = float(meta.get("enc_avgdl", avgdl))
     tomb_dir = meta.get("tombstones_dir")
-    if (
-        len(docs_dirs) == 1
-        and len(postings_dirs) == 1
-        and enc_avgdl == avgdl
-        and not tomb_dir
-    ):
+    if len(docs_dirs) == 1 and len(postings_dirs) == 1 and not tomb_dir:
         return pl.load_index(spark, out_dir, dictionary)
 
     # fold tombstones physically (plans/delete.py step 3): postings
@@ -110,11 +101,7 @@ def compact_index(
             tomb_arr = None
             meta.pop("tombstones_dir", None)
             meta.pop("n_tombstones", None)
-            if (
-                len(docs_dirs) == 1
-                and len(postings_dirs) == 1
-                and enc_avgdl == avgdl
-            ):
+            if len(docs_dirs) == 1 and len(postings_dirs) == 1:
                 # otherwise steady-state: a meta-only commit clears the
                 # key without rewriting anything
                 from tse_spark.plans import snapshots as sn
@@ -193,7 +180,6 @@ def compact_index(
     meta["docs_dirs"] = [docs_out]
     meta["postings_dirs"] = [postings_out]
     meta["term_stats_dir"] = stats_out
-    meta["enc_avgdl"] = avgdl  # blocks re-encoded: bounds exact again
     meta["shard_range"] = new_range
     meta["compact_version"] = version
     entry = {"version": version, "merged_dirs": old_dirs}

@@ -26,15 +26,14 @@ share.  Members must be url-disjoint —
 the natural sharding — or duplicates count twice, same as they would
 in a sloppy union build.
 
-Execution: each member runs its own per-shard WAND job with the global
-stats injected (operators/search.py idf_override/avgdl_override —
-block-max bounds rescale against each member's encoding avgdl, the
-same correction appends use), members' results union (disjoint doc
-sets, so per-member top-k composes exactly), one global
-TakeOrderedAndProject.  Per-member tombstones mask as usual.  The
-interactive path merges driver-side over the members' scored posting
-caches.  df aggregation costs one pruned term_stats fetch per member
-per cache-missing term — at query time, never a full-vocabulary join.
+Execution: each member runs its own per-shard top-k job with the
+global stats injected (operators/search.py idf_override/avgdl_override),
+members' results union (disjoint doc sets, so per-member top-k composes
+exactly), one global TakeOrderedAndProject.  Per-member tombstones mask
+as usual.  The interactive path merges driver-side over the members'
+scored posting caches.  df aggregation costs one pruned term_stats
+fetch per member per cache-missing term — at query time, never a
+full-vocabulary join.
 """
 
 from __future__ import annotations

@@ -272,9 +272,6 @@ def merge_indexes_many(
         "n_docs": n_docs,
         "avgdl": avgdl,
         "total_dl": total_dl,
-        # blocks were re-encoded under the merged avgdl: WAND bounds
-        # are exact from the first query (bound_scale == 1)
-        "enc_avgdl": avgdl,
         "shard_range": shard_range,
         "max_doc_id": max_doc_id,
         "dict_fp": metas[0].get("dict_fp"),
@@ -424,14 +421,14 @@ def absorb_segment(
     the target's next free shard_range multiple (append's base law,
     so every delta row lands in a shard strictly above all existing
     ones and both serving paths compose disjoint shards unchanged),
-    blocks re-referenced to the target's ``enc_avgdl`` (uniform
-    block-max reference point, same as append's delta encode) —
-    and land in ``postings_delta_{base}``.  Corpus stats merge from
-    the segment's own EXACT integers (n_docs / total_dl from its
-    meta: zero tokenization anywhere), term_stats recompute into a
-    versioned dir, and everything becomes visible through the single
-    snapshot-stamped meta publish (op="absorb") with the same
-    crash-atomicity contract as append_pages.
+    blocks re-encoded with the target's pre-absorb ``avgdl`` (same as
+    append's delta encode) — and land in ``postings_delta_{base}``.
+    Corpus stats merge from the segment's own EXACT integers
+    (n_docs / total_dl from its meta: zero tokenization anywhere),
+    term_stats recompute into a versioned dir, and everything becomes
+    visible through the single snapshot-stamped meta publish
+    (op="absorb") with the same crash-atomicity contract as
+    append_pages.
 
     Preconditions: same tokenizer + dictionary fingerprint, both
     unpruned, segment tombstone-free, url-disjoint from the target
@@ -476,7 +473,6 @@ def absorb_segment(
 
     n0 = int(meta["n_docs"])
     avgdl0 = float(meta["avgdl"])
-    enc_avgdl = float(meta.get("enc_avgdl", avgdl0))
     docs_dirs = meta.get("docs_dirs", ["docs"])
     postings_dirs = meta.get("postings_dirs", ["postings"])
     base, shard_range = ap._next_base(spark, out_dir, meta)
@@ -487,7 +483,7 @@ def absorb_segment(
     postings_delta = f"postings_delta_{base}"
     po.write_postings(
         po.reencode_shards(
-            seg_posts, enc_avgdl, shard_range,
+            seg_posts, avgdl0, shard_range,
             int(meta.get("block_size", 128)),
         ),
         os.path.join(out_dir, postings_delta),
@@ -519,7 +515,6 @@ def absorb_segment(
     )
     meta["avgdl"] = meta["total_dl"] / max(1, n1)
     meta["max_doc_id"] = base + _max_ids_of(spark, [seg_dir], [seg])[0]
-    meta["enc_avgdl"] = enc_avgdl
     meta["shard_range"] = shard_range
     if docs_delta is not None:
         meta["docs_dirs"] = docs_dirs + [docs_delta]

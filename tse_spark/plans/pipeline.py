@@ -8,7 +8,7 @@ Stages (each a resumable checkpoint table under ``out_dir``):
               per-doc aggregation and inline doc length
   postings  — doc-range-sharded delta-gap varint blocks (salted
               range-partition-by-term: term-clustered part files)
-  term_stats— global df/cf/max_score per term
+  term_stats— global df/cf per term
 
 plus ``meta.json`` (n_docs, avgdl, params).  A re-run with ``resume=True``
 skips every stage whose fingerprint matches (see plans/checkpoint.py).
@@ -189,11 +189,9 @@ class IndexPipeline:
                 # ((total_dl - dead_dl) / n_live, both exact ints) —
                 # maintained by append_pages, consumed by compact_index
                 "total_dl": int(row["sdl"] or 0),
-                # frozen at first build; appends must reuse both (see
-                # plans/append.py): enc_avgdl is what the block
-                # max-scores were encoded with, shard_range is the
-                # doc-range width of the (term, shard) salt
-                "enc_avgdl": float(row["avgdl"] or 0.0),
+                # frozen at first build; appends must reuse it (see
+                # plans/append.py): the doc-range width of the
+                # (term, shard) salt
                 "shard_range": max(1, _math.ceil(_n / self.num_shards)),
                 "max_doc_id": _mx,
                 "fingerprint": fp_tf,
@@ -274,8 +272,7 @@ class IndexPipeline:
 class IndexHandle:
     def __init__(
         self, spark, out_dir, postings, term_stats, n_docs, avgdl,
-        dictionary, manifest, enc_avgdl: float | None = None,
-        tombstones=None, meta: dict | None = None,
+        dictionary, manifest, tombstones=None, meta: dict | None = None,
     ):
         self.spark = spark
         self.out_dir = out_dir
@@ -288,19 +285,13 @@ class IndexHandle:
         self.n_docs = n_docs
         self.avgdl = avgdl
         self.manifest = manifest
-        # block max-scores were encoded with enc_avgdl; if appends have
-        # raised the live avgdl above it, scale the pruning bounds up
-        # (sound: the idf-free component's growth is <= the avgdl ratio)
-        scale = 1.0
-        if enc_avgdl and enc_avgdl > 0 and avgdl > enc_avgdl:
-            scale = avgdl / enc_avgdl
         posting_dirs = [
             os.path.join(out_dir, d)
             for d in (meta or {}).get("postings_dirs", ["postings"])
         ]
         self.engine = se.SearchEngine(
             spark, postings, posting_dirs, term_stats, n_docs, avgdl,
-            dictionary, bound_scale=scale, tombstones=tombstones,
+            dictionary, tombstones=tombstones,
         )
 
     def attach_shared_cache(self, cache_root: str):
@@ -505,7 +496,7 @@ def handle_from_meta(
     return IndexHandle(
         spark, out_dir, postings, stats,
         meta["n_docs"], meta["avgdl"], dictionary, cp.Manifest(out_dir),
-        enc_avgdl=meta.get("enc_avgdl"), tombstones=tomb, meta=meta,
+        tombstones=tomb, meta=meta,
     )
 
 
