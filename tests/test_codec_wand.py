@@ -159,7 +159,8 @@ def _reference_topk(required, optional, k, excluded):
     return ranked[: max(k, 0)]
 
 
-def test_blockmax_equals_exhaustive_random_postings():
+@pytest.mark.parametrize("avgdl_drift", [1.0, 1.6])
+def test_blockmax_equals_exhaustive_random_postings(avgdl_drift):
     """Adversarial synthetic runs against a pure-Python reference:
     uniform doc lengths in even trials force tie-heavy top-ks, so
     selection must keep every tie at the k-th score and the doc-asc
@@ -167,12 +168,16 @@ def test_blockmax_equals_exhaustive_random_postings():
     per-shard path) and its dense ``n_docs`` branch, and
     ``boolean_topk_scored`` with and without a required run.  Excluded
     ids (tombstones) never appear and never suppress a surviving doc;
-    ``k = 0`` selects nothing."""
+    ``k = 0`` selects nothing.  ``avgdl_drift`` > 1 is the state after
+    appends: blocks were encoded with an older, smaller avgdl and the
+    live avgdl is ``avgdl_drift`` times larger; decoded scores must
+    depend on the live avgdl only."""
     rng = np.random.RandomState(5)
-    avgdl = 20.0
+    enc_avgdl = 20.0
+    avgdl = enc_avgdl * avgdl_drift
     for trial in range(40):
         n_terms = rng.randint(1, 5)
-        runs = []
+        runs, raw = [], []
         for _ in range(n_terms):
             nd = rng.randint(1, 120)
             docs = np.unique(rng.randint(0, 400, nd)).astype(np.int64)
@@ -182,10 +187,14 @@ def test_blockmax_equals_exhaustive_random_postings():
             else:
                 dls = np.full(len(docs), 20, dtype=np.int64)  # ties
             blocks, _ = codec.encode_postings(
-                docs, tfs, dls, avgdl, block_size=16
+                docs, tfs, dls, enc_avgdl, block_size=16
             )
-            runs.append((float(rng.uniform(0.1, 6.0)), blocks))
+            idf = float(rng.uniform(0.1, 6.0))
+            runs.append((idf, blocks))
+            raw.append((docs, wand._score_arrays(idf, tfs, dls, avgdl)))
         scored = _scored_runs(runs, avgdl)
+        for (d, s), (rd, rs) in zip(scored, raw):
+            assert (d == rd).all() and (s == rs).all(), trial
         ex = np.unique(rng.randint(0, 400, 60)).astype(np.int64)
         for k in (0, 1, 3, 10, 100):
             for excluded in (None, ex):
