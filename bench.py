@@ -916,7 +916,6 @@ def _measure_serving(h) -> dict:
     interactive path); cold pass includes the posting fetch."""
     from tse_spark import fixtures
 
-    h.engine.warm()
     queries = fixtures.gen_queries()
     cold: list[float] = []
     for _, q, k in queries:  # first touch: includes the posting fetch

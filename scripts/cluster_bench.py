@@ -123,7 +123,6 @@ def main() -> None:
 
     # serving: block-max WAND top-k over the reference query set; the
     # fingerprint pins rank-identity across cluster sizes
-    handle.engine.warm()
     queries = fixtures.gen_queries()
     lat: list[float] = []
     fp = hashlib.md5()

@@ -152,7 +152,7 @@ def main(argv: list[str] | None = None) -> int:
                 )
         from tse_spark.plans import federate as fe
 
-        f = fe.FederatedIndex(spark, members, dictionary).warm()
+        f = fe.FederatedIndex(spark, members, dictionary)
         for q in args.queries:
             t0 = time.time()
             if args.distributed or args.conjunctive:
@@ -191,7 +191,6 @@ def main(argv: list[str] | None = None) -> int:
         handle.attach_shared_cache(args.cache_root)
     if args.result_cache_root:
         handle.attach_result_cache(args.result_cache_root)
-    handle.engine.warm()
     handle.engine.query_log_path = args.index.rstrip("/") + "/query_log.jsonl"
     if args.complete:
         from tse_spark.operators import textops
@@ -286,7 +285,7 @@ def main(argv: list[str] | None = None) -> int:
                 t: [
                     r["term"]
                     for r in textops.spell_suggest(
-                        handle.engine.term_stats, t, k=3
+                        handle.term_stats, t, k=3
                     ).collect()
                     if r["term"] != t
                 ]

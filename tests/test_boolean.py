@@ -204,6 +204,28 @@ def test_cli_boolean_mode(spark, ws_handle, capsys):
     # a non-positive k is an argument error, not a kernel crash
     with pytest.raises(SystemExit):
         query_index.main(["--index", idx_dir, "--k", "0", "spark"])
+    # --suggest on a query with fewer than k results: "did you mean"
+    # terms from the handle's term_stats
+    from tse_spark.operators import textops
+
+    rc = query_index.main(
+        ["--index", idx_dir, "--suggest", "--k", "5", "sparkk"]
+    )
+    assert rc == 0
+    lines = [
+        ln for ln in capsys.readouterr().out.splitlines()
+        if ln.startswith("{")
+    ]
+    out = json.loads(lines[-1])
+    assert len(out["results"]) < 5
+    want = [
+        r["term"]
+        for r in textops.spell_suggest(
+            ws_handle.term_stats, "sparkk", k=3
+        ).collect()
+    ]
+    assert "spark" in want
+    assert out["suggestions"] == {"sparkk": want}
 
 
 # ---------------------------------------------------------------------------

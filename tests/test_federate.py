@@ -45,9 +45,7 @@ def setup(tmp_path_factory, spark):
         dictionary=fixtures.mini_dict_bytes(),
         num_shards=5, block_size=32, num_partitions=4,
     ).run_from_pages(union, resume=False)
-    f = fed.FederatedIndex(
-        spark, outs, fixtures.mini_dict_bytes()
-    ).warm()
+    f = fed.FederatedIndex(spark, outs, fixtures.mini_dict_bytes())
     hu = pl.load_index(spark, out_u, fixtures.mini_dict_bytes())
     hu.engine.warm()
     url_maps = []
@@ -147,7 +145,7 @@ def test_member_tombstones_respected(setup, spark):
         spark,
         [h.out_dir for h in f.handles],
         fixtures.mini_dict_bytes(),
-    ).warm()
+    )
     after = f2.search_local("web search", 5)
     assert (m0, d0) not in {(m, d) for m, d, _ in after}
     dist = [
@@ -228,7 +226,7 @@ def sel_setup(tmp_path_factory, spark):
             input_key=f"sel{i}", resume=False,
         )
         outs.append(out)
-    return fed.FederatedIndex(spark, outs).warm()
+    return fed.FederatedIndex(spark, outs)
 
 
 def test_member_scores_df_mass(sel_setup):

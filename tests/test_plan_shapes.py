@@ -387,9 +387,7 @@ def test_merge_partials_range_partitions_by_term_shard(spark):
     from tse_spark.operators import postings as po
 
     partials = spark.createDataFrame(
-        [("tok1", 0, 1, 1, 1.0, 0, b"")],
-        "term string, shard long, df long, cf long, "
-        "max_score double, first_doc long, blocks binary",
+        [("tok1", 0, 1, 0, b"")], po.PARTIAL_SCHEMA
     )
     out = po.merge_partials(partials, 1.0, 128, 4)
     plan = _plan(out)

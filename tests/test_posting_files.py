@@ -5,8 +5,11 @@
   Spark relation holds (``_shard_rows(terms).collect()`` merged in shard
   order) on every lifecycle state: fresh build, two appends, tombstones,
   compaction, and time-travel opens;
+- df lookups (``_df_map``) read the files' ``term`` and ``df`` columns
+  and equal term_stats' df on every lifecycle state;
 - a posting dir in the old hash layout still serves identically;
-- a cold ``search_local`` starts no Spark job;
+- a cold ``search_local``, a df lookup and ``warm()`` start no Spark
+  job, and ``warm()`` pins nothing;
 - the posting writers leave no persisted RDD behind;
 - the query log's ``ms`` covers the posting fetch.
 """
@@ -98,6 +101,9 @@ def _opened(spark, out, handles):
 
 
 def test_file_entries_equal_spark_rows(spark, lifecycle):
+    """Blobs and df from the files equal the Spark relation's rows, and
+    df (from the files on a fresh engine, then from its blob LRU) equals
+    term_stats' df, the absent term left out."""
     out, handles, _ = lifecycle
     for name, h in _opened(spark, out, handles):
         terms = _probe_terms(h)
@@ -105,6 +111,19 @@ def test_file_entries_equal_spark_rows(spark, lifecycle):
         want = _spark_entries(h.engine, terms)
         assert got == want, name
         assert got[ABSENT] == (0, b"")
+        stats = {
+            r["term"]: int(r["df"])
+            for r in h.term_stats.filter(h.term_stats.term.isin(terms))
+            .select("term", "df").collect()
+        }
+        assert ABSENT not in stats and len(stats) == len(terms) - 1
+        fresh = se.SearchEngine(
+            spark, h.postings, h.engine.posting_files.dirs,
+            h.n_docs, h.avgdl,
+        )
+        assert fresh._df_map(terms) == stats, name
+        fresh._term_entries(terms)
+        assert fresh._df_map(terms) == stats, name
 
 
 def test_lifecycle_states_read_term_clustered_files(spark, lifecycle):
@@ -137,8 +156,7 @@ def test_hash_layout_dir_serves_identically(spark, lifecycle, tmp_path):
         "term", "shard"
     ).write.mode("overwrite").parquet(legacy)
     old = se.SearchEngine(
-        spark, spark.read.parquet(legacy), [legacy], h.term_stats,
-        h.n_docs, h.avgdl,
+        spark, spark.read.parquet(legacy), [legacy], h.n_docs, h.avgdl,
     )
     terms = _probe_terms(h)
     # the old layout really is unpruned: some probe term falls inside
@@ -159,20 +177,33 @@ def test_hash_layout_dir_serves_identically(spark, lifecycle, tmp_path):
 def test_cold_search_local_starts_no_spark_job(spark, lifecycle):
     out, _, _ = lifecycle
     h = pl.load_index(spark, out)
+    terms = _probe_terms(h)
+    pinned = _persisted(spark)
     sc = spark.sparkContext
     group = "tse-cold-fetch-check"
     sc.setJobGroup(group, "cold interactive fetch")
+
+    def jobs():
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
     try:
+        # df of cache-missing terms, then warm() without and with a
+        # preload: no job, nothing pinned
+        assert len(h.engine._df_map(terms)) == len(terms) - 1
+        assert jobs() == []
+        h.engine.warm()
+        h.engine.warm(preload_terms=terms)
+        assert jobs() == [] and _persisted(spark) == pinned
         res = [h.engine.search_local(q, 10) for q in QUERIES]
         res.append(h.engine.search_boolean_local("+web -spark", 10))
         res.append(
             h.engine.search_expanded_local("web", [["web", "search"]], 10)
         )
         assert any(res)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert jobs() == []
         # the tracker does see jobs in this group: distributed search
         h.engine.search(QUERIES[0], 10).collect()
-        assert list(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
 

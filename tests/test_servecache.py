@@ -41,15 +41,15 @@ def idx(tmp_path_factory, spark):
 
 
 class _Poisoned:
-    """Stands in for the posting file source or the term_stats
-    DataFrame: any use = test failure."""
+    """Stands in for the posting file source: any read = test
+    failure."""
 
-    def filter(self, *a, **k):  # pragma: no cover - the assertion
+    def rows(self, *a, **k):  # pragma: no cover - the assertion
         raise AssertionError(
             "engine fetched postings despite a warm shared cache"
         )
 
-    rows = filter
+    dfs = rows
 
 
 def test_second_process_serves_from_shared_cache(spark, idx, tmp_path):
@@ -69,7 +69,6 @@ def test_second_process_serves_from_shared_cache(spark, idx, tmp_path):
     assert c2.key == c1.key
     # poison the posting files: every lookup must come from the shared dir
     h2.engine.posting_files = _Poisoned()
-    h2.engine.term_stats = _Poisoned()
     for q in QUERIES:
         assert h2.engine.search_local(q, 10) == expected[q]
     assert c2.hits > 0 and c2.fills == 0 and c2.misses == 0
@@ -78,21 +77,6 @@ def test_second_process_serves_from_shared_cache(spark, idx, tmp_path):
     # in process 1 and zero Spark jobs in process 2
     assert h1.engine.search_local("zzznotaterm", 10) == []
     assert h2.engine.search_local("zzznotaterm", 10) == []
-
-
-def test_df_map_uses_shared_tier(spark, idx, tmp_path):
-    out, _ = idx
-    root = str(tmp_path / "cache_df")
-    h1 = pl.load_index(spark, out)
-    h1.attach_shared_cache(root)
-    # fill blobs (and thus df headers) for the query terms
-    h1.engine.search_local("web search", 10)
-
-    h2 = pl.load_index(spark, out)
-    h2.attach_shared_cache(root)
-    h2.engine.term_stats = _Poisoned()
-    dfm = h2.engine._df_map(["web", "search"])
-    assert set(dfm) == {"web", "search"} and min(dfm.values()) > 0
 
 
 def test_commit_changes_key(spark, idx, tmp_path_factory):
@@ -124,7 +108,6 @@ def test_corrupt_and_colliding_entries_read_as_miss(tmp_path):
     c = sc.SharedPostingCache(root, key)
     c.put("hello", 3, b"\x01\x02\x03")
     assert c.get("hello") == (3, b"\x01\x02\x03")
-    assert c.get_df("hello") == 3
 
     p = c._path("hello")
     # torn file (truncated payload)
@@ -144,7 +127,7 @@ def test_corrupt_and_colliding_entries_read_as_miss(tmp_path):
     c.put("hello", 3, b"\x01\x02\x03")
     with open(p, "r+b") as f:
         f.write(b"XXXX")
-    assert c.get("hello") is None and c.get_df("hello") is None
+    assert c.get("hello") is None
 
 
 def test_vacuum_budget_and_stale_keys(tmp_path):

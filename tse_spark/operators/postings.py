@@ -33,6 +33,12 @@ POSTINGS_SCHEMA = (
     "term string, shard long, df long, cf long, "
     "max_score double, blocks binary"
 )
+# map-side partial runs carry only what the merge reads: df (decode
+# bounds), first_doc (sort order) and the blob; cf and max_score are
+# recomputed from the merged postings
+PARTIAL_SCHEMA = (
+    "term string, shard long, df long, first_doc long, blocks binary"
+)
 
 
 def with_doclen(tf: DataFrame) -> DataFrame:
@@ -96,11 +102,6 @@ def build_posting_shards(
     # the exchange (map-side combine) cuts shuffle rows by ~the average
     # per-partition df and moves the codec work to the scan side, which
     # is CPU-bound and scales with cores.
-    partial_schema = (
-        "term string, shard long, df long, cf long, "
-        "max_score double, first_doc long, blocks binary"
-    )
-
     # Accumulate scan batches to this many rows before sorting/encoding:
     # a lone Arrow batch (~10k rows ~ 80 docs) holds ~1 row per TAIL
     # (term, shard) group, so per-group encode overhead would dominate
@@ -117,8 +118,6 @@ def build_posting_shards(
             ("term", pa.string()),
             ("shard", pa.int64()),
             ("df", pa.int64()),
-            ("cf", pa.int64()),
-            ("max_score", pa.float64()),
             ("first_doc", pa.int64()),
             ("blocks", pa.binary()),
         ]
@@ -161,7 +160,7 @@ def build_posting_shards(
             (codes[1:] != codes[:-1]) | (shards_o[1:] != shards_o[:-1])
         )
         bounds = np.concatenate(([0], change + 1, [len(codes)]))
-        blobs, gmax = codec.encode_many(
+        blobs, _ = codec.encode_many(
             docs_o, tfs_o, dls_o, bounds, avgdl, block_size
         )
         starts = bounds[:-1]
@@ -171,15 +170,10 @@ def build_posting_shards(
                 group_terms.cast(pa.string()),
                 pa.array(shards_o[starts], type=pa.int64()),
                 pa.array(np.diff(bounds), type=pa.int64()),
-                pa.array(np.add.reduceat(tfs_o, starts), type=pa.int64()),
-                pa.array(gmax, type=pa.float64()),
                 pa.array(docs_o[starts], type=pa.int64()),
                 pa.array(blobs, type=pa.binary()),
             ],
-            names=[
-                "term", "shard", "df", "cf", "max_score", "first_doc",
-                "blocks",
-            ],
+            names=["term", "shard", "df", "first_doc", "blocks"],
         )
 
     def _encode_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -204,18 +198,15 @@ def build_posting_shards(
             (codes[1:] != codes[:-1]) | (shards[1:] != shards[:-1])
         )
         bounds = np.concatenate(([0], change + 1, [len(terms)]))
-        blobs, gmax = codec.encode_many(
+        blobs, _ = codec.encode_many(
             docs, tfs, dls, bounds, avgdl, block_size
         )
         starts = bounds[:-1]
-        cfs = np.add.reduceat(tfs, starts)
         return pd.DataFrame(
             {
                 "term": terms[starts],
                 "shard": shards[starts],
                 "df": np.diff(bounds),
-                "cf": cfs,
-                "max_score": gmax,
                 "first_doc": docs[starts],
                 "blocks": blobs,
             }
@@ -242,7 +233,7 @@ def build_posting_shards(
             if acc:
                 yield _encode_chunk_arrow(pa.Table.from_batches(acc))
 
-        partials = t.mapInArrow(encode_map_arrow, schema=partial_schema)
+        partials = t.mapInArrow(encode_map_arrow, schema=PARTIAL_SCHEMA)
     else:
 
         def encode_map(it):
@@ -259,7 +250,7 @@ def build_posting_shards(
             if acc:
                 yield _encode_chunk(pd.concat(acc, ignore_index=True))
 
-        partials = t.mapInPandas(encode_map, schema=partial_schema)
+        partials = t.mapInPandas(encode_map, schema=PARTIAL_SCHEMA)
 
     # ---- reduce side: merge partial runs per (term, shard) ----
     # merge granularity: default 4 tasks per core — finer tasks shrink
@@ -397,10 +388,6 @@ def reencode_shards(
     whose postings all belonged to deleted docs simply emit no runs
     (they vanish from the re-encoded table and its term_stats).
     """
-    partial_schema = (
-        "term string, shard long, df long, cf long, "
-        "max_score double, first_doc long, blocks binary"
-    )
     b_ex = None
     if excluded is not None and len(excluded):
         b_ex = postings.sparkSession.sparkContext.broadcast(
@@ -444,7 +431,7 @@ def reencode_shards(
                 (ridx[1:] != ridx[:-1]) | (shards[1:] != shards[:-1])
             )
             bounds = np.concatenate(([0], change + 1, [len(docs)]))
-            blocks, gmax = codec.encode_many(
+            blocks, _ = codec.encode_many(
                 docs, tfs, dls, bounds, avgdl, block_size
             )
             starts = bounds[:-1]
@@ -453,18 +440,16 @@ def reencode_shards(
                     "term": terms[ridx[starts]],
                     "shard": shards[starts],
                     "df": np.diff(bounds),
-                    "cf": np.add.reduceat(tfs, starts),
-                    "max_score": gmax,
                     "first_doc": docs[starts],
                     "blocks": blocks,
                 }
             )
 
-    in_cols = ["term", "shard", "df", "cf", "max_score", "blocks"]
+    in_cols = ["term", "shard", "df", "blocks"]
     if "id_shift" in postings.columns:
         in_cols.append("id_shift")
     partials = postings.select(*in_cols).mapInPandas(
-        split_map, schema=partial_schema
+        split_map, schema=PARTIAL_SCHEMA
     )
     num_parts = merge_parallelism or (
         postings.sparkSession.sparkContext.defaultParallelism * 4

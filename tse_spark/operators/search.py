@@ -137,8 +137,10 @@ class PostingFiles:
             self._files = files
         return self._files
 
-    def rows(self, terms: "list[str]") -> "list[tuple[str, int, int, bytes]]":
-        """(term, shard, df, blocks) of every posting row of ``terms``."""
+    def _read(self, terms: "list[str]", columns: "list[str]") -> list:
+        """``columns`` (which must include ``term``) of every posting
+        row of ``terms``: one table per file with a covering row group,
+        read from those row groups only."""
         want = sorted(set(terms))
         value_set = pa.array(want, type=pa.string())
         out = []
@@ -150,13 +152,24 @@ class PostingFiles:
             if not hit:
                 continue
             with pq.ParquetFile(path, metadata=md) as f:
-                t = f.read_row_groups(
-                    hit, columns=self.COLUMNS, use_threads=False
-                )
-            t = t.filter(pc.is_in(t["term"], value_set=value_set))
-            out.extend(
-                zip(*(t[c].to_pylist() for c in self.COLUMNS))
-            )
+                t = f.read_row_groups(hit, columns=columns, use_threads=False)
+            out.append(t.filter(pc.is_in(t["term"], value_set=value_set)))
+        return out
+
+    def rows(self, terms: "list[str]") -> "list[tuple[str, int, int, bytes]]":
+        """(term, shard, df, blocks) of every posting row of ``terms``."""
+        out = []
+        for t in self._read(terms, self.COLUMNS):
+            out.extend(zip(*(t[c].to_pylist() for c in self.COLUMNS)))
+        return out
+
+    def dfs(self, terms: "list[str]") -> "dict[str, int]":
+        """term -> df summed over its shard rows, for present terms;
+        reads only the ``term`` and ``df`` columns, never blob bytes."""
+        out: "dict[str, int]" = {}
+        for t in self._read(terms, ["term", "df"]):
+            for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
+                out[term] = out.get(term, 0) + df
         return out
 
 
@@ -166,7 +179,6 @@ class SearchEngine:
         spark: SparkSession,
         postings: DataFrame,
         posting_dirs: "list[str]",
-        term_stats: DataFrame,
         n_docs: int,
         avgdl: float,
         dictionary: frozenset[bytes] = frozenset(),
@@ -174,10 +186,10 @@ class SearchEngine:
     ):
         self.spark = spark
         # the Spark relation serves distributed search(); the files
-        # under posting_dirs serve the interactive cache misses
+        # under posting_dirs serve the interactive cache misses and
+        # every df lookup
         self.postings = postings
         self.posting_files = PostingFiles(posting_dirs)
-        self.term_stats = term_stats
         self.n_docs = n_docs
         self.avgdl = avgdl
         self.dictionary = dictionary
@@ -202,8 +214,6 @@ class SearchEngine:
         # the stats lookup costs no extra read.  df = 0 entries are
         # cached negatives (term absent).
         self._term_cache: "OrderedDict[str, tuple[int, bytes]]" = OrderedDict()
-        # stats-only twin for the distributed path (df without blobs)
-        self._df_cache: "OrderedDict[str, int]" = OrderedDict()
         self.posting_cache_max_terms = 65536
         # scored-posting cache: term -> (docs int32, scores float64).
         # A term's per-posting BM25 addend depends only on (idf, avgdl)
@@ -266,22 +276,18 @@ class SearchEngine:
             )
 
     def warm(self, preload_terms: list[str] | None = None) -> "SearchEngine":
-        """Pin the postings table in cluster memory, and optionally
-        preload a hot-term list into the driver LRU.  The pinned table
-        now serves only distributed :meth:`search` and its siblings:
-        the interactive ``*_local`` paths read cache misses straight
-        from the posting files (:class:`PostingFiles`), never from
-        executor RAM.  The reference reloads the entire index from disk
-        on every CGI request (Query.cpp:59-82).
+        """Preload a hot-term list into the driver LRU (one
+        footer-pruned posting file read for all of them).  Nothing is
+        pinned in cluster memory: distributed :meth:`search` reads the
+        term-range posting files with term pushdown, and the
+        interactive ``*_local`` paths read cache misses straight from
+        them (:class:`PostingFiles`).  The reference reloads the entire
+        index from disk on every CGI request (Query.cpp:59-82).
 
         Deliberately does NOT collect the full term->df map: at
         10^12-doc scale the vocabulary is 10^8+ terms and a full-vocab
-        driver collect is the thing that would not survive — stats ride
-        along with each posting fetch instead (one footer-pruned read
-        per set of cache-missing terms, amortized to zero for hot
-        terms)."""
-        self.postings = self.postings.persist()
-        self.postings.count()
+        driver collect is the thing that would not survive — df is read
+        per set of cache-missing terms instead (:meth:`_df_map`)."""
         if preload_terms:
             self._term_entries(sorted(set(preload_terms)))
         return self
@@ -294,54 +300,25 @@ class SearchEngine:
         )
 
     def _df_map(self, terms: list[str]) -> dict[str, int]:
-        """term -> document frequency (present terms only); consults
-        the blob LRU, then a stats-only df cache, then one pruned
-        term_stats job for the rest — repeat queries for the same terms
-        cost zero jobs (the stats-only cache holds df without blobs;
-        absent terms cache as df=0 negatives).  This is also the
-        federation hook: aggregating union df across member indexes
-        needs STATS only, never posting blobs."""
+        """term -> document frequency (present terms only).  A term in
+        the blob LRU costs nothing; the rest cost one footer-pruned read
+        of the posting files' ``term`` and ``df`` columns
+        (:meth:`PostingFiles.dfs`: no Spark job, no blob bytes).  df
+        summed over shard rows is what term_stats stores, so every idf
+        is the same.  This is also the federation hook: union df across
+        member indexes needs stats only, never posting blobs."""
         out: dict[str, int] = {}
         missing: list[str] = []
         for t in terms:
             e = self._term_cache.get(t)
             if e is None:
-                df = self._df_cache.get(t)
-                if df is None:
-                    missing.append(t)
-                    continue
-                # true LRU, not FIFO: without the bump, hot query terms
-                # evict in insertion order once the cap is hit
-                self._df_cache.move_to_end(t)
-            else:
-                self._term_cache.move_to_end(t)
-                df = e[0]
-            if df > 0:
-                out[t] = int(df)
-        if missing and self.shared_cache is not None:
-            # shared tier, df-only read (header bytes, never the blob)
-            still = []
-            for t in missing:
-                df = self.shared_cache.get_df(t)
-                if df is None:
-                    still.append(t)
-                    continue
-                self._df_cache[t] = df
-                if df > 0:
-                    out[t] = df
-            missing = still
+                missing.append(t)
+                continue
+            self._term_cache.move_to_end(t)
+            if e[0] > 0:
+                out[t] = int(e[0])
         if missing:
-            rows = self.term_stats.filter(
-                F.col("term").isin(missing)
-            ).select("term", "df").collect()
-            found = {r["term"]: int(r["df"]) for r in rows}
-            for t in missing:
-                df = found.get(t, 0)
-                self._df_cache[t] = df
-                if df > 0:
-                    out[t] = df
-            while len(self._df_cache) > self.posting_cache_max_terms:
-                self._df_cache.popitem(last=False)
+            out.update(self.posting_files.dfs(missing))
         return out
 
     def _idf_map(self, terms: list[str]) -> dict[str, float]:

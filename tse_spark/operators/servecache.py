@@ -2,8 +2,9 @@
 
 The driver-side LRUs in :mod:`tse_spark.operators.search` are
 per-process: every new serving process (CGI worker, API replica) starts
-cold and pays one pruned Spark job per first-seen term.  At fleet scale
-the same hot head terms get re-fetched by every replica.  This module
+cold and pays one footer-pruned posting file read per set of
+first-seen terms.  At fleet scale the same hot head terms get
+re-fetched by every replica.  This module
 adds the classic second tier — a filesystem-shared, snapshot-keyed
 cache of exactly the ``_term_entries`` value (df + merged
 doc-ascending posting blob), so one replica's miss warms every other
@@ -38,9 +39,11 @@ Correctness under concurrent readers + writers, with no locks:
   budget and drops every non-current key dir.
 
 At 10^12-doc scale this is the memcached/SSD tier of a serving fleet:
-the Spark-side pruned fetch stays the source of truth, the shared dir
-is purely a read-through/write-through cache whose loss costs latency,
-never correctness.
+the posting files (read by :class:`tse_spark.operators.search
+.PostingFiles`) stay the source of truth, the shared dir is purely a
+read-through/write-through cache whose loss costs latency, never
+correctness.  df lookups on their own (``SearchEngine._df_map``) skip
+this tier: they read the files' ``term`` and ``df`` columns.
 """
 
 from __future__ import annotations
@@ -133,31 +136,6 @@ class SharedPostingCache:
         except OSError:  # pragma: no cover
             pass
         return ent
-
-    def get_df(self, term: str) -> "int | None":
-        """df-only read (header + term bytes, never the blob) — the
-        stats tier for :meth:`SearchEngine._df_map`-style lookups
-        where decoding a multi-MB blob just for df would waste I/O."""
-        p = self._path(term)
-        try:
-            with open(p, "rb") as f:
-                hdr = f.read(_HDR.size)
-                if len(hdr) != _HDR.size:
-                    raise OSError
-                magic, tlen, df, blen = _HDR.unpack(hdr)
-                tb = term.encode("utf-8", "surrogatepass")
-                if magic != _MAGIC or tlen != len(tb) or f.read(tlen) != tb:
-                    self.misses += 1
-                    return None
-        except OSError:
-            self.misses += 1
-            return None
-        self.hits += 1
-        try:
-            os.utime(p)
-        except OSError:  # pragma: no cover
-            pass
-        return int(df)
 
     @staticmethod
     def _parse(term: str, raw: bytes) -> "tuple[int, bytes] | None":

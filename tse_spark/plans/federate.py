@@ -31,9 +31,10 @@ global stats injected (operators/search.py idf_override/avgdl_override),
 members' results union (disjoint doc sets, so per-member top-k composes
 exactly), one global TakeOrderedAndProject.  Per-member tombstones mask
 as usual.  The interactive path merges driver-side over the members'
-scored posting caches.  df aggregation costs one pruned term_stats
-fetch per member per cache-missing term — at query time, never a
-full-vocabulary join.
+scored posting caches.  df aggregation costs one footer-pruned read of
+each member's posting files (``term`` and ``df`` columns only) for the
+terms missing from its blob LRU — at query time, with no Spark job and
+never a full-vocabulary join.
 """
 
 from __future__ import annotations
@@ -85,16 +86,11 @@ class FederatedIndex:
             self.total_dl / self.n_docs if self.n_docs else 0.0
         )
 
-    def warm(self) -> "FederatedIndex":
-        for h in self.handles:
-            h.engine.warm()
-        return self
-
     def _global_idf(self, terms: list[str]) -> dict[str, float]:
-        """Union df per term via each member's STATS-ONLY cache (one
-        pruned term_stats fetch per member for cache-missing terms —
-        never posting blobs; a hot term's blob can be megabytes while
-        its df is one integer)."""
+        """Union df per term from each member's :meth:`_df_map` (a
+        footer-pruned read of the ``term`` and ``df`` columns for the
+        terms missing from its blob LRU — never posting blobs; a hot
+        term's blob can be megabytes while its df is one integer)."""
         df_g: dict[str, int] = {}
         for h in self.handles:
             for t, df in h.engine._df_map(terms).items():
@@ -150,7 +146,7 @@ class FederatedIndex:
         member's df — the exact count of (term, doc) postings the
         member can contribute, i.e. ReDDE's sample-based relevant-doc
         estimate with the sample == the whole member.  Costs one
-        pruned stats-only term fetch per member (never posting blobs).
+        footer-pruned df read per member (never posting blobs).
         Returns [(member, score)] sorted score-desc, ties by member."""
         terms = self.handles[0].engine.query_terms(query)
         out = []

@@ -290,8 +290,8 @@ class IndexHandle:
             for d in (meta or {}).get("postings_dirs", ["postings"])
         ]
         self.engine = se.SearchEngine(
-            spark, postings, posting_dirs, term_stats, n_docs, avgdl,
-            dictionary, tombstones=tombstones,
+            spark, postings, posting_dirs, n_docs, avgdl, dictionary,
+            tombstones=tombstones,
         )
 
     def attach_shared_cache(self, cache_root: str):
