@@ -912,6 +912,27 @@ def _q_source_rollup(spark, sf):
 _INDEX_CACHE: dict[str, object] = {}
 
 
+def _current_meta(out):
+    """The published meta.json of a persistent index dir, or None when
+    there is none.  A dir written in an older posting format is
+    removed, so the caller rebuilds it from scratch."""
+    import json as _json
+    import os as _os
+    import shutil
+
+    from tse_spark.operators import codec
+
+    path = _os.path.join(out, "meta.json")
+    if not _os.path.exists(path):
+        return None
+    with open(path) as f:
+        meta = _json.load(f)
+    if meta.get("posting_format") != codec.POSTING_FORMAT:
+        shutil.rmtree(out, ignore_errors=True)
+        return None
+    return meta
+
+
 def _ws_index(spark, sf):
     """Build (once per sf_dir) a compressed sharded index over the
     documents table with the whitespace tokenizer; serve via WAND."""
@@ -923,9 +944,8 @@ def _ws_index(spark, sf):
     if key in _INDEX_CACHE:
         return _INDEX_CACHE[key]
     out = "/tmp/tse_ws_index_" + hashlib.md5(sf.encode()).hexdigest()[:8]
-    pipe = pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=8, block_size=128
-    )
+    _current_meta(out)
+    pipe = pl.IndexPipeline(spark, out, tokenizer="ws", num_shards=8)
     docs = _t(spark, sf, "documents").select("doc_id", "text")
     handle = pipe.run_from_docs(docs, input_key=sf, resume=True)
     _INDEX_CACHE[key] = handle
@@ -935,14 +955,11 @@ def _ws_index(spark, sf):
 def _merged_index(spark, sf):
     """Cross-segment merge lifecycle (plans/merge.py): the documents
     corpus split url-disjoint by doc-id parity, each half built as an
-    INDEPENDENT ws index (different shard grids: 5/128 vs 3/64), then
+    INDEPENDENT ws index (different shard grids: 5 vs 3 shards), then
     merge_indexes folds them — segment A's ids survive verbatim,
-    segment B's lift by max_doc_id(A)+1, blocks re-encode under the
-    merged avgdl.  Idempotent across process runs (a published
-    op="merge" snapshot short-circuits)."""
+    segment B's lift by max_doc_id(A)+1.  Idempotent across process
+    runs (a published op="merge" snapshot short-circuits)."""
     import hashlib
-    import json as _json
-    import os as _os
 
     from tse_spark.plans import merge as mmod
     from tse_spark.plans import pipeline as pl
@@ -952,25 +969,20 @@ def _merged_index(spark, sf):
         return _INDEX_CACHE[key]
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
     out = f"/tmp/tse_ws_merged_{tag}"
-    meta_path = _os.path.join(out, "meta.json")
-    if _os.path.exists(meta_path):
-        with open(meta_path) as f:
-            m = _json.load(f)
-        if m.get("snapshot_op") == "merge":
-            h = pl.load_index(spark, out)
-            _INDEX_CACHE[key] = h
-            return h
+    m = _current_meta(out)
+    if m is not None and m.get("snapshot_op") == "merge":
+        h = pl.load_index(spark, out)
+        _INDEX_CACHE[key] = h
+        return h
     docs = _t(spark, sf, "documents").select("doc_id", "text")
     ha = pl.IndexPipeline(
-        spark, f"/tmp/tse_ws_msega_{tag}", tokenizer="ws",
-        num_shards=5, block_size=128,
+        spark, f"/tmp/tse_ws_msega_{tag}", tokenizer="ws", num_shards=5,
     ).run_from_docs(
         docs.filter(F.col("doc_id") % 2 == 0),
         input_key="mseg_a:" + sf, resume=True,
     )
     hb = pl.IndexPipeline(
-        spark, f"/tmp/tse_ws_msegb_{tag}", tokenizer="ws",
-        num_shards=3, block_size=64,
+        spark, f"/tmp/tse_ws_msegb_{tag}", tokenizer="ws", num_shards=3,
     ).run_from_docs(
         docs.filter(F.col("doc_id") % 2 == 1),
         input_key="mseg_b:" + sf, resume=True,
@@ -989,7 +1001,6 @@ def _absorbed_index(spark, sf):
     shard_range multiple (append's base law).  Idempotent across
     process runs (a published op="absorb" snapshot short-circuits)."""
     import hashlib
-    import json as _json
     import os as _os
     import shutil
 
@@ -1001,12 +1012,8 @@ def _absorbed_index(spark, sf):
         return _INDEX_CACHE[key]
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
     out = f"/tmp/tse_ws_absorbed_{tag}"
-    meta_path = _os.path.join(out, "meta.json")
-    done = False
-    if _os.path.exists(meta_path):
-        with open(meta_path) as f:
-            done = _json.load(f).get("snapshot_op") == "absorb"
-    if done:
+    m = _current_meta(out)
+    if m is not None and m.get("snapshot_op") == "absorb":
         h = pl.load_index(spark, out)
     else:
         _merged_index(spark, sf)  # builds the two segment dirs
@@ -1152,8 +1159,9 @@ def _ws_pruned_index(spark, sf):
     if key in _INDEX_CACHE:
         return _INDEX_CACHE[key]
     out = "/tmp/tse_ws_pidx_" + hashlib.md5(sf.encode()).hexdigest()[:8]
+    _current_meta(out)
     pipe = pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=8, block_size=128,
+        spark, out, tokenizer="ws", num_shards=8,
         prune_m=PRUNE_M,  # module constant defined below; bound at call
     )
     docs = _t(spark, sf, "documents").select("doc_id", "text")
@@ -1198,9 +1206,8 @@ def _tomb_index(spark, sf, compacted: bool):
     out = f"/tmp/tse_ws_{tag}_" + hashlib.md5(sf.encode()).hexdigest()[:8]
     meta_path = _os.path.join(out, "meta.json")
     done = False
-    if _os.path.exists(meta_path):
-        with open(meta_path) as f:
-            m = _json.load(f)
+    m = _current_meta(out)
+    if m is not None:
         done = (
             m.get("compact_version", 0) >= 1
             if compacted
@@ -1214,9 +1221,7 @@ def _tomb_index(spark, sf, compacted: bool):
     if done:
         handle = pl.load_index(spark, out)
     else:
-        pipe = pl.IndexPipeline(
-            spark, out, tokenizer="ws", num_shards=8, block_size=128
-        )
+        pipe = pl.IndexPipeline(spark, out, tokenizer="ws", num_shards=8)
         docs = _t(spark, sf, "documents").select("doc_id", "text")
         pipe.run_from_docs(docs, input_key="tomb:" + sf, resume=False)
         if compacted:
@@ -1608,12 +1613,9 @@ def _q_wand_federated(spark, sf):
                 f"/tmp/tse_ws_fed{parity}_"
                 + hashlib.md5(sf.encode()).hexdigest()[:8]
             )
-            import os as _os
-
-            if not _os.path.exists(_os.path.join(out, "meta.json")):
+            if _current_meta(out) is None:
                 pl.IndexPipeline(
-                    spark, out, tokenizer="ws",
-                    num_shards=4, block_size=128,
+                    spark, out, tokenizer="ws", num_shards=4,
                 ).run_from_docs(
                     _t(spark, sf, "documents")
                     .filter(F.col("doc_id") % 2 == parity)
@@ -1637,7 +1639,6 @@ def _q_wand_selective(spark, sf):
     min_score=1 cut the ranking must equal the single-index
     full-corpus BM25 — the wand_topk oracle."""
     import hashlib
-    import os as _os
 
     from tse_spark.plans import federate as fe
     from tse_spark.plans import pipeline as pl
@@ -1650,10 +1651,9 @@ def _q_wand_selective(spark, sf):
                 f"/tmp/tse_ws_fedsel{part}_"
                 + hashlib.md5(sf.encode()).hexdigest()[:8]
             )
-            if not _os.path.exists(_os.path.join(out, "meta.json")):
+            if _current_meta(out) is None:
                 pl.IndexPipeline(
-                    spark, out, tokenizer="ws",
-                    num_shards=4, block_size=128,
+                    spark, out, tokenizer="ws", num_shards=4,
                 ).run_from_docs(
                     _t(spark, sf, "documents")
                     .filter(F.col("doc_id") % 3 == part)
@@ -1707,8 +1707,6 @@ def _recrawl_index(spark, sf):
     tombstones so stats are exact over the latest-per-url corpus.
     Idempotent across process runs (finished state short-circuits)."""
     import hashlib
-    import json as _json
-    import os as _os
 
     from tse_spark.plans import append as amod
     from tse_spark.plans import compact as cmod
@@ -1718,11 +1716,9 @@ def _recrawl_index(spark, sf):
     if key in _INDEX_CACHE:
         return _INDEX_CACHE[key]
     out = "/tmp/tse_ws_ridx_" + hashlib.md5(sf.encode()).hexdigest()[:8]
-    meta_path = _os.path.join(out, "meta.json")
     done = False
-    if _os.path.exists(meta_path):
-        with open(meta_path) as f:
-            m = _json.load(f)
+    m = _current_meta(out)
+    if m is not None:
         done = (
             any(a.get("op") == "upsert" for a in m.get("appends", []))
             and m.get("compact_version", 0) >= 1
@@ -1766,7 +1762,7 @@ def _recrawl_index(spark, sf):
         ).parquet(batch_src)
 
         pl.IndexPipeline(
-            spark, out, tokenizer="ws", num_shards=8, block_size=128
+            spark, out, tokenizer="ws", num_shards=8
         ).run_from_pages(base_src, resume=False)
         amod.upsert_pages(spark, out, batch_src)
         handle = cmod.compact_index(spark, out)

@@ -12,7 +12,7 @@ master is hardcoded here):
         scripts/build_index.py \
         --pages  /data/pages_parquet_or_iceberg_dir \
         --out    /data/tse_index \
-        --shards 4096 --block-size 128
+        --shards 4096
 
 The spark.speculation flags re-launch straggler tasks on shared
 clusters; they belong HERE (cluster mode) because Spark never starts
@@ -41,7 +41,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--pages", required=True, help="pages parquet path")
     ap.add_argument("--out", required=True, help="index output dir")
     ap.add_argument("--shards", type=int, default=32)
-    ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument(
         "--tokenizer", choices=["tse", "ws"], default="tse",
         help="tse = extraction automaton + FMM (GB2312); ws = whitespace",
@@ -92,7 +91,6 @@ def main(argv: list[str] | None = None) -> int:
         tokenizer=args.tokenizer,
         dictionary=dictionary,
         num_shards=args.shards,
-        block_size=args.block_size,
         force_extract=args.force_extract,
         prune_m=args.prune_m,
     )

@@ -62,7 +62,6 @@ def main() -> None:
     ap.add_argument("--pages", required=True, help="pages parquet dir")
     ap.add_argument("--out", required=True, help="index output dir (wiped)")
     ap.add_argument("--shards", type=int, default=32)
-    ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument("--partitions", type=int, default=64)
     ap.add_argument("--warmup-docs", type=int, default=4000)
     ap.add_argument(
@@ -102,7 +101,7 @@ def main() -> None:
         pl.IndexPipeline(
             spark, warm_out, tokenizer="tse",
             dictionary=fixtures.mini_dict_bytes(),
-            num_shards=args.shards, block_size=args.block_size,
+            num_shards=args.shards,
             num_partitions=args.partitions, force_extract=True,
             checkpoint_mode="final",
         ).run_from_pages(warm_dir, resume=False)
@@ -113,7 +112,7 @@ def main() -> None:
     pipe = pl.IndexPipeline(
         spark, args.out, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=args.shards, block_size=args.block_size,
+        num_shards=args.shards,
         num_partitions=args.partitions, force_extract=True,
         checkpoint_mode="final",
     )

@@ -34,7 +34,7 @@ def appended(tmp_path_factory, spark, corpora):
     pipe = pl.IndexPipeline(
         spark, idx, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=7, block_size=32, num_partitions=4,
+        num_shards=7, num_partitions=4,
     )
     h0 = pipe.run_from_pages(a_dir, resume=False)
     old_rows = {
@@ -54,7 +54,7 @@ def rebuilt(tmp_path_factory, spark, corpora):
     pipe = pl.IndexPipeline(
         spark, idx, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=7, block_size=32, num_partitions=4,
+        num_shards=7, num_partitions=4,
     )
     return pipe.run_from_pages(ab_dir, resume=False)
 

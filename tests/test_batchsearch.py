@@ -28,7 +28,7 @@ def idx(tmp_path_factory, spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path_factory.mktemp("batch_idx"))
     pipe = pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=4, block_size=32
+        spark, out, tokenizer="ws", num_shards=4
     )
     return pipe.run_from_docs(docs, input_key="batch", resume=False)
 
@@ -140,7 +140,7 @@ def test_batch_masks_tombstones_and_speaks_the_index_tokenizer(
     h = pl.IndexPipeline(
         spark, out, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=3, block_size=32,
+        num_shards=3,
     ).run_from_pages(src, resume=False)
     q = spark.createDataFrame(
         [(0, "web search"), (1, "搜索引擎")], "query_id long, text string"

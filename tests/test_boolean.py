@@ -131,7 +131,7 @@ def test_boolean_kernel_empty_cases():
 def ws_handle(spark, tmp_path_factory):
     idx_dir = str(tmp_path_factory.mktemp("bool_ws_idx"))
     pipe = pl.IndexPipeline(
-        spark, idx_dir, tokenizer="ws", num_shards=5, block_size=64
+        spark, idx_dir, tokenizer="ws", num_shards=5
     )
     docs = (
         spark.read.parquet(f"{SF}/documents.parquet")

@@ -12,7 +12,7 @@ GB = "gb2312"
 
 
 # ---------------------------------------------------------------------------
-# varint + block codec (pure python/numpy)
+# varint codec (pure python/numpy); posting runs: tests/test_codec_runs.py
 # ---------------------------------------------------------------------------
 
 def _pure_varint(vals):
@@ -47,29 +47,6 @@ def test_varint_roundtrip(seed):
     assert (dec == vals).all()
 
 
-def test_block_roundtrip_and_skip_metadata():
-    rng = np.random.RandomState(7)
-    n = 1000
-    docs = np.unique(rng.randint(0, 100000, n).astype(np.int64))
-    tfs = rng.randint(1, 20, docs.size).astype(np.int64)
-    dls = rng.randint(5, 500, docs.size).astype(np.int64)
-    avgdl = 100.0
-    blocks, mx = codec.encode_postings(docs, tfs, dls, avgdl, block_size=128)
-    d2, t2, l2 = codec.decode_all(blocks)
-    assert (d2 == docs).all() and (t2 == tfs).all() and (l2 == dls).all()
-    refs = codec.scan_blocks(blocks)
-    assert sum(r.count for r in refs) == docs.size
-    comp = codec.bm25_tf_component(tfs, dls, avgdl)
-    assert mx == pytest.approx(float(comp.max()), rel=1e-6)
-    # per-block max and boundary docs are exact
-    pos = 0
-    for r in refs:
-        seg = slice(pos, pos + r.count)
-        assert r.first_doc == docs[seg][0] and r.last_doc == docs[seg][-1]
-        assert r.max_score == pytest.approx(float(comp[seg].max()), rel=1e-6)
-        pos += r.count
-
-
 # ---------------------------------------------------------------------------
 # top-k kernels == exhaustive on a pure-python corpus
 # ---------------------------------------------------------------------------
@@ -87,12 +64,10 @@ def _mk_runs(eng: oracle.BM25Oracle, terms):
                 docs.append(d)
                 tfs.append(c)
                 dls.append(eng.doclen[d])
-        blocks, _ = codec.encode_postings(
+        blocks = codec.encode_postings(
             np.array(docs, dtype=np.int64),
             np.array(tfs, dtype=np.int64),
             np.array(dls, dtype=np.int64),
-            eng.avgdl,
-            block_size=32,
         )
         runs.append((oracle.bm25_idf(eng.n_docs, eng.df[t]), blocks))
     return runs
@@ -128,7 +103,7 @@ def _scored_runs(runs, avgdl):
 @pytest.mark.parametrize("k", [1, 5, 10, 50])
 def test_blockmax_vectorized_equals_exhaustive(py_engine, k):
     """The per-shard disjunctive law of distributed ``search()``: decode
-    every block, score with numpy, select with ``topk_from_scored`` —
+    every run, score with numpy, select with ``topk_from_scored`` —
     must reproduce exhaustive BM25 exactly."""
     for qid, query, _ in fixtures.gen_queries():
         qb = query.encode(GB)
@@ -159,8 +134,8 @@ def _reference_topk(required, optional, k, excluded):
     return ranked[: max(k, 0)]
 
 
-@pytest.mark.parametrize("avgdl_drift", [1.0, 1.6])
-def test_blockmax_equals_exhaustive_random_postings(avgdl_drift):
+@pytest.mark.parametrize("avgdl_scale", [1.0, 1.6])
+def test_blockmax_equals_exhaustive_random_postings(avgdl_scale):
     """Adversarial synthetic runs against a pure-Python reference:
     uniform doc lengths in even trials force tie-heavy top-ks, so
     selection must keep every tie at the k-th score and the doc-asc
@@ -168,13 +143,12 @@ def test_blockmax_equals_exhaustive_random_postings(avgdl_drift):
     per-shard path) and its dense ``n_docs`` branch, and
     ``boolean_topk_scored`` with and without a required run.  Excluded
     ids (tombstones) never appear and never suppress a surviving doc;
-    ``k = 0`` selects nothing.  ``avgdl_drift`` > 1 is the state after
-    appends: blocks were encoded with an older, smaller avgdl and the
-    live avgdl is ``avgdl_drift`` times larger; decoded scores must
-    depend on the live avgdl only."""
+    ``k = 0`` selects nothing.  Runs carry no corpus statistic, so the
+    same encoded runs are scored under two avgdls (``avgdl_scale`` x
+    20, as after appends move it); decoded scores must depend on the
+    scoring avgdl only."""
     rng = np.random.RandomState(5)
-    enc_avgdl = 20.0
-    avgdl = enc_avgdl * avgdl_drift
+    avgdl = 20.0 * avgdl_scale
     for trial in range(40):
         n_terms = rng.randint(1, 5)
         runs, raw = [], []
@@ -186,9 +160,7 @@ def test_blockmax_equals_exhaustive_random_postings(avgdl_drift):
                 dls = rng.randint(2, 80, len(docs)).astype(np.int64)
             else:
                 dls = np.full(len(docs), 20, dtype=np.int64)  # ties
-            blocks, _ = codec.encode_postings(
-                docs, tfs, dls, enc_avgdl, block_size=16
-            )
+            blocks = codec.encode_postings(docs, tfs, dls)
             idf = float(rng.uniform(0.1, 6.0))
             runs.append((idf, blocks))
             raw.append((docs, wand._score_arrays(idf, tfs, dls, avgdl)))
@@ -249,7 +221,6 @@ def built(spark, tmp_path_factory):
         tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
         num_shards=7,
-        block_size=32,
         num_partitions=4,
     )
     handle = pipe.run_from_pages(f"{data_dir}/pages.parquet", resume=False)
@@ -305,7 +276,6 @@ def test_resume_skips_stages(built, spark):
         tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
         num_shards=3,          # changed
-        block_size=32,
         num_partitions=4,
     )
     h3 = pipe2.run_from_pages(f"{data_dir}/pages.parquet", resume=True)
@@ -338,7 +308,7 @@ def test_hot_term_salted_across_shards(spark):
         pd.DataFrame(rows, columns=["doc_id", "term", "tf", "dl"])
     )
     shards = po.build_posting_shards(
-        tf_dl, n_docs=n_docs, avgdl=5.0, num_shards=n_shards, block_size=32
+        tf_dl, n_docs=n_docs, num_shards=n_shards
     ).collect()
 
     hot = [r for r in shards if r["term"] == "hot"]
@@ -373,7 +343,7 @@ def test_posting_build_survives_zero_term_docs(spark):
         ),
         "doc_id long, dl long, terms array<string>, tfs array<long>",
     )
-    assert po.build_posting_shards(df, 3, 1.0, num_shards=2).count() == 0
+    assert po.build_posting_shards(df, 3, num_shards=2).count() == 0
 
     mixed = spark.createDataFrame(
         pd.DataFrame(
@@ -386,7 +356,7 @@ def test_posting_build_survives_zero_term_docs(spark):
         ),
         "doc_id long, dl long, terms array<string>, tfs array<long>",
     )
-    rows = po.build_posting_shards(mixed, 2, 1.0, num_shards=2).collect()
+    rows = po.build_posting_shards(mixed, 2, num_shards=2).collect()
     assert sorted(r["term"] for r in rows) == ["ab", "cd"]
 
 

@@ -32,7 +32,7 @@ def idx(tmp_path_factory, spark):
     out = str(tmp_path_factory.mktemp("cmp_idx"))
     pipe = pl.IndexPipeline(
         spark, out, tokenizer="tse", dictionary=fixtures.mini_dict_bytes(),
-        num_shards=5, block_size=32, num_partitions=4,
+        num_shards=5, num_partitions=4,
     )
     pipe.run_from_pages(srcs[0], resume=False)
     ap.append_pages(spark, out, srcs[1], fixtures.mini_dict_bytes())
@@ -83,7 +83,7 @@ def test_compact_is_noop_on_fresh_index(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("noop_idx"))
     pl.IndexPipeline(
         spark, out, tokenizer="tse", dictionary=fixtures.mini_dict_bytes(),
-        num_shards=4, block_size=32, num_partitions=4,
+        num_shards=4, num_partitions=4,
     ).run_from_pages(src, resume=False)
     h = cm.compact_index(spark, out, fixtures.mini_dict_bytes())
     assert h.n_docs > 0

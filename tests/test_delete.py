@@ -32,7 +32,7 @@ def base(tmp_path_factory, spark):
     pipe = pl.IndexPipeline(
         spark, out, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=5, block_size=32, num_partitions=4,
+        num_shards=5, num_partitions=4,
     )
     pipe.run_from_pages(src, resume=False)
     return src, out
@@ -249,7 +249,7 @@ def test_delete_compact_equals_rebuild(
     pl.IndexPipeline(
         spark, out_r, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=5, block_size=32, num_partitions=4,
+        num_shards=5, num_partitions=4,
     ).run_from_pages(surv, resume=False)
     with open(os.path.join(out_r, "meta.json")) as f:
         meta_r = json.load(f)

@@ -33,7 +33,7 @@ def docs(spark):
 def handle(tmp_path_factory, spark, docs):
     out = str(tmp_path_factory.mktemp("facet_idx"))
     pipe = pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=5, block_size=16
+        spark, out, tokenizer="ws", num_shards=5
     )
     h = pipe.run_from_docs(
         docs.select("doc_id", "text"), input_key="facets", resume=False
@@ -262,7 +262,7 @@ def test_compaction_reshard_detected_and_repaired(spark, tmp_path_factory):
     pipe = pl.IndexPipeline(
         spark, out, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=4, block_size=32, num_partitions=4,
+        num_shards=4, num_partitions=4,
     )
     pipe.run_from_pages(srcs[0], resume=False)
     ap.append_pages(spark, out, srcs[1], fixtures.mini_dict_bytes())

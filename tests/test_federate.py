@@ -36,14 +36,14 @@ def setup(tmp_path_factory, spark):
         pl.IndexPipeline(
             spark, out, tokenizer="tse",
             dictionary=fixtures.mini_dict_bytes(),
-            num_shards=3, block_size=32, num_partitions=4,
+            num_shards=3, num_partitions=4,
         ).run_from_pages(srcs[name], resume=False)
         outs.append(out)
     out_u = str(tmp_path_factory.mktemp("fed_union"))
     pl.IndexPipeline(
         spark, out_u, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=5, block_size=32, num_partitions=4,
+        num_shards=5, num_partitions=4,
     ).run_from_pages(union, resume=False)
     f = fed.FederatedIndex(spark, outs, fixtures.mini_dict_bytes())
     hu = pl.load_index(spark, out_u, fixtures.mini_dict_bytes())
@@ -220,7 +220,7 @@ def sel_setup(tmp_path_factory, spark):
     for i, rows in enumerate(rows_sets):
         out = str(tmp_path_factory.mktemp(f"sel_{i}"))
         pl.IndexPipeline(
-            spark, out, tokenizer="ws", num_shards=2, block_size=32,
+            spark, out, tokenizer="ws", num_shards=2,
         ).run_from_docs(
             spark.createDataFrame(rows, "doc_id long, text string"),
             input_key=f"sel{i}", resume=False,

@@ -28,7 +28,7 @@ def idx(tmp_path_factory, spark):
         pdf.rename(columns={"index": "doc_id"})[["doc_id", "text"]]
     )
     h = pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=4, block_size=32
+        spark, out, tokenizer="ws", num_shards=4
     ).run_from_docs(docs, input_key="fsck", resume=False)
     return h, out
 

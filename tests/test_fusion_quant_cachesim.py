@@ -590,7 +590,7 @@ def test_admission_plan_warms_the_serving_tier(spark, tmp_path):
     )
     h = pl.IndexPipeline(
         spark, str(tmp_path / "idx"), tokenizer="ws",
-        num_shards=3, block_size=16, num_partitions=2,
+        num_shards=3, num_partitions=2,
     ).run_from_docs(docs, input_key="adm", resume=False)
 
     tf = ib.build_tf_ws(docs)

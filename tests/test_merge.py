@@ -44,8 +44,8 @@ def segs(tmp_path_factory, spark):
         spark.read.parquet(pb)
     ).write.mode("overwrite").parquet(pu)
     base = tmp_path_factory.mktemp("mg_idx")
-    ha = _build(spark, str(base / "ia"), pa, num_shards=5, block_size=32)
-    hb = _build(spark, str(base / "ib"), pb, num_shards=3, block_size=16)
+    ha = _build(spark, str(base / "ia"), pa, num_shards=5)
+    hb = _build(spark, str(base / "ib"), pb, num_shards=3)
     return str(base), pa, pb, pu, ha, hb
 
 
@@ -76,7 +76,7 @@ def test_merge_equals_union_rebuild(spark, segs, tmp_path):
         fixtures.mini_dict_bytes(),
     )
     hr = _build(
-        spark, str(tmp_path / "rebuild"), pu, num_shards=5, block_size=32
+        spark, str(tmp_path / "rebuild"), pu, num_shards=5
     )
     assert hm.n_docs == hr.n_docs == ha.n_docs + hb.n_docs
     assert hm.avgdl == pytest.approx(hr.avgdl, rel=1e-12)
@@ -190,7 +190,7 @@ def test_merged_index_supports_full_lifecycle(spark, segs, tmp_path):
     ).parquet(pr)
     hr = _build(
         spark, str(tmp_path / "rebuild_life"), pr,
-        num_shards=5, block_size=32,
+        num_shards=5,
     )
     assert h.n_docs == hr.n_docs
     assert h.avgdl == pytest.approx(hr.avgdl, rel=1e-12)
@@ -210,7 +210,7 @@ def test_three_way_merge_equals_union_rebuild(spark, segs, tmp_path):
     spark.createDataFrame(
         fixtures.gen_pages(90, start=300, length_scale=3)
     ).write.mode("overwrite").parquet(d)
-    hc = _build(spark, str(tmp_path / "ic"), d, num_shards=2, block_size=64)
+    hc = _build(spark, str(tmp_path / "ic"), d, num_shards=2)
     hm = mg.merge_indexes_many(
         spark, [ha.out_dir, hb.out_dir, hc.out_dir],
         str(tmp_path / "m3"), fixtures.mini_dict_bytes(),
@@ -220,7 +220,7 @@ def test_three_way_merge_equals_union_rebuild(spark, segs, tmp_path):
         spark.read.parquet(d)
     ).write.mode("overwrite").parquet(pall)
     hr = _build(
-        spark, str(tmp_path / "r3"), pall, num_shards=5, block_size=32
+        spark, str(tmp_path / "r3"), pall, num_shards=5
     )
     assert hm.n_docs == hr.n_docs == ha.n_docs + hb.n_docs + hc.n_docs
     assert hm.avgdl == pytest.approx(hr.avgdl, rel=1e-12)
@@ -263,7 +263,7 @@ def test_reconcile_merge_latest_per_url_wins(spark, segs, tmp_path):
     newer.unionByName(stale).unionByName(
         fresh.select(*newer.columns)
     ).write.mode("overwrite").parquet(pc)
-    hc = _build(spark, str(tmp_path / "ic"), pc, num_shards=4, block_size=32)
+    hc = _build(spark, str(tmp_path / "ic"), pc, num_shards=4)
 
     hm = mg.reconcile_merge(
         spark, [ha.out_dir, hc.out_dir], str(tmp_path / "rm"),
@@ -283,7 +283,7 @@ def test_reconcile_merge_latest_per_url_wins(spark, segs, tmp_path):
     pl_dir = str(tmp_path / "pages_latest")
     latest.write.mode("overwrite").parquet(pl_dir)
     hr = _build(
-        spark, str(tmp_path / "rr"), pl_dir, num_shards=5, block_size=32
+        spark, str(tmp_path / "rr"), pl_dir, num_shards=5
     )
     assert hm.n_docs == hr.n_docs
     assert hm.avgdl == pytest.approx(hr.avgdl, rel=1e-12)

@@ -23,7 +23,7 @@ QUERY = ["spark", "join", "data"]
 def pruned_handle(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("pruned_idx"))
     pipe = pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=4, block_size=64, prune_m=M
+        spark, out, tokenizer="ws", num_shards=4, prune_m=M
     )
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", "text"

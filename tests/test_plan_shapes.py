@@ -99,7 +99,7 @@ def test_batch_search_never_shuffles_the_index_side(spark, tmp_path):
 
     out = str(tmp_path / "bidx")
     pipe = pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=2, block_size=32
+        spark, out, tokenizer="ws", num_shards=2
     )
     h = pipe.run_from_docs(_docs(spark), input_key="plan", resume=False)
     q = spark.createDataFrame(
@@ -130,7 +130,7 @@ def test_ltr_features_no_corpus_rescan_for_features(spark, tmp_path):
 
     out = str(tmp_path / "lidx")
     pipe = pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=2, block_size=32
+        spark, out, tokenizer="ws", num_shards=2
     )
     d = _docs(spark)
     h = pipe.run_from_docs(d, input_key="ltrplan", resume=False)
@@ -389,7 +389,7 @@ def test_merge_partials_range_partitions_by_term_shard(spark):
     partials = spark.createDataFrame(
         [("tok1", 0, 1, 0, b"")], po.PARTIAL_SCHEMA
     )
-    out = po.merge_partials(partials, 1.0, 128, 4)
+    out = po.merge_partials(partials, 4)
     plan = _plan(out)
     out._partials.unpersist()
     assert re.search(

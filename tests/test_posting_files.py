@@ -52,7 +52,7 @@ def lifecycle(tmp_path_factory, spark):
     leaked = {}
     handles = {}
     handles["build"] = pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=4, block_size=32,
+        spark, out, tokenizer="ws", num_shards=4,
         num_partitions=4,
     ).run_from_pages(srcs["a"], resume=False)
     leaked["build"] = _persisted(spark) - before

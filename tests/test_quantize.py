@@ -50,9 +50,7 @@ def shard_setup(spark):
     doclen = ib.build_doclen(tf)
     n, avgdl = ib.corpus_stats(doclen)
     tf_dl = po.with_doclen(tf)
-    shards = po.build_posting_shards(
-        tf_dl, n, avgdl, num_shards=4, block_size=16
-    ).persist()
+    shards = po.build_posting_shards(tf_dl, n, num_shards=4).persist()
     shards.count()
     return tf, doclen, n, avgdl, shards
 

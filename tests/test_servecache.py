@@ -33,7 +33,7 @@ def idx(tmp_path_factory, spark):
     ).parquet(p)
     out = str(tmp_path_factory.mktemp("svc_idx"))
     pipe = pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=4, block_size=32,
+        spark, out, tokenizer="ws", num_shards=4,
         num_partitions=4,
     )
     pipe.run_from_pages(p, resume=False)

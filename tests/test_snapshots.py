@@ -36,7 +36,7 @@ def lifecycle(tmp_path_factory, spark):
     pipe = pl.IndexPipeline(
         spark, out, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=4, block_size=32, num_partitions=4,
+        num_shards=4, num_partitions=4,
     )
     truths = {}
 
@@ -111,7 +111,7 @@ def test_concurrent_commit_detected(tmp_path, spark):
     ).write.mode("overwrite").parquet(src)
     out = str(tmp_path / "idx")
     pl.IndexPipeline(
-        spark, out, tokenizer="ws", num_shards=2, block_size=32
+        spark, out, tokenizer="ws", num_shards=2
     ).run_from_pages(src, resume=False)
     with open(os.path.join(out, "meta.json")) as f:
         stale = json.load(f)  # writer B loads v1

@@ -55,7 +55,7 @@ def ingested(dirs, spark):
     pipe = pl.IndexPipeline(
         spark, idx, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=7, block_size=32, num_partitions=4,
+        num_shards=7, num_partitions=4,
     )
     pipe.run_from_pages(base_dir, resume=False)
     # facet sidecar over the base build: the ingest sink must keep it
@@ -91,7 +91,7 @@ def rebuilt(dirs, spark):
     pipe = pl.IndexPipeline(
         spark, idx, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=7, block_size=32, num_partitions=4,
+        num_shards=7, num_partitions=4,
     )
     return pipe.run_from_pages(all_dir, resume=False)
 

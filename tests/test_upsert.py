@@ -93,7 +93,7 @@ def _build(spark, idx, src):
     pipe = pl.IndexPipeline(
         spark, idx, tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
-        num_shards=7, block_size=32, num_partitions=4,
+        num_shards=7, num_partitions=4,
     )
     return pipe.run_from_pages(src, resume=False)
 
@@ -232,7 +232,7 @@ def test_upsert_requires_pages_docs(spark, tmp_path_factory, data):
         pdf.rename(columns={"index": "doc_id"})[["doc_id", "text"]]
     )
     pl.IndexPipeline(
-        spark, idx, tokenizer="ws", num_shards=4, block_size=32
+        spark, idx, tokenizer="ws", num_shards=4
     ).run_from_docs(docs, input_key="upsert-docsonly", resume=False)
     with pytest.raises(ValueError):
         ap.upsert_pages(

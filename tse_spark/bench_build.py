@@ -163,7 +163,6 @@ def _run_warmup(spark, args, cpus: int) -> None:
         tokenizer="tse",
         dictionary=fixtures.mini_dict_bytes(),
         num_shards=args.shards,
-        block_size=args.block_size,
         num_partitions=BENCH_PARTITIONS,
         force_extract=True,
         checkpoint_mode="final",
@@ -189,7 +188,6 @@ def main() -> None:
     ap.add_argument("--pages", required=True, help="pages parquet dir/file")
     ap.add_argument("--out", required=True, help="index output dir (wiped)")
     ap.add_argument("--shards", type=int, default=32)
-    ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument("--warmup-docs", type=int, default=4000)
     ap.add_argument(
         "--quiet-steal",
@@ -248,7 +246,6 @@ def main() -> None:
             tokenizer="tse",
             dictionary=fixtures.mini_dict_bytes(),
             num_shards=args.shards,
-            block_size=args.block_size,
             num_partitions=BENCH_PARTITIONS,
             force_extract=True,  # always exercise the extraction automaton
             checkpoint_mode="final",

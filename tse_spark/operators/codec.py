@@ -1,48 +1,51 @@
-"""Posting-list codec: delta-gap + varint blocks with per-block max-score.
+"""Posting-list codec: one self-delimiting varint run per posting row.
 
 Replaces the reference's ASCII posting lines (``term \\t docid docid ...``,
-index/CrtInvertedIdx.cpp:29-47, format MyNotes.txt:8-10) with the
-compressed layout the north_star mandates:
+index/CrtInvertedIdx.cpp:29-47, format MyNotes.txt:8-10) with a
+compressed binary run:
 
-  shard row = (term, shard, df, cf, max_score, blocks: binary)
+  shard row = (term, shard, df, cf, blocks: binary)
 
-``blocks`` is a concatenation of self-delimiting blocks of up to
-BLOCK_SIZE postings, each:
+``blocks`` holds ONE run of LEB128 varints and nothing else:
 
-  header '<HIIIQQf': count, gaps_len, tfs_len, dls_len,
-                     first_doc, last_doc, max_score
-  payload: varint(delta-gaps) ++ varint(tfs) ++ varint(doclens)
+  n, first_doc, (n - 1 doc-id gaps), (n tfs), (n doc lengths)
 
-- gaps[0] == 0 (first_doc is absolute in the header); postings are
-  doc_id-ascending, so all gaps >= 0 and a block is skippable via
-  (last_doc, section lengths) without decoding.
-- ``max_score`` is the *idf-free* BM25 upper bound of the block under
-  the avgdl it was encoded with: max over the block of
-  tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)).  It (and the posting row's
-  ``max_score`` column) is still written, but nothing reads it: every
-  query path decodes and scores every posting of its terms.  It stays
-  in the format so index dirs written earlier and later parse alike;
-  dropping it needs a format-version marker first.  A block-max skip
-  should derive its bounds from live scores instead, since a bound
-  encoded under an older avgdl goes stale once appends move avgdl.
-- doclens ride inline so scoring needs no join at query time.
+- n >= 1 and postings are doc_id-ascending, so every gap is >= 0;
+- the run is self-delimiting (n says where it ends), so runs
+  concatenated in shard order decode in ONE call to the concatenated
+  postings — the driver fetch (search._term_entries) and every merge
+  rely on that;
+- doc lengths ride inline so scoring needs no join at query time;
+- nothing in a run depends on corpus statistics (no score bound), so
+  appends, compactions and merges never encode against an avgdl.
 
-Varint encode/decode are numpy-vectorized (no per-value Python in the
-hot loop): encode scatters 7-bit groups level-by-level; decode delimits
-on continuation bits and accumulates level-by-level.
+The layout is named by :data:`POSTING_FORMAT`, which every published
+meta.json carries; :func:`check_format` refuses an index written in
+another layout instead of mis-decoding it.
+
+Encode and decode are numpy-vectorized over a whole batch of runs:
+encode scatters 7-bit groups level by level, decode delimits values on
+continuation bits and accumulates level by level.  Python loops run
+once per varint byte level, plus once per run to slice the encoded
+bytes and to walk the run headers on decode — never per posting.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-from tse_spark import oracle
+POSTING_FORMAT = "varint-run-1"
 
-BLOCK_SIZE = 128
-_HDR = struct.Struct("<HIIIQQf")
-HEADER_SIZE = _HDR.size
+
+def check_format(meta: dict, out_dir: str) -> None:
+    """Refuse an index whose posting rows are not :data:`POSTING_FORMAT`
+    runs (older indexes carry no marker)."""
+    fmt = meta.get("posting_format")
+    if fmt != POSTING_FORMAT:
+        raise ValueError(
+            f"{out_dir}: posting format {fmt!r} is not {POSTING_FORMAT!r}; "
+            "this index was written by an older codec — rebuild it"
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -80,195 +83,153 @@ def varint_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def varint_decode(buf: bytes, count: int) -> np.ndarray:
-    """Decode ``count`` LEB128 varints from ``buf`` (consuming all of it)."""
-    if count == 0:
-        return np.zeros(0, dtype=np.int64)
+def _varint_values(buf) -> np.ndarray:
+    """Every LEB128 varint in ``buf`` as int64; raises ValueError when
+    the last varint is cut off or one is longer than 10 bytes."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    ends = np.flatnonzero((b & 0x80) == 0)
-    assert ends.size == count, f"varint count mismatch: {ends.size} != {count}"
-    starts = np.concatenate(([0], ends[:-1] + 1))
+    if b.size == 0:
+        return np.zeros(0, dtype=np.int64)
+    if b[-1] & 0x80:
+        raise ValueError("varint stream ends inside a varint (truncated)")
+    ends = np.flatnonzero(b < 0x80)
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
     lengths = ends - starts + 1
-    vals = np.zeros(count, dtype=np.uint64)
-    max_len = int(lengths.max())
-    for j in range(max_len):
-        mask = lengths > j
-        vals[mask] |= (b[starts[mask] + j].astype(np.uint64) & np.uint64(0x7F)) << np.uint64(7 * j)
-    return vals.astype(np.int64)
+    if int(lengths.max()) > 10:
+        raise ValueError("varint longer than 10 bytes")
+    vals = (b[starts] & 0x7F).astype(np.uint64)
+    idx = np.flatnonzero(lengths > 1)
+    j = 1
+    while idx.size:
+        byte = b[starts[idx] + j] & 0x7F
+        vals[idx] |= byte.astype(np.uint64) << np.uint64(7 * j)
+        j += 1
+        idx = idx[lengths[idx] > j]
+    return vals.view(np.int64)
+
+
+def varint_decode(buf: bytes, count: int) -> np.ndarray:
+    """Decode exactly ``count`` LEB128 varints from ``buf`` (consuming
+    all of it); raises ValueError on any other count."""
+    vals = _varint_values(buf)
+    if vals.size != count:
+        raise ValueError(f"varint count mismatch: {vals.size} != {count}")
+    return vals
 
 
 # ---------------------------------------------------------------------------
-# block codec
+# posting runs
 # ---------------------------------------------------------------------------
-
-def bm25_tf_component(
-    tf: np.ndarray, dl: np.ndarray, avgdl: float
-) -> np.ndarray:
-    k1, b = oracle.BM25_K1, oracle.BM25_B
-    tf = tf.astype(np.float64)
-    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-
 
 def encode_many(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
     group_bounds: np.ndarray,
-    avgdl: float,
-    block_size: int = BLOCK_SIZE,
-) -> tuple[list[bytes], np.ndarray]:
-    """Encode MANY posting runs in one vectorized pass.
+) -> list[bytes]:
+    """Encode MANY posting runs in one vectorized pass -> one blob per
+    run.
 
-    ``group_bounds`` delimits the runs (len = n_groups + 1); each run
-    must be doc_id-ascending.  The whole chunk gets ONE varint encode
-    per section and ``np.maximum.reduceat`` for the block maxima; only
-    the final header-pack/slice assembly loops in Python, once per
-    block.  This is what makes a 4k-term x 500k-row chunk encode in
-    ~10 ms instead of ~200 us per tiny group.
-
-    Returns (list of per-group blobs, per-group max score component).
-    """
-    n = int(doc_ids.size)
-    counts = np.diff(group_bounds)
-    if n == 0:
-        return [b""] * len(counts), np.zeros(len(counts))
-    pos_in_group = np.arange(n) - np.repeat(group_bounds[:-1], counts)
-    bstart_mask = (pos_in_group % block_size) == 0
-    bstarts = np.flatnonzero(bstart_mask)
-    bends = np.concatenate((bstarts[1:], [n]))
-
+    ``group_bounds`` delimits the runs (len = n_runs + 1); every run
+    must be non-empty and doc_id-ascending.  The runs' values are laid
+    out in one int64 array and varint-encoded by ONE call; the only
+    Python loop slices the result, once per run."""
+    bounds = np.asarray(group_bounds, dtype=np.int64)
+    counts = np.diff(bounds)
+    if counts.size == 0:
+        return []
+    if int(counts.min()) < 1:
+        raise ValueError("encode_many: empty posting run")
+    starts = bounds[:-1]
+    n_runs = counts.size
+    n = int(bounds[-1])
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
     gaps = np.empty(n, dtype=np.int64)
-    gaps[0] = 0
-    gaps[1:] = doc_ids[1:] - doc_ids[:-1]
-    gaps[bstarts] = 0
-
-    g_bytes, g_sz = _varint_encode_sizes(gaps)
-    t_bytes, t_sz = _varint_encode_sizes(tfs)
-    d_bytes, d_sz = _varint_encode_sizes(dls)
-    g_off = np.concatenate(([0], np.cumsum(g_sz)))
-    t_off = np.concatenate(([0], np.cumsum(t_sz)))
-    d_off = np.concatenate(([0], np.cumsum(d_sz)))
-
-    comp = bm25_tf_component(tfs, dls, avgdl)
-    bmax = np.maximum.reduceat(comp, bstarts)
-    gmax = np.maximum.reduceat(comp, group_bounds[:-1].clip(max=n - 1))
-    gmax[counts == 0] = 0.0
-
-    first = doc_ids[bstarts]
-    last = doc_ids[bends - 1]
-    gv = g_bytes.tobytes()
-    tv = t_bytes.tobytes()
-    dv = d_bytes.tobytes()
-    # which group each block belongs to
-    bgroup = np.searchsorted(group_bounds[:-1], bstarts, side="right") - 1
-    pack = _HDR.pack
-    parts: list[list[bytes]] = [[] for _ in counts]
-    for i in range(len(bstarts)):
-        s, e = int(bstarts[i]), int(bends[i])
-        ga, gb = int(g_off[s]), int(g_off[e])
-        ta, tb = int(t_off[s]), int(t_off[e])
-        da, db = int(d_off[s]), int(d_off[e])
-        parts[int(bgroup[i])].append(
-            pack(
-                e - s, gb - ga, tb - ta, db - da,
-                int(first[i]), int(last[i]), float(bmax[i]),
-            )
-            + gv[ga:gb]
-            + tv[ta:tb]
-            + dv[da:db]
+    gaps[0] = doc_ids[0]
+    np.subtract(doc_ids[1:], doc_ids[:-1], out=gaps[1:])
+    gaps[starts] = doc_ids[starts]
+    # run r starts at value 3*starts[r] + r: its n, then the doc
+    # section, then tfs and dls n values further each
+    heads = 3 * starts + np.arange(n_runs)
+    vals = np.empty(3 * n + n_runs, dtype=np.int64)
+    vals[heads] = counts
+    run_n = np.repeat(counts, counts)
+    doc_at = np.arange(n) + np.repeat(heads + 1 - starts, counts)
+    vals[doc_at] = gaps
+    vals[doc_at + run_n] = tfs
+    vals[doc_at + 2 * run_n] = dls
+    if int(vals.min()) < 0:
+        raise ValueError(
+            "encode_many: doc ids must ascend within a run and "
+            "tfs/dls must be non-negative"
         )
-    return [b"".join(p) for p in parts], gmax
+    out, sizes = _varint_encode_sizes(vals)
+    offs = np.concatenate(([0], np.cumsum(sizes)))[
+        np.append(heads, vals.size)
+    ].tolist()
+    data = out.tobytes()
+    return [data[a:b] for a, b in zip(offs[:-1], offs[1:])]
 
 
 def encode_postings(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    avgdl: float,
-    block_size: int = BLOCK_SIZE,
-) -> tuple[bytes, float]:
-    """Encode one term-shard posting run into concatenated blocks
-    (sorts by doc_id).  Returns (blocks, max idf-free component)."""
+    doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray
+) -> bytes:
+    """Encode one non-empty posting run (sorts by doc_id)."""
     order = np.argsort(doc_ids, kind="stable")
     bounds = np.array([0, doc_ids.size], dtype=np.int64)
-    blobs, gmax = encode_many(
-        doc_ids[order], tfs[order], dls[order], bounds, avgdl, block_size
+    return encode_many(doc_ids[order], tfs[order], dls[order], bounds)[0]
+
+
+def _decode_runs(buf):
+    """-> (doc_ids, tfs, dls, per-run counts) of every run in ``buf``.
+    Raises ValueError on a truncated run, trailing bytes or n < 1."""
+    vals = _varint_values(buf)
+    heads = []
+    i, total = 0, vals.size
+    # the one sequential step: each run's n locates the next run
+    while i < total:
+        n = int(vals[i])
+        if n < 1:
+            raise ValueError(f"posting run with n = {n}")
+        heads.append(i)
+        i += 3 * n + 1
+    if i != total:
+        raise ValueError("posting run is truncated or has trailing bytes")
+    heads = np.array(heads, dtype=np.int64)
+    counts = vals[heads]
+    run_n = np.repeat(counts, counts)
+    pstart = np.cumsum(counts) - counts
+    doc_at = np.arange(int(counts.sum())) + np.repeat(
+        heads + 1 - pstart, counts
     )
-    return blobs[0], float(gmax[0])
-
-
-class BlockRef:
-    """Parsed block header + payload offsets (no payload decode)."""
-
-    __slots__ = ("count", "first_doc", "last_doc", "max_score",
-                 "g_off", "g_len", "t_len", "d_len")
-
-    def __init__(self, count, g_off, g_len, t_len, d_len,
-                 first_doc, last_doc, max_score):
-        self.count = count
-        self.g_off = g_off
-        self.g_len = g_len
-        self.t_len = t_len
-        self.d_len = d_len
-        self.first_doc = first_doc
-        self.last_doc = last_doc
-        self.max_score = max_score
-
-
-def scan_blocks(blocks: bytes) -> list[BlockRef]:
-    """Parse headers only — the skip-pointer directory."""
-    refs = []
-    pos = 0
-    n = len(blocks)
-    while pos < n:
-        count, g_len, t_len, d_len, first, last, mx = _HDR.unpack_from(
-            blocks, pos
-        )
-        refs.append(
-            BlockRef(count, pos + HEADER_SIZE, g_len, t_len, d_len,
-                     first, last, mx)
-        )
-        pos += HEADER_SIZE + g_len + t_len + d_len
-    return refs
-
-
-def decode_blocks(blocks: bytes, refs: list[BlockRef]):
-    """Batch-decode a subset of blocks — (doc_ids, tfs, dls) concatenated.
-
-    One varint_decode per SECTION across all requested blocks (varints
-    are self-delimiting, so concatenated streams decode in one pass),
-    not per block — numpy call overhead on ~128-value blocks otherwise
-    dominates query latency.  Per-block delta-gap reset is applied with
-    a segmented cumsum (global cumsum + per-block offset repeat).
-    """
-    if not refs:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    counts = np.array([r.count for r in refs], dtype=np.int64)
-    total = int(counts.sum())
-    g_buf = b"".join(blocks[r.g_off : r.g_off + r.g_len] for r in refs)
-    t_buf = b"".join(
-        blocks[r.g_off + r.g_len : r.g_off + r.g_len + r.t_len] for r in refs
-    )
-    d_buf = b"".join(
-        blocks[
-            r.g_off + r.g_len + r.t_len
-            : r.g_off + r.g_len + r.t_len + r.d_len
-        ]
-        for r in refs
-    )
-    gaps = varint_decode(g_buf, total)
-    tfs = varint_decode(t_buf, total)
-    dls = varint_decode(d_buf, total)
+    gaps = vals[doc_at].view(np.uint64)
+    tfs = vals[doc_at + run_n]
+    dls = vals[doc_at + 2 * run_n]
+    # per-run prefix sums; uint64 wrap-around keeps the differences
+    # exact however large the cross-run running total gets
     c = np.cumsum(gaps)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    firsts = np.array([r.first_doc for r in refs], dtype=np.int64)
-    # docs[j in block i] = first_i + (c[j] - c[start_i]); gaps[start_i]==0
-    offset = firsts - c[starts]
-    docs = c + np.repeat(offset, counts)
+    docs = c - np.repeat(c[pstart] - gaps[pstart], counts)
+    return docs.view(np.int64), tfs, dls, counts
+
+
+def decode_all(blob):
+    """Decode every run in ``blob`` -> (doc_ids, tfs, dls), the runs'
+    postings concatenated in blob order."""
+    docs, tfs, dls, _ = _decode_runs(blob)
     return docs, tfs, dls
 
 
-def decode_all(blocks: bytes):
-    """Decode every block — (doc_ids, tfs, dls) concatenated."""
-    return decode_blocks(blocks, scan_blocks(blocks))
+def decode_rows(blobs, dfs):
+    """Decode posting rows (one run per blob) -> (doc_ids, tfs, dls)
+    concatenated, after checking every run's n against its row's df:
+    callers label postings with ``np.repeat(rows, dfs)``, which a
+    blob that disagrees with its df would silently shift."""
+    docs, tfs, dls, counts = _decode_runs(b"".join(blobs))
+    dfs = np.asarray(dfs, dtype=np.int64)
+    if not np.array_equal(counts, dfs):
+        raise ValueError(
+            f"posting rows disagree with their df: {counts.size} runs "
+            f"for {dfs.size} rows, or a run's n differs from its df"
+        )
+    return docs, tfs, dls

@@ -14,7 +14,7 @@ column in a single scan of the docs relation; one shuffle on
 (facet, value, shard) groups doc ids into the SAME doc-range shards as
 the posting build (``postings.shard_of`` law), so a filtered query's
 allowed set joins posting rows shard-for-shard with no re-shuffle at
-serving time.  Each group encodes with the same varint block codec as
+serving time.  Each group encodes with the same varint run codec as
 postings (tf = dl = 1 filler), and each sidecar dir partitions its
 parquet by (facet, value) so a clicked facet reads exactly one
 directory per dir — partition pruning, never a scan of other facets.
@@ -62,10 +62,9 @@ def build_facet_shards(
     docs: DataFrame,
     facets: list[str],
     shard_range: int,
-    block_size: int = codec.BLOCK_SIZE,
 ) -> DataFrame:
     """(doc_id, <facet columns>) -> one row per (facet, value, shard)
-    with the shard's matching doc ids varint-block-encoded, sorted
+    with the shard's matching doc ids encoded as one varint run, sorted
     doc-ascending (the codec law the serving mask relies on)."""
     for f_ in facets:
         if not f_.isidentifier():
@@ -79,7 +78,7 @@ def build_facet_shards(
     def enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         d = np.sort(pdf["doc_id"].to_numpy(np.int64))
         ones = np.ones(d.size, dtype=np.int64)
-        blocks, _ = codec.encode_postings(d, ones, ones, 1.0, block_size)
+        blocks = codec.encode_postings(d, ones, ones)
         return pd.DataFrame(
             {
                 "facet": [key[0]],
@@ -105,11 +104,12 @@ def _read_meta(out_dir: str) -> dict | None:
 
 def _publish_meta(out_dir: str, meta: dict) -> None:
     """Atomic last-step publish (same tmp+replace idiom as append.py):
-    files written before this line are invisible until it lands."""
+    files written before this line are invisible until it lands.  Every
+    publish stamps the posting format its runs were just encoded in."""
     path = os.path.join(out_dir, META_NAME)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(meta, f)
+        json.dump({**meta, "posting_format": codec.POSTING_FORMAT}, f)
     os.replace(tmp, path)
 
 
@@ -130,9 +130,17 @@ def _index_probe(out_dir: str) -> tuple[int, int] | None:
 
 def _sidecar_stale(meta: dict, probe: tuple[int, int] | None) -> str | None:
     """Why the sidecar no longer matches the live index (None = fine).
-    Checks only the facts the sidecar meta RECORDED (pre-field sidecars
-    pass, same upgrade posture as before)."""
-    if probe is None or meta is None:
+    Checks the facts the sidecar meta RECORDED (pre-field sidecars
+    pass, same upgrade posture as before) and the posting format its
+    runs were encoded in (required)."""
+    if meta is None:
+        return None
+    if meta.get("posting_format") != codec.POSTING_FORMAT:
+        return (
+            f"posting format {meta.get('posting_format')!r} is not "
+            f"{codec.POSTING_FORMAT!r} (written by an older codec)"
+        )
+    if probe is None:
         return None
     live_range, live_cv = probe
     if (

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, functions as F
 from tse_spark.operators import codec
 
 _PHDR = struct.Struct("<HIIIQQ")
+BLOCK_SIZE = 128
 PHDR_SIZE = _PHDR.size
 _STRIDE = np.int64(1) << np.int64(32)  # (doc, pos) -> doc * 2^32 + pos
 
@@ -67,7 +68,7 @@ def encode_positions_many(
     cnts: np.ndarray,
     posflat: np.ndarray,
     group_bounds: np.ndarray,
-    block_size: int = codec.BLOCK_SIZE,
+    block_size: int = BLOCK_SIZE,
 ) -> list[bytes]:
     """Encode MANY positional posting runs in one vectorized pass (the
     positional twin of :func:`codec.encode_many`): ONE varint encode
@@ -134,7 +135,7 @@ def encode_positions_run(
     docs: np.ndarray,
     cnts: np.ndarray,
     posflat: np.ndarray,
-    block_size: int = codec.BLOCK_SIZE,
+    block_size: int = BLOCK_SIZE,
 ) -> bytes:
     """Encode ONE (term, shard) run — postings doc-ascending, positions
     strictly increasing within each posting — into concatenated blocks."""
@@ -233,7 +234,7 @@ def build_position_shards(
     doc_pos: DataFrame,
     n_docs: int,
     num_shards: int = 32,
-    block_size: int = codec.BLOCK_SIZE,
+    block_size: int = BLOCK_SIZE,
     shard_range: int | None = None,
 ) -> DataFrame:
     """doc-major positions -> (term, shard, df, blocks) rows.  Map-side
@@ -349,7 +350,7 @@ def _sorted_merge(partials: DataFrame) -> DataFrame:
 def reencode_position_shards(
     pos_rows: DataFrame,
     shard_range: int,
-    block_size: int = codec.BLOCK_SIZE,
+    block_size: int = BLOCK_SIZE,
     excluded: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Re-shard + re-encode an existing positional table (the

@@ -14,7 +14,8 @@ shard* (``shard = doc_id div shard_range``), which
   disjoint doc ranges, then a global top-k.
 
 Output tables:
-  postings(term, shard, df, cf, max_score, blocks binary)
+  postings(term, shard, df, cf, blocks binary) — ``blocks`` is one
+                       varint run (operators/codec.py)
   term_stats(term, df, cf)    — global df for idf
   corpus meta (n_docs, avgdl) — JSON, written by the pipeline
 """
@@ -29,13 +30,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from tse_spark.operators import codec
 
-POSTINGS_SCHEMA = (
-    "term string, shard long, df long, cf long, "
-    "max_score double, blocks binary"
-)
+POSTINGS_SCHEMA = "term string, shard long, df long, cf long, blocks binary"
 # map-side partial runs carry only what the merge reads: df (decode
-# bounds), first_doc (sort order) and the blob; cf and max_score are
-# recomputed from the merged postings
+# check), first_doc (sort order) and the blob; cf is recomputed from
+# the merged postings
 PARTIAL_SCHEMA = (
     "term string, shard long, df long, first_doc long, blocks binary"
 )
@@ -55,9 +53,7 @@ def shard_of(doc_id_col, shard_range: int):
 def build_posting_shards(
     tf_dl: DataFrame,
     n_docs: int,
-    avgdl: float,
     num_shards: int = 32,
-    block_size: int = codec.BLOCK_SIZE,
     merge_parallelism: int | None = None,
     shard_range: int | None = None,
 ) -> DataFrame:
@@ -65,7 +61,7 @@ def build_posting_shards(
     vectorized phases:
 
     1. **map-side combine**: each scan batch is locally sorted and every
-       (term, shard) run is encoded into a PARTIAL block blob before the
+       (term, shard) run is encoded into a PARTIAL run blob before the
        exchange — the shuffle then moves one row per (term, shard,
        batch) instead of one per (doc, term), cutting shuffle rows by
        ~the average per-partition df;
@@ -73,7 +69,7 @@ def build_posting_shards(
        (term, shard) (the salt — a hot term's shards may still split
        across tasks at a range boundary), sort, and a streaming
        mapInPandas merges each group's partials into the final
-       delta-gap varint blocks with per-block max-score skip metadata.
+       delta-gap varint run.
 
     mapInPandas (not applyInPandas) throughout: a web-scale vocabulary
     yields millions of tiny groups and applyInPandas pays per-group
@@ -160,9 +156,7 @@ def build_posting_shards(
             (codes[1:] != codes[:-1]) | (shards_o[1:] != shards_o[:-1])
         )
         bounds = np.concatenate(([0], change + 1, [len(codes)]))
-        blobs, _ = codec.encode_many(
-            docs_o, tfs_o, dls_o, bounds, avgdl, block_size
-        )
+        blobs = codec.encode_many(docs_o, tfs_o, dls_o, bounds)
         starts = bounds[:-1]
         group_terms = pc.take(dictionary, pa.array(codes[starts]))
         return pa.RecordBatch.from_arrays(
@@ -198,9 +192,7 @@ def build_posting_shards(
             (codes[1:] != codes[:-1]) | (shards[1:] != shards[:-1])
         )
         bounds = np.concatenate(([0], change + 1, [len(terms)]))
-        blobs, _ = codec.encode_many(
-            docs, tfs, dls, bounds, avgdl, block_size
-        )
+        blobs = codec.encode_many(docs, tfs, dls, bounds)
         starts = bounds[:-1]
         return pd.DataFrame(
             {
@@ -260,77 +252,64 @@ def build_posting_shards(
     num_parts = merge_parallelism or (
         tf_dl.sparkSession.sparkContext.defaultParallelism * 4
     )
-    return merge_partials(partials, avgdl, block_size, num_parts)
+    return merge_partials(partials, num_parts)
 
 
-def _make_merge_stream(avgdl: float, block_size: int):
+def _merge_groups(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Merge partial runs: ONE batched decode of every partial blob in
+    the frame, a per-group re-sort (partial doc ranges from different
+    map partitions can interleave — input splits mix bucket files — so
+    blind concat is not valid), ONE batched re-encode."""
+    terms = pdf["term"].to_numpy(dtype=object)
+    shards = pdf["shard"].to_numpy(dtype=np.int64)
+    change = np.flatnonzero(
+        (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
+    )
+    pbounds = np.concatenate(([0], change + 1, [len(pdf)]))
+    dfs = pdf["df"].to_numpy(dtype=np.int64)
+    docs, tfs, dls = codec.decode_rows(pdf["blocks"], dfs)
+    # row-level group bounds = cumulative partial dfs at group edges
+    row_cum = np.concatenate(([0], np.cumsum(dfs)))
+    bounds = row_cum[pbounds]
+    counts = np.diff(bounds)
+    gidx = np.repeat(np.arange(len(counts)), counts)
+    order = np.lexsort((docs, gidx))
+    docs, tfs, dls = docs[order], tfs[order], dls[order]
+    starts = pbounds[:-1]
+    return pd.DataFrame(
+        {
+            "term": terms[starts],
+            "shard": shards[starts],
+            "df": counts,
+            "cf": np.add.reduceat(tfs, bounds[:-1]),
+            "blocks": codec.encode_many(docs, tfs, dls, bounds),
+        }
+    )
+
+
+def _merge_stream(it):
     """Streaming (term, shard)-group merger over sorted partial-run rows
     — shared by the initial build and the compaction re-encode path."""
-
-    def merge_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Merge partial runs: ONE batched decode of every partial blob
-        in the frame, a per-group re-sort (partial doc ranges from
-        different map partitions can interleave — input splits mix
-        bucket files — so blind concat is not valid), ONE batched
-        re-encode."""
-        terms = pdf["term"].to_numpy(dtype=object)
-        shards = pdf["shard"].to_numpy(dtype=np.int64)
-        change = np.flatnonzero(
-            (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-        )
-        pbounds = np.concatenate(([0], change + 1, [len(pdf)]))
-        blobs = pdf["blocks"].to_numpy(dtype=object)
-        dfs = pdf["df"].to_numpy(dtype=np.int64)
-
-        mega = b"".join(bytes(b) for b in blobs)
-        docs, tfs, dls = codec.decode_all(mega)
-        # row-level group bounds = cumulative partial dfs at group edges
-        row_cum = np.concatenate(([0], np.cumsum(dfs)))
-        bounds = row_cum[pbounds]
-        counts = np.diff(bounds)
-        gidx = np.repeat(np.arange(len(counts)), counts)
-        order = np.lexsort((docs, gidx))
-        docs, tfs, dls = docs[order], tfs[order], dls[order]
-        blocks, gmax = codec.encode_many(
-            docs, tfs, dls, bounds, avgdl, block_size
-        )
-        starts = pbounds[:-1]
-        return pd.DataFrame(
-            {
-                "term": terms[starts],
-                "shard": shards[starts],
-                "df": counts,
-                "cf": np.add.reduceat(tfs, bounds[:-1].clip(max=max(len(tfs) - 1, 0))),
-                "max_score": gmax,
-                "blocks": blocks,
-            }
-        )
-
-    def merge_stream(it):
-        buf: pd.DataFrame | None = None
-        for pdf in it:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last_t = pdf["term"].iloc[-1]
-            last_s = pdf["shard"].iloc[-1]
-            tail = (pdf["term"] == last_t) & (pdf["shard"] == last_s)
-            complete = pdf[~tail]
-            buf = pdf[tail]
-            if len(complete):
-                yield merge_groups(complete)
+    buf: pd.DataFrame | None = None
+    for pdf in it:
         if buf is not None and len(buf):
-            yield merge_groups(buf)
+            pdf = pd.concat([buf, pdf], ignore_index=True)
+        if len(pdf) == 0:
+            continue
+        last_t = pdf["term"].iloc[-1]
+        last_s = pdf["shard"].iloc[-1]
+        tail = (pdf["term"] == last_t) & (pdf["shard"] == last_s)
+        complete = pdf[~tail]
+        buf = pdf[tail]
+        if len(complete):
+            yield _merge_groups(complete)
+    if buf is not None and len(buf):
+        yield _merge_groups(buf)
 
-    return merge_stream
 
-
-def merge_partials(
-    partials: DataFrame, avgdl: float, block_size: int, num_parts: int
-) -> DataFrame:
+def merge_partials(partials: DataFrame, num_parts: int) -> DataFrame:
     """Range-partition partial posting runs by (term, shard), sort
-    within partitions, and stream-merge each group into final blocks.
+    within partitions, and stream-merge each group into its final run.
 
     Range (not hash) partitioning makes every written part file cover
     ONE contiguous term range, so the parquet footers' term min/max
@@ -344,9 +323,7 @@ def merge_partials(
     d = partials.repartitionByRange(
         num_parts, "term", "shard"
     ).sortWithinPartitions("term", "shard", "first_doc")
-    out = d.mapInPandas(
-        _make_merge_stream(avgdl, block_size), schema=POSTINGS_SCHEMA
-    )
+    out = d.mapInPandas(_merge_stream, schema=POSTINGS_SCHEMA)
     out._partials = partials
     return out
 
@@ -360,17 +337,14 @@ def write_postings(postings: DataFrame, path: str) -> None:
 
 def reencode_shards(
     postings: DataFrame,
-    avgdl: float,
     shard_range: int,
-    block_size: int = codec.BLOCK_SIZE,
     merge_parallelism: int | None = None,
     excluded: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Re-shard + re-encode an existing postings table (the compaction
-    kernel, plans/compact.py): decode every (term, shard) row's blocks,
-    re-bucket postings by a NEW ``shard_range``, re-encode blocks (and
-    their unread header max-scores, operators/codec.py) against a NEW
-    ``avgdl``.
+    kernel, plans/compact.py): decode every (term, shard) row's run,
+    re-bucket postings by a NEW ``shard_range`` and re-encode one run
+    per (term, new shard).
 
     Used after a chain of appends: delta shards sit ABOVE the base doc
     range with the ORIGINAL (now too narrow) shard_range.  Re-encoding
@@ -400,9 +374,7 @@ def reencode_shards(
                 continue
             terms = pdf["term"].to_numpy(dtype=object)
             dfs = pdf["df"].to_numpy(dtype=np.int64)
-            blobs = pdf["blocks"].to_numpy(dtype=object)
-            mega = b"".join(bytes(b) for b in blobs)
-            docs, tfs, dls = codec.decode_all(mega)
+            docs, tfs, dls = codec.decode_rows(pdf["blocks"], dfs)
             if len(docs) == 0:
                 continue
             ridx = np.repeat(np.arange(len(pdf)), dfs)
@@ -431,9 +403,6 @@ def reencode_shards(
                 (ridx[1:] != ridx[:-1]) | (shards[1:] != shards[:-1])
             )
             bounds = np.concatenate(([0], change + 1, [len(docs)]))
-            blocks, _ = codec.encode_many(
-                docs, tfs, dls, bounds, avgdl, block_size
-            )
             starts = bounds[:-1]
             yield pd.DataFrame(
                 {
@@ -441,7 +410,7 @@ def reencode_shards(
                     "shard": shards[starts],
                     "df": np.diff(bounds),
                     "first_doc": docs[starts],
-                    "blocks": blocks,
+                    "blocks": codec.encode_many(docs, tfs, dls, bounds),
                 }
             )
 
@@ -454,7 +423,7 @@ def reencode_shards(
     num_parts = merge_parallelism or (
         postings.sparkSession.sparkContext.defaultParallelism * 4
     )
-    return merge_partials(partials, avgdl, block_size, num_parts)
+    return merge_partials(partials, num_parts)
 
 
 def storage_report(postings: DataFrame) -> DataFrame:
@@ -464,7 +433,7 @@ def storage_report(postings: DataFrame) -> DataFrame:
     postings live there and what they cost on disk.
 
     ``bytes_per_posting`` is the headline number: the delta-gap varint
-    blocks should land well under the 16 bytes/posting a raw
+    runs should land well under the 16 bytes/posting a raw
     (int64 doc_id, int64 tf) pair costs — regressions here mean an
     encoder change or a pathological doc-id distribution.  All columns
     come from the shard rows' own metadata (df + blob length); nothing
@@ -518,8 +487,7 @@ def decode_postings(postings: DataFrame) -> DataFrame:
                 continue
             terms = pdf["term"].to_numpy(dtype=object)
             dfs = pdf["df"].to_numpy(dtype=np.int64)
-            mega = b"".join(bytes(b) for b in pdf["blocks"])
-            docs, tfs, dls = codec.decode_all(mega)
+            docs, tfs, dls = codec.decode_rows(pdf["blocks"], dfs)
             if len(docs) == 0:
                 continue
             ridx = np.repeat(np.arange(len(pdf)), dfs)
@@ -536,19 +504,3 @@ def decode_postings(postings: DataFrame) -> DataFrame:
         explode, schema=schema
     )
 
-
-def compact_postings(postings: DataFrame) -> DataFrame:
-    """Optional single-row-per-term compaction: concatenate shard blobs
-    in shard order (valid because shards are disjoint ascending doc
-    ranges).  JVM-side only — array_sort + aggregate/concat.  Use at
-    small scale or for export; at web scale keep shards."""
-    return postings.groupBy("term").agg(
-        F.sum("df").alias("df"),
-        F.sum("cf").alias("cf"),
-        F.max("max_score").alias("max_score"),
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("shard", "blocks"))),
-            F.lit(b""),
-            lambda acc, x: F.concat(acc, x["blocks"]),
-        ).alias("blocks"),
-    )

@@ -45,10 +45,11 @@ from tse_spark.operators import codec
 _QHDR = struct.Struct("<HIIQQH")
 
 QPOSTINGS_SCHEMA = "term string, shard long, df long, qblocks binary"
+BLOCK_SIZE = 128
 
 
 def encode_q_blocks(
-    docs: np.ndarray, qs: np.ndarray, block_size: int = codec.BLOCK_SIZE
+    docs: np.ndarray, qs: np.ndarray, block_size: int = BLOCK_SIZE
 ) -> bytes:
     """Pack doc-ascending (docs, q) into self-delimiting q-blocks."""
     out = []

@@ -207,7 +207,7 @@ class SearchEngine:
                 np.asarray(tombstones, dtype=np.int64)
             )
         self._tomb_bc = None
-        # term -> (df, merged doc-ascending blocks blob): ONE bounded
+        # term -> (df, merged doc-ascending posting blob): ONE bounded
         # LRU for the interactive path, filled lazily by one
         # footer-pruned file read per set of missing terms.  df rides
         # along with the shard rows (each shard row carries its df), so
@@ -218,7 +218,7 @@ class SearchEngine:
         # scored-posting cache: term -> (docs int32, scores float64).
         # A term's per-posting BM25 addend depends only on (idf, avgdl)
         # — fixed for this engine/index generation — so hot terms skip
-        # varint decode, block scans AND scoring (together ~75% of
+        # varint decode AND scoring (together ~75% of
         # per-query time at a 2M-doc corpus); entries are ~2-4x the
         # blob size, so this LRU is BYTE-budgeted, not entry-counted —
         # the classic posting-cache-in-RAM design.
@@ -721,9 +721,9 @@ class SearchEngine:
         """(df, merged doc-ascending posting blob) per term, LRU-cached
         on the driver; ONE footer-pruned posting file read
         (:class:`PostingFiles`, no Spark job) for all cache-missing
-        terms.  Shards are ascending disjoint doc-id ranges and blocks
+        terms.  Shards are ascending disjoint doc-id ranges and runs
         are self-delimiting, so per-term shard blobs concatenate (in
-        shard order) into one valid run — one scoring pass per query
+        shard order) into one valid blob — one scoring pass per query
         instead of one per shard, and repeat terms skip the read
         entirely (the reference reloads the WHOLE index per request,
         Query.cpp:59-82; this keeps just the hot working set).  df rides

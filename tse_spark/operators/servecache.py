@@ -65,7 +65,8 @@ def cache_key(meta: dict) -> str:
     Includes everything that can change the bytes ``_term_entries``
     would fetch: the build input fingerprint, the snapshot id (bumped
     by every commit), the live postings dir list, and the build params
-    that shape blobs (tokenizer, prune_m, block_size, shard_range).
+    that shape blobs (tokenizer, prune_m, posting format, shard_range):
+    a tier filled by another codec is never read by this one.
     n_docs/avgdl ride along so even a hand-edited meta.json can't
     alias two different scoring states to one key."""
     basis = json.dumps(
@@ -75,7 +76,7 @@ def cache_key(meta: dict) -> str:
             "dirs": sorted(meta.get("postings_dirs", ["postings"])),
             "tok": meta.get("tokenizer"),
             "prune_m": meta.get("prune_m"),
-            "block": meta.get("block_size"),
+            "fmt": meta.get("posting_format"),
             "shard_range": meta.get("shard_range"),
             "n_docs": meta.get("n_docs"),
             "avgdl": meta.get("avgdl"),

@@ -12,9 +12,9 @@ This plan appends like an Iceberg table append (north_star S1):
    merged, or rewritten, and both serving paths already compose disjoint
    shards (the distributed path groups by shard; the driver path
    concatenates blobs in shard order);
-3. delta blocks are encoded with the pre-append ``avgdl``; their
-   header max-scores are written but never read (operators/codec.py),
-   and scoring uses the live avgdl from meta.json;
+3. delta runs carry no corpus statistic (operators/codec.py), so
+   scoring uses the live avgdl from meta.json for old and new rows
+   alike;
 4. term_stats is recomputed from the full postings set (tiny: one row
    per (term, shard)) into a VERSIONED directory, and meta.json gets the
    merged n_docs / weighted avgdl / new max_doc_id / new dir lists.
@@ -52,6 +52,7 @@ import os
 
 from pyspark.sql import SparkSession, functions as F
 
+from tse_spark.operators import codec
 from tse_spark.operators import index_build as ib
 from tse_spark.operators import postings as po
 from tse_spark.plans import checkpoint as cp
@@ -64,6 +65,7 @@ def _load_validated_meta(
     """Load meta.json and enforce the append-family preconditions."""
     with open(os.path.join(out_dir, "meta.json")) as f:
         meta = json.load(f)
+    codec.check_format(meta, out_dir)
     # the delta MUST tokenize exactly like the base build: a different
     # dictionary segments hanzi differently and silently breaks the
     # append == rebuild score equivalence — fail loudly instead
@@ -196,9 +198,7 @@ def _append_batch(
         po.build_posting_shards(
             tf,
             n_docs=n0 + n_delta,
-            avgdl=avgdl0,
             num_shards=int(meta.get("num_shards", 32)),
-            block_size=int(meta.get("block_size", 128)),
             shard_range=shard_range,
         ),
         os.path.join(out_dir, postings_delta),

@@ -10,7 +10,7 @@ base doc range with the original (now too narrow) ``shard_range``.
 1. all docs dirs      -> one ``docs_base_v{N}`` dir;
 2. all postings dirs  -> one ``postings_base_v{N}`` dir, re-sharded to
    ``shard_range = ceil((max_doc_id+1)/num_shards)`` and re-encoded
-   against the LIVE avgdl (operators/postings.reencode_shards);
+   as one run per (term, shard) (operators/postings.reencode_shards);
 3. term_stats recomputed from the new shards -> ``term_stats_base_v{N}``;
 4. meta.json atomically republished with the reset dir lists.
 
@@ -49,6 +49,7 @@ import shutil
 
 from pyspark.sql import SparkSession, functions as F
 
+from tse_spark.operators import codec
 from tse_spark.operators import postings as po
 from tse_spark.plans import pipeline as pl
 
@@ -65,6 +66,7 @@ def compact_index(
     meta_path = os.path.join(out_dir, "meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
+    codec.check_format(meta, out_dir)
     docs_dirs = meta.get("docs_dirs", ["docs"])
     postings_dirs = meta.get("postings_dirs", ["postings"])
     avgdl = float(meta["avgdl"])
@@ -114,7 +116,6 @@ def compact_index(
 
     version = int(meta.get("compact_version", 0)) + 1
     num_shards = int(meta.get("num_shards", 32))
-    block_size = int(meta.get("block_size", 128))
     max_doc_id = int(meta["max_doc_id"])
     new_range = max(1, math.ceil((max_doc_id + 1) / num_shards))
 
@@ -164,7 +165,7 @@ def compact_index(
     )
     po.write_postings(
         po.reencode_shards(
-            old_postings, avgdl, new_range, block_size, excluded=tomb_arr
+            old_postings, new_range, excluded=tomb_arr
         ),
         os.path.join(out_dir, postings_out),
     )

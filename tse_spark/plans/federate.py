@@ -179,7 +179,7 @@ class FederatedIndex:
         Why at 10^12 docs: a query fans out to every member index
         otherwise; df-mass selection answers 'which members can even
         contribute' from per-member term stats (integers, cached)
-        before any posting block is read."""
+        before any posting row is read."""
         ranked = self.member_scores(query)
         cut = ranked if n_members is None else ranked[: int(n_members)]
         picked = sorted(mi for mi, s in cut if s >= int(min_score))

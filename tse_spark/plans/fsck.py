@@ -34,6 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from tse_spark.operators import codec
 from tse_spark.operators import postings as po
 
 REPORT_SCHEMA = (
@@ -49,6 +50,7 @@ def fsck_index(spark: SparkSession, out_dir: str) -> DataFrame:
     mutates anything."""
     with open(os.path.join(out_dir, "meta.json")) as f:
         meta = json.load(f)
+    codec.check_format(meta, out_dir)
 
     listed = list(meta.get("postings_dirs", ["postings"]))
     listed.append(meta.get("term_stats_dir", "term_stats"))

@@ -18,9 +18,9 @@ re-tokenizing a single document:
    runs from all segments in ONE pass — an N-way merge costs the
    same single re-encode a pairwise step does, so a crawl wave's
    segments fold together without N-1 intermediate indexes;
-3. blocks re-encode against the MERGED corpus avgdl (exact integer
-   arithmetic: total_dl and n_docs sum across segments), term_stats
-   recompute from the merged shards, so the published index scores
+3. the merged corpus stats are exact integer arithmetic (total_dl
+   and n_docs sum across segments), term_stats recompute from the
+   merged shards, so the published index scores
    EXACTLY like a from-scratch build over the union corpus
    (rank-identical by url — pytest-pinned in tests/test_merge.py);
 4. the merged index publishes through the snapshot commit log as
@@ -58,6 +58,7 @@ import os
 
 from pyspark.sql import SparkSession, functions as F
 
+from tse_spark.operators import codec
 from tse_spark.operators import postings as po
 from tse_spark.plans import checkpoint as cp
 from tse_spark.plans import pipeline as pl
@@ -65,7 +66,9 @@ from tse_spark.plans import pipeline as pl
 
 def _load_meta(out_dir: str) -> dict:
     with open(os.path.join(out_dir, "meta.json")) as f:
-        return json.load(f)
+        meta = json.load(f)
+    codec.check_format(meta, out_dir)
+    return meta
 
 
 def _validate_segment(m0: dict, m: dict, d0: str, d: str) -> None:
@@ -231,7 +234,6 @@ def merge_indexes_many(
         total_dl -= int(_dead_stats[1])
     avgdl = total_dl / n_docs if n_docs else 0.0
     n_sh = num_shards or max(int(m.get("num_shards", 32)) for m in metas)
-    block_size = max(int(m.get("block_size", 128)) for m in metas)
     shard_range = max(1, math.ceil((max_doc_id + 1) / n_sh))
 
     posts = None
@@ -244,7 +246,7 @@ def merge_indexes_many(
     os.makedirs(out_dir, exist_ok=True)
     po.write_postings(
         po.reencode_shards(
-            posts, avgdl, shard_range, block_size, excluded=_excluded
+            posts, shard_range, excluded=_excluded
         ),
         os.path.join(out_dir, "postings"),
     )
@@ -278,7 +280,7 @@ def merge_indexes_many(
         "prune_m": None,
         "tokenizer": metas[0].get("tokenizer", "tse"),
         "num_shards": n_sh,
-        "block_size": block_size,
+        "posting_format": codec.POSTING_FORMAT,
         "merged_from": [
             {"dir": d, "snapshot_id": m.get("snapshot_id"), "shift": sh}
             for d, m, sh in zip(dirs, metas, shifts)
@@ -420,9 +422,8 @@ def absorb_segment(
     The segment's (term, shard) rows re-encode ONCE — ids lifted to
     the target's next free shard_range multiple (append's base law,
     so every delta row lands in a shard strictly above all existing
-    ones and both serving paths compose disjoint shards unchanged),
-    blocks re-encoded with the target's pre-absorb ``avgdl`` (same as
-    append's delta encode) — and land in ``postings_delta_{base}``.
+    ones and both serving paths compose disjoint shards unchanged) —
+    and land in ``postings_delta_{base}``.
     Corpus stats merge from the segment's own EXACT integers
     (n_docs / total_dl from its meta: zero tokenization anywhere),
     term_stats recompute into a versioned dir, and everything becomes
@@ -482,10 +483,7 @@ def absorb_segment(
     ).withColumn("id_shift", F.lit(int(base)).cast("long"))
     postings_delta = f"postings_delta_{base}"
     po.write_postings(
-        po.reencode_shards(
-            seg_posts, avgdl0, shard_range,
-            int(meta.get("block_size", 128)),
-        ),
+        po.reencode_shards(seg_posts, shard_range),
         os.path.join(out_dir, postings_delta),
     )
 

@@ -6,7 +6,7 @@ Stages (each a resumable checkpoint table under ``out_dir``):
               the input has only html)
   tf        — (doc_id, term, tf, dl): Arrow tokenizer UDF with map-side
               per-doc aggregation and inline doc length
-  postings  — doc-range-sharded delta-gap varint blocks (salted
+  postings  — doc-range-sharded delta-gap varint runs (salted
               range-partition-by-term: term-clustered part files)
   term_stats— global df/cf per term
 
@@ -22,6 +22,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from tse_spark.operators import codec
 from tse_spark.operators import index_build as ib
 from tse_spark.operators import postings as po
 from tse_spark.operators import search as se
@@ -55,7 +56,6 @@ class IndexPipeline:
         tokenizer: str = "tse",
         dictionary: frozenset[bytes] = frozenset(),
         num_shards: int = 32,
-        block_size: int = 128,
         num_partitions: int | None = None,
         force_extract: bool = False,
         checkpoint_mode: str = "full",
@@ -66,7 +66,6 @@ class IndexPipeline:
         self.tokenizer = tokenizer
         self.dictionary = dictionary
         self.num_shards = num_shards
-        self.block_size = block_size
         self.num_partitions = num_partitions
         self.force_extract = force_extract
         # "full": every stage checkpoints to parquet (resumable at stage
@@ -87,8 +86,10 @@ class IndexPipeline:
         # append_pages refuses pruned indexes (an unpruned delta would
         # silently break the per-term top-m invariant).
         self.prune_m = prune_m
+        # the posting format rides in every checkpoint fingerprint, so
+        # resume=True never reuses postings written by another codec
         self.params = (
-            tokenizer, num_shards, block_size, sorted(dictionary),
+            tokenizer, num_shards, codec.POSTING_FORMAT, sorted(dictionary),
             force_extract, prune_m,
         )
 
@@ -202,7 +203,7 @@ class IndexPipeline:
                 "prune_m": self.prune_m,
                 "tokenizer": self.tokenizer,
                 "num_shards": self.num_shards,
-                "block_size": self.block_size,
+                "posting_format": codec.POSTING_FORMAT,
                 "built_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
             os.makedirs(self.out_dir, exist_ok=True)
@@ -243,11 +244,7 @@ class IndexPipeline:
             "postings",
             fp_po,
             lambda: po.build_posting_shards(
-                tf_po,
-                meta["n_docs"],
-                meta["avgdl"],
-                self.num_shards,
-                self.block_size,
+                tf_po, meta["n_docs"], self.num_shards
             ),
             resume,
             write=po.write_postings,
@@ -467,6 +464,7 @@ def handle_from_meta(
     """Open the index state one meta describes — the current meta.json
     (load_index) or an archived one (plans/snapshots.load_index_at,
     the time-travel read)."""
+    codec.check_format(meta, out_dir)
     # appended indexes list extra delta dirs in meta (Iceberg-style:
     # files become visible only through the atomically-replaced
     # meta.json, never by merely existing in a directory)
