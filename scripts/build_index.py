@@ -63,7 +63,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--report", action="store_true",
         help="after the build, print the per-stage lineage/metrics "
-        "and on-disk footprint report (one JSON line per row)",
+        "and on-disk footprint report (one JSON line per row; dir rows "
+        "carry files, bytes and parquet row_groups, so a posting dir "
+        "with one row group per file, the older layout, shows)",
     )
     args = ap.parse_args(argv)
 

@@ -14,7 +14,10 @@ Subcommands:
   snapshots  print the commit log (snapshot id, op, n_docs, dirs)
   diff       what changed between two snapshots (ops, doc/dir deltas)
   delete     tombstone urls (newline file) and/or doc ids; O(delta)
-  compact    fold append deltas + tombstones into fresh base dirs
+  compact    fold append deltas + tombstones into fresh base dirs;
+             also rewrites posting dirs of the older layout (one
+             snappy row group per part file) into the current one
+             (zstd, ~64 KB row groups), which cold lookups read faster
   vacuum     expire old snapshots, remove dirs only they referenced
   vacuum-cache  sweep the shared serving cache (query_index
              --cache-root): drop superseded snapshot keys, keep the
@@ -64,7 +67,12 @@ def main(argv: list[str] | None = None) -> int:
     d.add_argument(
         "--doc-ids", default=None, help="comma-separated doc ids"
     )
-    sub.add_parser("compact")
+    sub.add_parser(
+        "compact",
+        help="fold append deltas + tombstones into fresh base dirs; "
+        "rewrites older-layout posting dirs (one row group per file) "
+        "into zstd ~64 KB row groups",
+    )
     df = sub.add_parser("diff")
     df.add_argument("--from", dest="from_id", type=int, required=True)
     df.add_argument("--to", dest="to_id", type=int, required=True)

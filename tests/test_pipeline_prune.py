@@ -7,6 +7,7 @@ test_entry_contract (wand_pruned_topk)."""
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,8 +93,17 @@ def test_index_report(spark, pruned_handle):
         r = rows[("stage", stage)]
         assert r["rows"] > 0 and r["seconds"] is not None
         assert r["n_partitions"] and r["n_partitions"] > 0
-    # every live artifact dir is reported with its on-disk footprint
+        assert r["row_groups"] is None
+    # every live artifact dir is reported with its on-disk footprint and
+    # the row groups its footers list
     dir_rows = [r for (k, _), r in rows.items() if k == "dir"]
     assert dir_rows and all(
-        r["files"] > 0 and r["bytes"] > 0 for r in dir_rows
+        r["files"] > 0 and r["bytes"] > 0 and r["row_groups"] > 0
+        for r in dir_rows
+    )
+    d = os.path.join(pruned_handle.out_dir, "postings")
+    assert rows[("dir", "postings")]["row_groups"] == sum(
+        pq.read_metadata(os.path.join(d, fn)).num_row_groups
+        for fn in os.listdir(d)
+        if fn.endswith(".parquet")
     )

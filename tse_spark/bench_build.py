@@ -82,7 +82,9 @@ def build_session(cpus: int) -> SparkSession:
         # checkpoint tables are re-read by the next stage: 8 MB row
         # groups keep those scans splittable below file granularity
         # (a 128 MB default row group makes a 17 MB file one
-        # unsplittable task — the measured tf-stage straggler)
+        # unsplittable task — the measured tf-stage straggler).
+        # Posting dirs are not governed by this: write_postings sets
+        # its own ~64 KB row-group cap per write.
         .config("spark.hadoop.parquet.block.size", str(8 << 20))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -23,9 +23,11 @@ Output tables:
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window, functions as F
 
 from tse_spark.operators import codec
@@ -315,7 +317,9 @@ def merge_partials(partials: DataFrame, num_parts: int) -> DataFrame:
     ONE contiguous term range, so the parquet footers' term min/max
     statistics are a term dictionary: the interactive fetch
     (search.PostingFiles) reads only the row groups whose range covers
-    a query term.  The range sampler is a job over the partials, so
+    a query term, and :func:`write_postings` caps each row group at
+    ~64 KB, so that is a few row groups, not whole part files.  The
+    range sampler is a job over the partials, so
     they are persisted first — otherwise the map-side encoder runs
     twice.  Write the result with :func:`write_postings`, which frees
     them once the write is done."""
@@ -328,11 +332,57 @@ def merge_partials(partials: DataFrame, num_parts: int) -> DataFrame:
     return out
 
 
+# Posting file layout.  A row group is the smallest unit the
+# interactive fetch (search.PostingFiles) can read, so its byte cap
+# bounds what one cold term lookup decodes at any index size.  The cap
+# is a buffered-size target: the parquet writer checks it only every
+# >= 100 rows, so a row group can overshoot it.  zstd pays for the
+# extra footers and page headers the smaller row groups bring (at 5k
+# docs: 64 KB snappy row groups +5% bytes, 64 KB zstd -21%).
+POSTING_COMPRESSION = "zstd"
+POSTING_ROW_GROUP_BYTES = 64 << 10
+
+
 def write_postings(postings: DataFrame, path: str) -> None:
-    """Write a :func:`merge_partials` result as parquet, then unpersist
-    the partials its range sampler read."""
-    postings.write.mode("overwrite").parquet(path)
+    """Write a :func:`merge_partials` result as parquet in the posting
+    layout (:data:`POSTING_COMPRESSION`, row groups capped at
+    :data:`POSTING_ROW_GROUP_BYTES`), then unpersist the partials its
+    range sampler read.  Build, append deltas, compaction and both
+    merge paths write through here, so compaction rewrites a dir of an
+    older layout (one snappy row group per part file) into this one."""
+    postings.write.mode("overwrite").option(
+        "compression", POSTING_COMPRESSION
+    ).option("parquet.block.size", POSTING_ROW_GROUP_BYTES).parquet(path)
     postings._partials.unpersist()
+
+
+def part_files(path: str) -> "list[str]":
+    """The parquet part files of the dir ``path``, sorted by name
+    (``_SUCCESS`` and hidden files left out)."""
+    return sorted(
+        os.path.join(path, fn)
+        for fn in os.listdir(path)
+        if fn.endswith(".parquet") and not fn.startswith(("_", "."))
+    )
+
+
+def in_posting_layout(path: str) -> bool:
+    """Whether every column chunk of the posting dir ``path`` is in
+    :data:`POSTING_COMPRESSION`, i.e. was written by
+    :func:`write_postings` in the current layout.  Older dirs (one
+    snappy row group per part file) still serve, only slower; compaction
+    rewrites a dir for which this is False."""
+    want = POSTING_COMPRESSION.upper()
+    for f in part_files(path):
+        md = pq.read_metadata(f)
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if any(
+                rg.column(j).compression != want
+                for j in range(rg.num_columns)
+            ):
+                return False
+    return True
 
 
 def reencode_shards(

@@ -15,19 +15,20 @@ Topology (replaces reference Query.cpp:59-82's whole-index-in-RAM map):
 ``search_local`` (and its boolean / expanded twins) is the low-latency
 path for interactive serving, and it starts no Spark job.  Posting
 files are term-clustered (postings.merge_partials range-partitions by
-(term, shard)), so their parquet footers' term min/max act as the term
-dictionary: a cache miss reads, on the driver, only the row groups whose
-range covers a query term (:class:`PostingFiles`), and top-k runs
-in-process over a driver LRU — the analog of the reference's lookup from
-the term dictionary straight into the inverted file, without reloading
-the index per request.
+(term, shard)) and written in row groups capped at ~64 KB
+(postings.write_postings), so their parquet footers' term min/max act
+as the term dictionary: a cache miss reads, on the driver, only the few
+row groups whose range covers a query term (:class:`PostingFiles`),
+whatever the index size, and top-k runs in-process over a driver LRU —
+the analog of the reference's lookup from the term dictionary straight
+into the inverted file, without reloading the index per request.
 """
 
 from __future__ import annotations
 
 import bisect
+import itertools
 import math
-import os
 import time
 from collections import OrderedDict
 
@@ -39,7 +40,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tse_spark import oracle
-from tse_spark.operators import codec, wand as wand_mod
+from tse_spark.operators import codec, postings as postings_mod, wand as wand_mod
 
 RESULT_SCHEMA = "doc_id long, score double"
 
@@ -89,87 +90,114 @@ def parse_boolean_query(
     return optional, required, excluded, phrases
 
 
-def _any_between(sorted_terms: "list[str]", lo: str, hi: str) -> bool:
-    j = bisect.bisect_left(sorted_terms, lo)
-    return j < len(sorted_terms) and sorted_terms[j] <= hi
-
-
 class PostingFiles:
     """Driver-side term lookup over an index's posting parquet files:
     the interactive cold fetch, with no Spark job.
 
     Posting dirs are written term-clustered (postings.merge_partials
-    range-partitions by (term, shard)), so each row group's footer
-    term min/max is a term-dictionary entry.  The footers are read once,
-    on the first lookup; each lookup then reads only the row groups
-    whose range covers a wanted term.  A row group without statistics
-    is always read, so a dir in the old hash layout (every file spans
-    the whole vocabulary) serves the same rows, only slower."""
+    range-partitions by (term, shard)) in row groups capped at ~64 KB
+    (postings.write_postings), so each row group's footer term min/max
+    is a term-dictionary entry that points at a few dozen KB of blobs.
+    The footers are read once, on the first lookup, into one directory
+    per dir sorted by term min; a lookup bisects it for the row groups
+    whose [min, max] covers a wanted term (a term's shard rows may
+    straddle row groups and files), reads just those, and filters them
+    in one pass.  A row group without statistics is always read, so a
+    dir in the old hash layout (every file spans the whole vocabulary)
+    serves the same rows, only slower; so does a dir in the old
+    one-row-group-per-file layout, until compaction rewrites it."""
 
     COLUMNS = ["term", "shard", "df", "blocks"]
 
     def __init__(self, dirs: "list[str]"):
         self.dirs = list(dirs)
-        # [(path, footer, [(row group, term min, term max)])]
-        self._files: "list[tuple[str, pq.FileMetaData, list]] | None" = None
+        # [(path, footer)], and per dir (los, reach, ranged, always):
+        # ranged = [(term min, term max, file no, row group)] sorted by
+        # term min, reach[i] = max term max over ranged[:i + 1], always
+        # = [(file no, row group)] without statistics
+        self._files: "list[tuple[str, pq.FileMetaData]] | None" = None
+        self._index: "list[tuple[list, list, list, list]] | None" = None
 
-    def _footers(self) -> list:
+    def _directory(self) -> "tuple[list, list]":
         if self._files is None:
-            files = []
+            files, index = [], []
             for d in self.dirs:
-                for fn in sorted(os.listdir(d)):
-                    if fn.startswith(("_", ".")) or not fn.endswith(".parquet"):
-                        continue
-                    path = os.path.join(d, fn)
+                ranged, always = [], []
+                for path in postings_mod.part_files(d):
                     md = pq.read_metadata(path)
                     col = md.schema.names.index("term")
-                    groups = []
                     for i in range(md.num_row_groups):
                         rg = md.row_group(i)
                         if rg.num_rows == 0:
                             continue
                         st = rg.column(col).statistics
                         if st is not None and st.has_min_max:
-                            groups.append((i, st.min, st.max))
+                            ranged.append((st.min, st.max, len(files), i))
                         else:
-                            groups.append((i, None, None))
-                    files.append((path, md, groups))
-            self._files = files
-        return self._files
+                            always.append((len(files), i))
+                    files.append((path, md))
+                ranged.sort()
+                index.append(
+                    (
+                        [g[0] for g in ranged],
+                        list(itertools.accumulate((g[1] for g in ranged), max)),
+                        ranged,
+                        always,
+                    )
+                )
+            self._files, self._index = files, index
+        return self._files, self._index
 
-    def _read(self, terms: "list[str]", columns: "list[str]") -> list:
-        """``columns`` (which must include ``term``) of every posting
-        row of ``terms``: one table per file with a covering row group,
-        read from those row groups only."""
-        want = sorted(set(terms))
-        value_set = pa.array(want, type=pa.string())
-        out = []
-        for path, md, groups in self._footers():
-            hit = [
-                i for i, lo, hi in groups
-                if lo is None or _any_between(want, lo, hi)
-            ]
-            if not hit:
-                continue
-            with pq.ParquetFile(path, metadata=md) as f:
-                t = f.read_row_groups(hit, columns=columns, use_threads=False)
-            out.append(t.filter(pc.is_in(t["term"], value_set=value_set)))
+    def row_groups(self, terms: "list[str]") -> "dict[int, list[int]]":
+        """file number (into the directory's file list) -> the sorted
+        row groups a lookup of ``terms`` reads."""
+        _, index = self._directory()
+        hit: "set[tuple[int, int]]" = set()
+        for los, reach, ranged, always in index:
+            hit.update(always)
+            for t in terms:
+                # groups with term min <= t, walked down while some group
+                # at or below may still reach t; in a term-clustered dir
+                # that stops after the covering groups
+                i = bisect.bisect_right(los, t) - 1
+                while i >= 0 and reach[i] >= t:
+                    if ranged[i][1] >= t:
+                        hit.add(ranged[i][2:])
+                    i -= 1
+        out: "dict[int, list[int]]" = {}
+        for f, i in sorted(hit):
+            out.setdefault(f, []).append(i)
         return out
+
+    def _read(self, terms: "list[str]", columns: "list[str]") -> "list[list]":
+        """``columns`` (which must include ``term``) of every posting
+        row of ``terms``, as one Python list per column: the covering
+        row groups are read, concatenated and filtered once."""
+        want = sorted(set(terms))
+        files, _ = self._directory()
+        tables = []
+        for f, groups in self.row_groups(want).items():
+            path, md = files[f]
+            with pq.ParquetFile(path, metadata=md) as pf:
+                tables.append(
+                    pf.read_row_groups(groups, columns=columns, use_threads=False)
+                )
+        if not tables:
+            return [[] for _ in columns]
+        t = pa.concat_tables(tables)
+        t = t.filter(pc.is_in(t["term"], value_set=pa.array(want, pa.string())))
+        return [t[c].to_pylist() for c in columns]
 
     def rows(self, terms: "list[str]") -> "list[tuple[str, int, int, bytes]]":
         """(term, shard, df, blocks) of every posting row of ``terms``."""
-        out = []
-        for t in self._read(terms, self.COLUMNS):
-            out.extend(zip(*(t[c].to_pylist() for c in self.COLUMNS)))
-        return out
+        return list(zip(*self._read(terms, self.COLUMNS)))
 
     def dfs(self, terms: "list[str]") -> "dict[str, int]":
         """term -> df summed over its shard rows, for present terms;
         reads only the ``term`` and ``df`` columns, never blob bytes."""
         out: "dict[str, int]" = {}
-        for t in self._read(terms, ["term", "df"]):
-            for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
-                out[term] = out.get(term, 0) + df
+        for term, df in zip(*self._read(terms, ["term", "df"])):
+            out[term] = out.get(term, 0) + df
         return out
 
 
@@ -250,7 +278,10 @@ class SearchEngine:
         return self._tomb_bc
 
     def _log_query(self, query: str, k: int, n: int, t0: float) -> None:
-        """Append one JSONL line; ``ms`` is the wall time since ``t0``
+        """Append one JSONL line.  Every ``*_local`` call logs exactly
+        one, empty results included (``n_results: 0``): a query whose
+        terms are all absent is the log's most useful signal.  ``ms`` is
+        the wall time since ``t0``
         (``time.perf_counter()`` at the call's entry, so it covers
         analysis, every cache tier and the posting fetch)."""
         if not self.query_log_path:
@@ -672,11 +703,10 @@ class SearchEngine:
         t0 = time.perf_counter()
         plain, groups = self._expansion_buckets(query, synonyms)
         allt = sorted(set(plain) | {t for g in groups for t in g})
-        if not allt:
-            return []
         entries = self._term_entries(allt)
         present = [t for t in allt if entries[t][0] > 0]
         if not present:
+            self._log_query(query, k, 0, t0)
             return []
         decoded = self._decoded_runs(present, entries)
         pset = set(present)
@@ -699,12 +729,14 @@ class SearchEngine:
         opt, req, exc, contradiction = self._boolean_buckets(query)
         scoring = sorted(set(opt) | set(req))
         if contradiction or not scoring:
+            self._log_query(query, k, 0, t0)
             return []
         entries = self._term_entries(sorted(set(scoring) | set(exc)))
         present = {t for t, (df, _) in entries.items() if df > 0}
         if any(t not in present for t in req) or not (
             present & set(scoring)
         ):
+            self._log_query(query, k, 0, t0)
             return []
         decoded = self._decoded_runs(
             sorted(present & (set(scoring) | set(exc))), entries
@@ -821,6 +853,7 @@ class SearchEngine:
         t0 = time.perf_counter()
         terms = self.query_terms(query)
         if not terms:
+            self._log_query(query, k, 0, t0)
             return []
         rkey = None
         if self.result_cache is not None:
@@ -841,6 +874,7 @@ class SearchEngine:
         if not idf or (conjunctive and len(idf) < len(terms)):
             if rkey is not None:  # negative results are snapshot-stable
                 self.result_cache.put(rkey, [])
+            self._log_query(query, k, 0, t0)
             return []
         present = sorted(idf)
         decoded = self._decoded_runs(present, entries)

@@ -62,7 +62,9 @@ def compact_index(
 ) -> "pl.IndexHandle":
     """Merge all append deltas back into single base dirs; see module
     docstring for the contract.  No-op (returns a fresh handle) when
-    the index has no deltas and no tombstones."""
+    the index has no deltas, no tombstones and its posting dir is in
+    the current layout (postings.in_posting_layout): a dir of the older
+    layout is rewritten, so compaction also upgrades it."""
     meta_path = os.path.join(out_dir, "meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
@@ -71,7 +73,12 @@ def compact_index(
     postings_dirs = meta.get("postings_dirs", ["postings"])
     avgdl = float(meta["avgdl"])
     tomb_dir = meta.get("tombstones_dir")
-    if len(docs_dirs) == 1 and len(postings_dirs) == 1 and not tomb_dir:
+    steady = (
+        len(docs_dirs) == 1
+        and len(postings_dirs) == 1
+        and po.in_posting_layout(os.path.join(out_dir, postings_dirs[0]))
+    )
+    if steady and not tomb_dir:
         return pl.load_index(spark, out_dir, dictionary)
 
     # fold tombstones physically (plans/delete.py step 3): postings
@@ -103,7 +110,7 @@ def compact_index(
             tomb_arr = None
             meta.pop("tombstones_dir", None)
             meta.pop("n_tombstones", None)
-            if len(docs_dirs) == 1 and len(postings_dirs) == 1:
+            if steady:
                 # otherwise steady-state: a meta-only commit clears the
                 # key without rewriting anything
                 from tse_spark.plans import snapshots as sn

@@ -20,6 +20,7 @@ import json
 import os
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tse_spark.operators import codec
@@ -505,15 +506,19 @@ def index_report(spark: SparkSession, out_dir: str) -> DataFrame:
     partition by partition, and what is on disk now".
 
     Columns: (kind, name, fingerprint, rows, seconds, resumed,
-    n_partitions, files, bytes).  Manifest rows carry the build-time
-    metrics (per-partition row counts summarized as n_partitions; the
-    raw map lives in _manifest.json); meta rows carry the current
-    on-disk footprint of every directory the published meta.json
-    references — after appends the delta dirs each get a row, so
-    growth and compaction debt are visible at a glance.
+    n_partitions, files, bytes, row_groups).  Manifest rows carry the
+    build-time metrics (per-partition row counts summarized as
+    n_partitions; the raw map lives in _manifest.json); meta rows carry
+    the current on-disk footprint of every directory the published
+    meta.json references — after appends the delta dirs each get a
+    row, so growth and compaction debt are visible at a glance.
+    ``row_groups`` (dir rows only, from the parquet footers) shows the
+    posting layout: a posting dir with one row group per file is in the
+    layout written before postings.write_postings capped row groups,
+    and serves cold lookups slower until compaction rewrites it.
 
-    Pure metadata: reads two small json files and stats local files;
-    no Spark job over the corpus.  At web scale the same listing runs
+    Pure metadata: reads two small json files, stats local files and
+    reads their parquet footers; no Spark job over the corpus.  At web scale the same listing runs
     against the table's file index (manifests), never the data."""
     rows: list[tuple] = []
     man = cp.Manifest(out_dir)
@@ -528,6 +533,7 @@ def index_report(spark: SparkSession, out_dir: str) -> DataFrame:
                 st.get("seconds"),
                 bool(st.get("resumed")),
                 len(parts) or None,
+                None,
                 None,
                 None,
             )
@@ -562,11 +568,12 @@ def index_report(spark: SparkSession, out_dir: str) -> DataFrame:
                     None,
                     len(files),
                     sum(os.path.getsize(f) for f in files),
+                    sum(pq.read_metadata(f).num_row_groups for f in files),
                 )
             )
     return spark.createDataFrame(
         rows,
         "kind string, name string, fingerprint string, rows long, "
         "seconds double, resumed boolean, n_partitions long, "
-        "files long, bytes long",
+        "files long, bytes long, row_groups long",
     )
